@@ -2132,14 +2132,13 @@ object Dedup {
     // used to run strictly sequentially — overlap them so the probe prep
     // rides the standing fit's idle capacity (guide §2.6; bounded pool,
     // Overlap.scala)
-    val r = Overlap.all(Seq[() => Any](
-      () => sharedPriorClusters(spark, sfDir),
-      () => minhashBands(priorDocs),
-      () => (shingleSets(newDocs).localCheckpoint(), minhashBands(newDocs))))
-    val (newSets, newBands) = r(2).asInstanceOf[(DataFrame, DataFrame)]
-    incrementalClusters(newDocs, priorDocs, r(0).asInstanceOf[DataFrame],
+    val (prior, priorBands, (newSets, newBands)) = Overlap.all3(
+      sharedPriorClusters(spark, sfDir),
+      minhashBands(priorDocs),
+      (shingleSets(newDocs).localCheckpoint(), minhashBands(newDocs)))
+    incrementalClusters(newDocs, priorDocs, prior,
       newSetsIn = Some(newSets), newBandsIn = Some(newBands),
-      priorBandsIn = Some(r(1).asInstanceOf[DataFrame]))
+      priorBandsIn = Some(priorBands))
   }
 
   val dedupClustersIncrementalSql: String =

@@ -897,9 +897,10 @@ object Multimodal {
     * so the streaming replay starts as soon as the per-batch state is
     * ready and the drain-only fit builds while the stream runs (guide
     * §2.6). Same memo keys, same frames; only the join point moves.
+    * The caller joins or cancels the returned handle.
     */
   private[graft] def sharedStandingStateAsync(spark: SparkSession,
-      sfDir: String): (DataFrame, DataFrame, () => DataFrame) = {
+      sfDir: String): (DataFrame, DataFrame, Overlap.Handle[DataFrame]) = {
     val docs = Tables.documents(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
     val standing = docs.filter(!(col("doc_id") % 10 >= ARRIVAL_DECILE))
@@ -918,7 +919,7 @@ object Multimodal {
           standingFeedStats(standing, emb)
         }.localCheckpoint()
       }), cap = 1)
-    val r = Overlap.all(Seq(
+    val r = try Overlap.all(Seq(
       () => SharedFits.memo(spark, s"mm_checksum_idx:$sfDir") {
         FitStore.frame(spark, s"mm_checksum_idx_d$ARRIVAL_DECILE", fp) {
           standingChecksumIdx(standing)
@@ -929,6 +930,7 @@ object Multimodal {
           signatureBands(sliceFrames(standing))
         }.localCheckpoint()
       }))
+    catch { case e: Throwable => late(0).cancel(); throw e }
     (r(0), r(1), late(0))
   }
 

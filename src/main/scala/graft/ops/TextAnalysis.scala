@@ -2712,17 +2712,14 @@ object TextAnalysis {
     // overlap the two chains so the probe prep rides the standing fit's
     // idle capacity (guide §2.6; bounded pool, Overlap.scala)
     val isBenchA = col("doc_id") % lit(DECONTAM_MOD) === 0
-    val r = Overlap.all(Seq[() => Any](
-      () => sharedCaState(spark, sfDir),
-      () => {
+    val ((benchH, fpIdx, sets, postings, docStats), (aSets, abench)) = Overlap.all2(
+      sharedCaState(spark, sfDir),
+      {
         val aSets = caShingleSets(arrivals).localCheckpoint()
         val abench = aSets.filter(isBenchA)
           .select(explode(col("shs")).as("h")).distinct().localCheckpoint()
         (aSets, abench)
-      }))
-    val (benchH, fpIdx, sets, postings, docStats) =
-      r(0).asInstanceOf[(DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)]
-    val (aSets, abench) = r(1).asInstanceOf[(DataFrame, DataFrame)]
+      })
     rejectionsIncremental(arrivals, benchH, fpIdx, postings, sets, docStats,
       aSetsIn = Some(aSets), abenchIn = Some(abench))
   }
@@ -2745,10 +2742,11 @@ object TextAnalysis {
     * build — the streaming replay starts its stream as soon as the
     * per-batch state is ready and the drain-only fits build while the
     * stream runs (guide §2.6). Same memo keys, same frames; only the
-    * join point moves.
+    * join point moves. The caller joins or cancels the two handles.
     */
   private[graft] def sharedCaStateAsync(spark: SparkSession, sfDir: String)
-      : (DataFrame, DataFrame, DataFrame, () => DataFrame, () => DataFrame) = {
+      : (DataFrame, DataFrame, DataFrame, Overlap.Handle[DataFrame],
+         Overlap.Handle[DataFrame]) = {
     val docs = Tables.documents(spark, sfDir)
     val t = caThreshold(docs)
     val standing = docs.filter(col("doc_id") < t)
@@ -2779,13 +2777,14 @@ object TextAnalysis {
           .select(explode(col("shs")).as("h")).distinct()
       },
       () => kept("ca_doc_stats_t80") { caDocStats(standing, sets) }), cap = 2)
-    val r = Overlap.all(Seq(
+    val r = try Overlap.all(Seq(
       () => kept("ca_fp_idx_t80") {
         standing.select(Dedup.exactFp(col("text")).as("fp")).distinct()
       },
       () => kept("ca_postings_t80") {
         sets.select(col("doc_id"), explode(col("shs")).as("h"))
       }))
+    catch { case e: Throwable => late.foreach(_.cancel()); throw e }
     (sets, r(0), r(1), late(0), late(1))
   }
 

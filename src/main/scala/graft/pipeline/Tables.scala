@@ -284,9 +284,6 @@ object Tables {
     docs.select(col("doc_id"), posexplode(split(col("text"), "\\s+")))
       .select(col("doc_id"), (col("pos") + 1).as("i"), col("col").as("tok"))
 
-  def docTokens(spark: SparkSession, sfDir: String): DataFrame =
-    tokens(documents(spark, sfDir))
-
   val TOK_CTE: String =
     """tok AS (
       |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok,
@@ -308,9 +305,6 @@ object Tables {
           |  i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))"""
           .stripMargin)).as("shingle"))
       .distinct()
-
-  def docShingles(spark: SparkSession, sfDir: String): DataFrame =
-    shingles(documents(spark, sfDir))
 
   val SHINGLE_CTE: String =
     """sh AS (

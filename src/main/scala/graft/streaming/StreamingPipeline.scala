@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.pipeline.{ReferencePipeline, Tables}
 
 /** The reference cron job is batch-incremental with a manual watermark —
-  * exactly the shape of Structured Streaming with `Trigger.AvailableNow`
+  * exactly the shape of Structured Streaming with an AvailableNow trigger
   * (SURVEY.md §2.10). This module is the streaming expression of the same
   * operators, so the engine covers both deployment modes:
   *
@@ -133,29 +133,14 @@ object StreamingPipeline {
     * from the read-back's narrow inference to the view's BIGINT).
     */
   def dailyVolumeReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("daily_volume_replay")
-    val out = s"$tmp/daily"
-    val key = Seq("day", "chain")
-    withStatePartitions(spark, 8) {
-      val q = dailyVolume(Tables.txFrom(Tables.eventsStream(spark, sfDir)))
-        .select(col("day").cast("date").cast("string").as("day"), col("chain"),
-          col("n_tx"), col("total_stake"))
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Update.toString)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          mergeByKeyPartitioned(batch, out, key, "chain")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainOr(spark, out, emptyFrame(spark,
-        "day" -> org.apache.spark.sql.types.StringType, "chain" -> org.apache.spark.sql.types.LongType,
-        "n_tx" -> org.apache.spark.sql.types.LongType, "total_stake" -> org.apache.spark.sql.types.DoubleType))
-      .select(col("day"), col("chain").cast("long").as("chain"), col("n_tx"),
-        round(col("total_stake"), 4).as("total_stake"))
+      sfDir: String): DataFrame = Replay(spark, "daily_volume_replay") { r =>
+    val stream = dailyVolume(Tables.txFrom(Tables.eventsStream(spark, sfDir)))
+      .select(col("day").cast("date").cast("string").as("day"), col("chain"),
+        col("n_tx"), col("total_stake"))
+    r.eachBatch(stream, OutputMode.Update(), stream) { (batch, _) =>
+      mergeByKeyPartitioned(batch, r.out, Seq("day", "chain"), "chain")
+    }.select(col("day"), col("chain").cast("long").as("chain"), col("n_tx"),
+      round(col("total_stake"), 4).as("total_stake"))
   }
 
   /** MERGE an update-mode micro-batch into a keyed parquet sink:
@@ -398,32 +383,19 @@ object StreamingPipeline {
     * whole standing group table.
     */
   def dedupGroupsReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "dedup_groups_replay") { r =>
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("dedup_groups_replay")
-    val out = s"$tmp/groups"
-    withStatePartitions(spark, 8) {
-      val arrivals = Tables.documentsStream(spark, sfDir)
-        .select(col("doc_id"),
-          timestamp_seconds(lit(1700000000L) + col("doc_id")).as("ts"),
-          graft.ops.Dedup.exactFp(col("text")).as("fp"))
-        .as[DocArrival]
-      val q = dedupGroupsStream(arrivals).toDF()
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Update.toString)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          mergeByKeyPartitioned(
-            batch.withColumn("fp_p", substring(col("fp"), 1, 1)),
-            out, Seq("fp"), "fp_p")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainOr(spark, out, emptyFrame(spark, "fp" -> org.apache.spark.sql.types.StringType,
-        "keep_id" -> org.apache.spark.sql.types.LongType, "dup_count" -> org.apache.spark.sql.types.LongType))
-      .select(col("fp"), col("keep_id"), col("dup_count"))
+    val arrivals = Tables.documentsStream(spark, sfDir)
+      .select(col("doc_id"),
+        timestamp_seconds(lit(1700000000L) + col("doc_id")).as("ts"),
+        graft.ops.Dedup.exactFp(col("text")).as("fp"))
+      .as[DocArrival]
+    val stream = dedupGroupsStream(arrivals).toDF()
+    r.eachBatch(stream, OutputMode.Update(), stream) { (batch, _) =>
+      mergeByKeyPartitioned(
+        batch.withColumn("fp_p", substring(col("fp"), 1, 1)),
+        r.out, Seq("fp"), "fp_p")
+    }.select(col("fp"), col("keep_id"), col("dup_count"))
   }
 
   case class BandRow(doc_id: Long, ts: Timestamp, band_no: Int, bucket: String)
@@ -508,30 +480,17 @@ object StreamingPipeline {
     * a driver-side scalar, same cost class as the watermark singleton.
     */
   def nearDupReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("near_dup_replay")
-    val out = s"$tmp/cands"
+      sfDir: String): DataFrame = Replay(spark, "near_dup_replay") { r =>
     val horizonRow = Tables.documents(spark, sfDir)
       .agg(max(col("doc_id"))).head()
     require(!horizonRow.isNullAt(0),
       s"nearDupReplay: documents table at $sfDir is empty — no replay horizon")
     val horizonSec = horizonRow.getLong(0) + 86400L
-    withStatePartitions(spark, 8) {
-      val docs = Tables.documentsStream(spark, sfDir)
-        .select(col("doc_id"),
-          timestamp_seconds(lit(1700000000L) + col("doc_id")).as("ts"),
-          col("text"))
-      val q = nearDupStream(docs, "ts", lateness = s"$horizonSec seconds").toDF()
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Append.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainOr(spark, out, emptyFrame(spark, "d1" -> org.apache.spark.sql.types.LongType,
-        "d2" -> org.apache.spark.sql.types.LongType, "band_no" -> org.apache.spark.sql.types.IntegerType))
+    val docs = Tables.documentsStream(spark, sfDir)
+      .select(col("doc_id"),
+        timestamp_seconds(lit(1700000000L) + col("doc_id")).as("ts"),
+        col("text"))
+    r.files(nearDupStream(docs, "ts", lateness = s"$horizonSec seconds").toDF())
       .groupBy(col("d1"), col("d2"))
       .agg(count(lit(1)).as("n_bands"))
   }
@@ -633,22 +592,10 @@ object StreamingPipeline {
     * ingest path and the batch index build landing on the same index.
     */
   def ivfAssignReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("ivf_assign_replay")
-    val out = s"$tmp/cells"
+      sfDir: String): DataFrame = Replay(spark, "ivf_assign_replay") { r =>
     val assign = graft.ops.Similarity.sharedCellAssigner(spark, sfDir)
-    val q = ivfAssignStreamWith(Tables.embeddingsStream(spark, sfDir), assign)
-      .select(col("vec_id"), col("cell"))
-      .writeStream.format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .outputMode(OutputMode.Append.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    drainOr(spark, out,
-      ivfAssignStreamWith(Tables.embeddings(spark, sfDir).limit(0), assign)
-        .select(col("vec_id"), col("cell")))
+    r.files(ivfAssignStreamWith(Tables.embeddingsStream(spark, sfDir), assign)
+      .select(col("vec_id"), col("cell")))
   }
 
   /** The ORACLE-GATED streaming GRAPH-INSERT twin — the vector-index
@@ -667,60 +614,80 @@ object StreamingPipeline {
     * the index, not the stream).
     */
   def graphInsertReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "graph_insert_replay") { r =>
+    import graft.ops.Similarity
     graft.functions.VectorFunctions.register(spark)
-    val tmp = java.nio.file.Files.createTempDirectory("graph_insert_replay")
-    val out = s"$tmp/links"
     val emb = Tables.embeddings(spark, sfDir)
     // two independent stream-build chains (guide §2.6): the standing
     // even-half NND fit, and the pinned base → bit geometry → standing
     // bucket table chain (the bucket explode hides under the NND loop)
-    val r = graft.ops.Overlap.all(Seq[() => Any](
-      () => graft.ops.Similarity.graphIndex(spark, sfDir, half = Some(0)),
-      () => {
-        val base = graft.ops.Similarity.withNorm(emb).localCheckpoint()
+    val (edges, (base, baseBits, standingBuckets)) = graft.ops.Overlap.all2(
+      Similarity.graphIndex(spark, sfDir, half = Some(0)),
+      {
+        val base = Similarity.withNorm(emb).localCheckpoint()
         // the seed-bucket bit geometry depends only on the pinned base —
         // one count at stream build, not one count JOB per micro-batch
         val baseBits = graft.ops.Dedup.hypBitsFor(base.count())
         // likewise the WHOLE standing-side bucket table: the base cannot
         // change mid-stream, so the corpus explode is stream-build work,
         // not per-trigger work (round-15 verdict ask #4)
-        val standingBuckets = graft.ops.Similarity.seedNodeBuckets(
+        val standingBuckets = Similarity.seedNodeBuckets(
           base, baseBits, isNode = col("vec_id") % 2 === 0).localCheckpoint()
         (base, baseBits, standingBuckets)
-      }))
-    val edges = r(0).asInstanceOf[DataFrame]
-    val (base, baseBits, standingBuckets) =
-      r(1).asInstanceOf[(DataFrame, Int, DataFrame)]
-    val q = Tables.embeddingsStream(spark, sfDir)
-      .filter(col("vec_id") % 2 === 1)
-      .select(col("vec_id"))
-      .writeStream
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .outputMode(OutputMode.Append.toString)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val ids = batch.select(col("vec_id")).localCheckpoint()
-        val visited = graft.ops.Similarity.beamTraverseFor(
-          edges, base, ids, graft.ops.Similarity.GRAPH_BEAM,
+      })
+    def links(ids: DataFrame): DataFrame =
+      Similarity.graphTopkFrom(Similarity.beamTraverseFor(
+          edges, base, ids, Similarity.GRAPH_BEAM,
           isNode = col("vec_id") % 2 === 0,
           bitsHint = Some(baseBits),
-          nodeBuckets = Some(standingBuckets))
-        // idempotent under at-least-once retries: each micro-batch owns a
-        // batchId-derived directory and OVERWRITES it, so a replayed batch
-        // rewrites its own rows instead of appending them twice (a plain
-        // mode("append") here would diverge from the batch oracle on any
-        // retry — every other replay uses the _spark_metadata file sink or
-        // a keyed merge for the same guarantee)
-        graft.ops.Similarity.graphTopkFrom(visited)
-          .select(col("q_id").as("new_id"), col("n_id"), col("cosine"), col("rnk"))
-          .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    drainOr(spark, out, emptyFrame(spark, "new_id" -> org.apache.spark.sql.types.LongType,
-      "n_id" -> org.apache.spark.sql.types.LongType, "cosine" -> org.apache.spark.sql.types.DoubleType,
-      "rnk" -> org.apache.spark.sql.types.IntegerType)).drop("batch")
+          nodeBuckets = Some(standingBuckets)))
+        .select(col("q_id").as("new_id"), col("n_id"), col("cosine"), col("rnk"))
+    val stream = Tables.embeddingsStream(spark, sfDir)
+      .filter(col("vec_id") % 2 === 1)
+      .select(col("vec_id"))
+    r.eachBatch(stream, OutputMode.Append(), links(emb.select(col("vec_id")).limit(0))) {
+      (batch, batchId) =>
+        links(batch.select(col("vec_id")).localCheckpoint())
+          .write.mode("overwrite").parquet(r.batchDir(batchId))
+    }
+  }
+
+  /** Shared frozen-cap ER replay body (round 15, verdict ask #5 — the
+    * ~25 lines [[erLinkageReplay]]/[[erGoldenReplay]] duplicated,
+    * factored): odd-id documents replay through the file stream, each
+    * micro-batch's kept records probe the STANDING record view ∪ the
+    * accumulated earlier arrivals under the FROZEN-cap admission policy,
+    * and the batch-decomposition-invariant pair emissions land in the
+    * idempotent batchId-keyed sink. Cross-batch state is the arrival
+    * record index, advanced per-batch-DELTA (see [[DeltaIndex]] — the
+    * probe reads the whole index, the checkpoint writes only the batch).
+    * The two twins differ only in the drain finish; this returns what
+    * both need: (drained pairs, standing docs, kept standing records).
+    */
+  private def erFrozenReplay(r: Replay, spark: org.apache.spark.sql.SparkSession,
+      sfDir: String): (DataFrame, DataFrame, DataFrame) = {
+    import graft.ops.EntityResolution
+    val standing = Tables.documents(spark, sfDir)
+      .filter(col("doc_id") % 2 === 0)
+    val rejected = EntityResolution.frozenRejectedBlocks(standing)
+      .localCheckpoint()
+    val rsKept = EntityResolution.keptFrozen(standing, rejected)
+      .localCheckpoint()
+    val seenKept = new DeltaIndex(
+      EntityResolution.keptFrozen(standing.limit(0), rejected)
+        .localCheckpoint())
+    val stream = Tables.documentsStream(spark, sfDir)
+      .filter(col("doc_id") % 2 === 1)
+    val pairs = r.eachBatch(stream, OutputMode.Append(),
+        EntityResolution.erStreamProbe(rsKept.limit(0), rsKept.limit(0))) {
+      (batch, batchId) =>
+        val rb = EntityResolution.keptFrozen(batch, rejected)
+          .localCheckpoint()
+        EntityResolution.erStreamProbe(rb, rsKept.unionByName(seenKept.view))
+          .write.mode("overwrite").parquet(r.batchDir(batchId))
+        seenKept += rb
+    }
+    (pairs, standing, rsKept)
   }
 
   /** The ORACLE-GATED streaming ENTITY-LINKAGE twin — record linkage as
@@ -744,58 +711,9 @@ object StreamingPipeline {
     * (standing_b + seen_b) — the batch probes indexes, never history
     * rescans.
     */
-  /** Shared frozen-cap ER replay body (round 15, verdict ask #5 — the
-    * ~25 lines [[erLinkageReplay]]/[[erGoldenReplay]] duplicated,
-    * factored): odd-id documents replay through the file stream, each
-    * micro-batch's kept records probe the STANDING record view ∪ the
-    * accumulated earlier arrivals under the FROZEN-cap admission policy,
-    * and the batch-decomposition-invariant pair emissions land in the
-    * idempotent batchId-keyed sink. Cross-batch state is the arrival
-    * record index, advanced per-batch-DELTA (see [[DeltaIndex]] — the
-    * probe reads the whole index, the checkpoint writes only the batch).
-    * The two twins differ only in the drain finish; this returns what
-    * both need: (sink dir, standing docs, kept standing records).
-    */
-  private def erFrozenReplayBody(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, tag: String): (String, DataFrame, DataFrame) = {
-    import graft.ops.EntityResolution
-    val tmp = java.nio.file.Files.createTempDirectory(tag)
-    val out = s"$tmp/pairs"
-    val standing = Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 2 === 0)
-    val rejected = EntityResolution.frozenRejectedBlocks(standing)
-      .localCheckpoint()
-    val rsKept = EntityResolution.keptFrozen(standing, rejected)
-      .localCheckpoint()
-    val seenKept = new DeltaIndex(
-      EntityResolution.keptFrozen(standing.limit(0), rejected)
-        .localCheckpoint())
-    val q = Tables.documentsStream(spark, sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .writeStream
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .outputMode(OutputMode.Append.toString)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val rb = EntityResolution.keptFrozen(batch.toDF(), rejected)
-          .localCheckpoint()
-        EntityResolution.erStreamProbe(rb, rsKept.unionByName(seenKept.view))
-          .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-        seenKept += rb
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    (out, standing, rsKept)
-  }
-
   def erLinkageReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
-    import graft.ops.EntityResolution
-    val (out, _, rsKept) = erFrozenReplayBody(spark, sfDir, "er_linkage_replay")
-    drainOr(spark, out,
-      EntityResolution.erStreamProbe(rsKept.limit(0), rsKept.limit(0)))
-      .drop("batch")
-  }
+      sfDir: String): DataFrame =
+    Replay(spark, "er_linkage_replay")(erFrozenReplay(_, spark, sfDir)._1)
 
   /** The ORACLE-GATED streaming GOLDEN-RECORD twin — survivorship
     * maintained as mentions stream in, the audit-cadence completion of
@@ -821,51 +739,13 @@ object StreamingPipeline {
     // independent of the whole frozen-cap replay — build it while the
     // stream drains instead of serializing it behind the drain
     // (guide §2.6; bounded pool, Overlap.scala)
-    val r = graft.ops.Overlap.all(Seq[() => Any](
-      () => {
-        val (out, standing, rsKept) =
-          erFrozenReplayBody(spark, sfDir, "er_golden_replay")
-        val drained = drainDeltas(spark, out) {
-          EntityResolution.erStreamProbe(rsKept.limit(0), rsKept.limit(0))
-        }.select(col("a_id"), col("b_id")).localCheckpoint()
-        (standing, drained)
+    val ((standing, drained), assignSt) = graft.ops.Overlap.all2(
+      Replay(spark, "er_golden_replay") { r =>
+        val (pairs, standing, _) = erFrozenReplay(r, spark, sfDir)
+        (standing, pairs.select(col("a_id"), col("b_id")).localCheckpoint())
       },
-      () => EntityResolution.sharedStandingAssignment(spark, sfDir)))
-    val (standing, drained) =
-      r(0).asInstanceOf[(DataFrame, DataFrame)]
-    EntityResolution.erGoldenFinish(standing, arrivals,
-      r(1).asInstanceOf[DataFrame], drained)
-  }
-
-  /** The ORACLE-GATED streaming TRIANGLE-STATS twin — completing the
-    * graph family's deployment-mode coverage (batch → incremental →
-    * streaming): odd-id vectors arrive as micro-batches, each batch OWNS
-    * the edges whose last-arriving endpoint it holds
-    * ([[graft.ops.Graph.batchEdges]] — ownership partitions the arrival
-    * edge set under ANY batching), and emits its per-node (degree delta,
-    * triangle memberships) via the shared first-arrival-edge enumeration
-    * ([[graft.ops.Graph.triStreamEmit]]) against the accumulated so-far
-    * graph. A triangle is therefore counted by exactly one batch — the
-    * one holding its last edge — and the drained sink merges ADDITIVELY
-    * with the standing stats to the full cold table
-    * ([[graft.ops.Graph.triStreamMerge]]; oracle = the cold triangle SQL
-    * verbatim). Cross-batch state is the accumulated arrival edge frame
-    * (the standing index's append side, as in [[erLinkageReplay]]); the
-    * sink is the idempotent batchId-keyed overwrite.
-    */
-  /** Drain-read guard (round-14 advice): a replay whose stream source
-    * matches ZERO rows fires no micro-batch, so the batchId-keyed sink
-    * dir holds no part files and `spark.read.parquet` dies on schema
-    * inference. Returns the drained delta frame, or the caller-supplied
-    * empty frame (the delta schema at zero rows — a lazy plan, never
-    * executed unless needed) when nothing fired.
-    */
-  private def drainDeltas(spark: org.apache.spark.sql.SparkSession,
-      out: String)(empty: => DataFrame): DataFrame = {
-    val d = new java.io.File(out)
-    val fired = d.exists &&
-      Option(d.listFiles).exists(_.exists(_.getName.startsWith("batch=")))
-    if (fired) spark.read.parquet(out).drop("batch") else empty
+      EntityResolution.sharedStandingAssignment(spark, sfDir))
+    EntityResolution.erGoldenFinish(standing, arrivals, assignSt, drained)
   }
 
   /** Accumulated-arrival index with LOG-STRUCTURED delta checkpointing
@@ -922,93 +802,48 @@ object StreamingPipeline {
     }
   }
 
-  /** [[drainDeltas]]' sibling for keyed-MERGE sinks ([[mergeByKey]]
-    * writes a plain parquet dir, not batchId subdirs): a stream whose
-    * source matched zero rows never calls mergeByKey, so the dir does
-    * not exist and schema inference would fail at drain.
-    */
-  private def drainMerged(spark: org.apache.spark.sql.SparkSession,
-      out: String)(empty: => DataFrame): DataFrame =
-    if (new java.io.File(out).exists) spark.read.parquet(out) else empty
 
-  /** The generic zero-micro-batch drain guard (round-14 self-review:
-    * applied to EVERY replay's sink read, not just the newest twins).
-    * A stream that matched zero rows commits no batch, so the sink dir
-    * holds no part files (file sinks create no `_spark_metadata`,
-    * foreachBatch sinks never write) and `spark.read.parquet` dies on
-    * schema inference. `schemaOf` is the frame WRITTEN to the sink —
-    * its schema is static even on a streaming frame, so the fallback is
-    * an empty batch frame of exactly the drained shape. By-name
-    * (round-15 advice, matching [[drainDeltas]]' contract): the
-    * fallback plan — for the rejections/assembly twins a nontrivial
-    * construction — is never even BUILT unless the sink is empty, and
-    * a future fallback containing an eager action can't silently run
-    * on every drain.
+  /** The ORACLE-GATED streaming TRIANGLE-STATS twin — completing the
+    * graph family's deployment-mode coverage (batch → incremental →
+    * streaming): odd-id vectors arrive as micro-batches, each batch OWNS
+    * the edges whose last-arriving endpoint it holds
+    * ([[graft.ops.Graph.batchEdges]] — ownership partitions the arrival
+    * edge set under ANY batching), and emits its per-node (degree delta,
+    * triangle memberships) via the shared first-arrival-edge enumeration
+    * ([[graft.ops.Graph.triStreamEmit]]) against the accumulated so-far
+    * graph. A triangle is therefore counted by exactly one batch — the
+    * one holding its last edge — and the drained sink merges ADDITIVELY
+    * with the standing stats to the full cold table
+    * ([[graft.ops.Graph.triStreamMerge]]; oracle = the cold triangle SQL
+    * verbatim). Cross-batch state is the accumulated arrival edge frame
+    * (the standing index's append side, as in [[erLinkageReplay]]); the
+    * sink is the idempotent batchId-keyed overwrite.
     */
-  private def drainOr(spark: org.apache.spark.sql.SparkSession,
-      out: String, schemaOf: => DataFrame): DataFrame = {
-    val d = new java.io.File(out)
-    // data = an actual part file ANYWHERE under the sink (flat sinks,
-    // batchId subdirs, AND Hive-partitioned MERGE sinks like chain=…/ —
-    // a top-level-only scan misses the last kind); a bare
-    // `_spark_metadata` dir with zero committed files still fails
-    // schema inference, so metadata alone does NOT count
-    val hasData = d.exists && {
-      val st = java.nio.file.Files.walk(d.toPath)
-      try st.anyMatch(f => f.toString.endsWith(".parquet"))
-      finally st.close()
-    }
-    if (hasData) spark.read.parquet(out)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf.schema)
-  }
-
-  /** Column-typed empty frame for [[drainOr]] fallbacks where the sink
-    * schema is stated inline rather than derivable from an in-scope
-    * transformation.
-    */
-  private def emptyFrame(spark: org.apache.spark.sql.SparkSession,
-      cols: (String, org.apache.spark.sql.types.DataType)*): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(cols.map { case (n, t) =>
-        org.apache.spark.sql.types.StructField(n, t)
-      }))
-
   def graphTriStatsReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "graph_tri_replay") { r =>
     import graft.ops.Graph
-    val tmp = java.nio.file.Files.createTempDirectory("graph_tri_replay")
-    val out = s"$tmp/stats"
     val und = Graph.sharedUnd(spark, sfDir)
     val undS = und.filter(col("u") % 2 === 0 && col("v") % 2 === 0)
-    // the standing triangle stats are read only at DRAIN — build them
-    // while the stream runs (guide §2.6, join handle)
-    val statsStJ = graft.ops.Overlap.begin(Seq(
-      () => Graph.sharedStandingTriStats(spark, sfDir, undS)), cap = 1)(0)
     val seenEdges = new DeltaIndex(undS.localCheckpoint())
     val arrived = new DeltaIndex(
       und.select(col("u").as("id")).limit(0).localCheckpoint())
-    val q = Tables.embeddingsStream(spark, sfDir)
+    val stream = Tables.embeddingsStream(spark, sfDir)
       .filter(col("vec_id") % 2 === 1)
       .select(col("vec_id").as("id"))
-      .writeStream
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .outputMode(OutputMode.Append.toString)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val nb = batch.toDF().localCheckpoint()
+    // the standing triangle stats are read only at DRAIN — they build
+    // while the stream runs (guide §2.6, join handle)
+    val (emitted, statsSt) = r.eachBatchWith(stream, OutputMode.Append(),
+        Graph.triStreamEmit(undS.limit(0), undS.limit(0)),
+        graft.ops.Overlap.start(Graph.sharedStandingTriStats(spark, sfDir, undS))) {
+      (batch, batchId) =>
+        val nb = batch.localCheckpoint()
         val aB = Graph.batchEdges(und, nb, arrived.view).localCheckpoint()
         Graph.triStreamEmit(seenEdges.view, aB)
-          .write.mode("overwrite").parquet(s"$out/batch=$batchId")
+          .write.mode("overwrite").parquet(r.batchDir(batchId))
         seenEdges += aB
         arrived += nb
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Graph.triStreamMerge(statsStJ(), drainDeltas(spark, out) {
-      Graph.triStreamEmit(undS.limit(0), undS.limit(0))
-    })
+    }
+    Graph.triStreamMerge(statsSt, emitted)
   }
 
   /** The ORACLE-GATED streaming LINK-PREDICTION twin — missing-link
@@ -1028,40 +863,30 @@ object StreamingPipeline {
     * the cold `graphLinkPredictSql` verbatim.
     */
   def graphLinkReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "graph_link_replay") { r =>
     import graft.ops.Graph
-    val tmp = java.nio.file.Files.createTempDirectory("graph_link_replay")
-    val out = s"$tmp/deltas"
     val und = Graph.sharedUnd(spark, sfDir)
     val undS = und.filter(col("u") % 2 === 0 && col("v") % 2 === 0)
-    // the standing link scores are read only at DRAIN — build them
-    // while the stream runs (guide §2.6, join handle)
-    val scoredSJ = graft.ops.Overlap.begin(Seq(
-      () => Graph.sharedStandingLinkScores(spark, sfDir, undS)), cap = 1)(0)
     val seenEdges = new DeltaIndex(undS.localCheckpoint())
     val arrived = new DeltaIndex(
       und.select(col("u").as("id")).limit(0).localCheckpoint())
-    val q = Tables.embeddingsStream(spark, sfDir)
+    val stream = Tables.embeddingsStream(spark, sfDir)
       .filter(col("vec_id") % 2 === 1)
       .select(col("vec_id").as("id"))
-      .writeStream
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .outputMode(OutputMode.Append.toString)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val nb = batch.toDF().localCheckpoint()
+    // the standing link scores are read only at DRAIN — they build
+    // while the stream runs (guide §2.6, join handle)
+    val (deltas, scoredS) = r.eachBatchWith(stream, OutputMode.Append(),
+        Graph.linkDeltas(undS.limit(0), undS.limit(0)),
+        graft.ops.Overlap.start(Graph.sharedStandingLinkScores(spark, sfDir, undS))) {
+      (batch, batchId) =>
+        val nb = batch.localCheckpoint()
         val aB = Graph.batchEdges(und, nb, arrived.view).localCheckpoint()
         Graph.linkDeltas(aB, seenEdges.view)
-          .write.mode("overwrite").parquet(s"$out/batch=$batchId")
+          .write.mode("overwrite").parquet(r.batchDir(batchId))
         seenEdges += aB
         arrived += nb
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Graph.linkFinish(
-      Graph.linkMerge(scoredSJ(), drainDeltas(spark, out) {
-        Graph.linkDeltas(undS.limit(0), undS.limit(0))
-      }), und)
+    }
+    Graph.linkFinish(Graph.linkMerge(scoredS, deltas), und)
   }
 
   /** The ORACLE-GATED streaming MULTIMODAL-ASSEMBLY twin — the media
@@ -1084,44 +909,36 @@ object StreamingPipeline {
     * cross-batch state is the arrival checksum/band append side.
     */
   def multimodalAssemblyReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "mm_assembly_replay") { r =>
     import graft.ops.Multimodal
-    val tmp = java.nio.file.Files.createTempDirectory("mm_assembly_replay")
-    val out = s"$tmp/flags"
     val emb = Tables.embeddings(spark, sfDir)
-    // the feed-stats fit is read only at DRAIN (finishAssembly) — take
-    // it as a join handle so it builds while the stream runs
+    // the feed-stats fit is read only at DRAIN (finishAssembly) — a held
+    // join handle, so it builds while the stream runs
     val (ck, bi, fsJ) = Multimodal.sharedStandingStateAsync(spark, sfDir)
+    r.hold(fsJ)
     val seenCk = new DeltaIndex(ck.limit(0).localCheckpoint())
     val seenBands = new DeltaIndex(bi.limit(0).localCheckpoint())
-    val q = Tables.documentsStream(spark, sfDir)
+    val stream = Tables.documentsStream(spark, sfDir)
       .filter(col("doc_id") % 10 >= Multimodal.ARRIVAL_DECILE)
-      .writeStream
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .outputMode(OutputMode.Append.toString)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val arr = batch.toDF().localCheckpoint()
-        // min-id re-group over the delta UNION is the probe's job (the
-        // view holds one grouped row per (batch, checksum) — ckAll
-        // collapses them); each batch checkpoints only its own slice
-        val ckAll = ck.unionByName(seenCk.view)
-          .groupBy(col("checksum")).agg(min(col("st_min_id")).as("st_min_id"))
-        Multimodal.gauntletFlags(arr, emb, ckAll, bi.unionByName(seenBands.view))
-          .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-        seenCk +=
-          arr.select(md5(col("text")).as("checksum"), col("doc_id").as("st_min_id"))
-            .groupBy(col("checksum")).agg(min(col("st_min_id")).as("st_min_id"))
-            .localCheckpoint()
-        seenBands +=
-          Multimodal.signatureBands(Multimodal.sliceFrames(arr)).localCheckpoint()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Multimodal.finishAssembly(
-      drainOr(spark, out,
+    val flags = r.eachBatch(stream, OutputMode.Append(),
         Multimodal.gauntletFlags(Tables.documents(spark, sfDir).limit(0),
-          emb, ck, bi)).drop("batch"), fsJ())
+          emb, ck, bi)) { (batch, batchId) =>
+      val arr = batch.localCheckpoint()
+      // min-id re-group over the delta UNION is the probe's job (the
+      // view holds one grouped row per (batch, checksum) — ckAll
+      // collapses them); each batch checkpoints only its own slice
+      val ckAll = ck.unionByName(seenCk.view)
+        .groupBy(col("checksum")).agg(min(col("st_min_id")).as("st_min_id"))
+      Multimodal.gauntletFlags(arr, emb, ckAll, bi.unionByName(seenBands.view))
+        .write.mode("overwrite").parquet(r.batchDir(batchId))
+      seenCk +=
+        arr.select(md5(col("text")).as("checksum"), col("doc_id").as("st_min_id"))
+          .groupBy(col("checksum")).agg(min(col("st_min_id")).as("st_min_id"))
+          .localCheckpoint()
+      seenBands +=
+        Multimodal.signatureBands(Multimodal.sliceFrames(arr)).localCheckpoint()
+    }
+    Multimodal.finishAssembly(flags, fsJ())
   }
 
   /** The ORACLE-GATED streaming CORPUS-REJECTIONS twin — the assembly
@@ -1145,58 +962,51 @@ object StreamingPipeline {
     * rescan. Sink is the idempotent batchId-keyed overwrite.
     */
   def corpusRejectionsReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "rejections_replay") { r =>
     import graft.ops.{TextAnalysis => TA}
-    val tmp = java.nio.file.Files.createTempDirectory("rejections_replay")
-    val out = s"$tmp/flags"
     val docs = Tables.documents(spark, sfDir)
     val t = TA.caThreshold(docs)
-    // the bench-hash and doc-stats fits are read only at DRAIN — take
-    // them as join handles so they build while the stream runs, instead
-    // of delaying stream start behind fits no micro-batch touches
+    // the bench-hash and doc-stats fits are read only at DRAIN — held
+    // join handles, so they build while the stream runs instead of
+    // delaying stream start behind fits no micro-batch touches
     val (sets, fpIdx, postings, benchHJ, docStatsJ) =
       TA.sharedCaStateAsync(spark, sfDir)
+    r.hold(benchHJ)
+    r.hold(docStatsJ)
     val isBench = col("doc_id") % lit(graft.ops.TextAnalysis.DECONTAM_MOD) === 0
     val seenFp = new DeltaIndex(fpIdx.limit(0).localCheckpoint())
     val seenPost = new DeltaIndex(postings.limit(0).localCheckpoint())
     val seenSets = new DeltaIndex(sets.limit(0).localCheckpoint())
-    // schema-only init (one `h` column) — benchH itself is still building
+    // schema-only init from benchH's own expression (benchH is still
+    // building): the shingle hashes exploded off the set arrays
     val seenBench = new DeltaIndex(
-      postings.limit(0).select(col("h")).localCheckpoint())
-    val q = Tables.documentsStream(spark, sfDir)
+      sets.limit(0).select(explode(col("shs")).as("h")).localCheckpoint())
+    val stream = Tables.documentsStream(spark, sfDir)
       .filter(col("doc_id") >= t)
-      .writeStream
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .outputMode(OutputMode.Append.toString)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val arr = batch.toDF().localCheckpoint()
-        val aSets = TA.caShingleSets(arr).localCheckpoint()
-        TA.rejStreamFlags(arr, aSets,
-            fpIdx.unionByName(seenFp.view),
-            postings.unionByName(seenPost.view),
-            sets.unionByName(seenSets.view), batchBounded = true)
-          .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-        seenFp +=
-          arr.select(graft.ops.Dedup.exactFp(col("text")).as("fp")).distinct()
-            .localCheckpoint()
-        // postings/bench deltas stay LAZY off the checkpointed aSets —
-        // a narrow re-explode per probe, vs. storing the posting index
-        // twice; the set delta IS the checkpointed frame itself
-        seenPost += aSets.select(col("doc_id"), explode(col("shs")).as("h"))
-        seenSets += aSets
-        // per-batch distinct dropped: the drain's own distinct() is the
-        // single shuffle that collapses cross-batch repeats anyway
-        seenBench += aSets.filter(isBench).select(explode(col("shs")).as("h"))
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    TA.rejStreamFinish(
-      drainOr(spark, out,
+    val flags = r.eachBatch(stream, OutputMode.Append(),
         TA.rejStreamFlags(docs.limit(0), TA.caShingleSets(docs.limit(0)),
-          fpIdx, postings, sets, batchBounded = true)).drop("batch"),
-      seenPost.view, seenBench.view.distinct(), benchHJ(), postings,
-      docStatsJ())
+          fpIdx, postings, sets, batchBounded = true)) { (batch, batchId) =>
+      val arr = batch.localCheckpoint()
+      val aSets = TA.caShingleSets(arr).localCheckpoint()
+      TA.rejStreamFlags(arr, aSets,
+          fpIdx.unionByName(seenFp.view),
+          postings.unionByName(seenPost.view),
+          sets.unionByName(seenSets.view), batchBounded = true)
+        .write.mode("overwrite").parquet(r.batchDir(batchId))
+      seenFp +=
+        arr.select(graft.ops.Dedup.exactFp(col("text")).as("fp")).distinct()
+          .localCheckpoint()
+      // postings/bench deltas stay LAZY off the checkpointed aSets —
+      // a narrow re-explode per probe, vs. storing the posting index
+      // twice; the set delta IS the checkpointed frame itself
+      seenPost += aSets.select(col("doc_id"), explode(col("shs")).as("h"))
+      seenSets += aSets
+      // per-batch distinct dropped: the drain's own distinct() is the
+      // single shuffle that collapses cross-batch repeats anyway
+      seenBench += aSets.filter(isBench).select(explode(col("shs")).as("h"))
+    }
+    TA.rejStreamFinish(flags, seenPost.view, seenBench.view.distinct(),
+      benchHJ(), postings, docStatsJ())
   }
 
   /** The ORACLE-GATED streaming PRIVACY-AUDIT twin — k-anonymity
@@ -1212,36 +1022,22 @@ object StreamingPipeline {
     * (k-anonymity is a corpus-level property — no arrival restriction).
     */
   def privacyKAnonReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "privacy_kanon_replay") { r =>
     import graft.ops.Privacy
-    val tmp = java.nio.file.Files.createTempDirectory("privacy_kanon_replay")
-    val out = s"$tmp/classes"
-    // the standing fit reads only the static even half — build it while
+    val stream = Tables.customerStream(spark, sfDir)
+      .filter(col("c_custkey") % 2 === 1)
+      .groupBy(Privacy.qiK: _*)
+      .agg(count(lit(1)).as("k"))
+    // the standing fit reads only the static even half — it builds while
     // the stream drains instead of behind it (guide §2.6, join handle)
-    val standingJ = graft.ops.Overlap.begin(Seq(
-      () => Privacy.sharedClassCounts(spark, sfDir,
-        "privacy_qik_st", Privacy.qiK,
-        Tables.customer(spark, sfDir).filter(col("c_custkey") % 2 === 0))),
-      cap = 1)(0)
-    withStatePartitions(spark, 8) {
-      val q = Tables.customerStream(spark, sfDir)
-        .filter(col("c_custkey") % 2 === 1)
-        .groupBy(Privacy.qiK: _*)
-        .agg(count(lit(1)).as("k"))
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Update.toString)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          mergeByKey(batch, out, Seq("qi"))
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val (counts, standing) = r.eachBatchWith(stream, OutputMode.Update(), stream,
+        graft.ops.Overlap.start(Privacy.sharedClassCounts(spark, sfDir,
+          "privacy_qik_st", Privacy.qiK,
+          Tables.customer(spark, sfDir).filter(col("c_custkey") % 2 === 0)))) { (batch, _) =>
+      mergeByKey(batch, r.out, Seq("qi"))
     }
-    val standing = standingJ()
     Privacy.kHistogram(
-      Privacy.mergeCounts(standing, drainMerged(spark, out)(standing.limit(0)))
-        .select(col("qi"), col("k")))
+      Privacy.mergeCounts(standing, counts).select(col("qi"), col("k")))
   }
 
   /** The ORACLE-GATED streaming L-DIVERSITY twin — the homogeneity
@@ -1257,34 +1053,20 @@ object StreamingPipeline {
     * [[graft.ops.Privacy.lDiversitySql]] VERBATIM.
     */
   def privacyLDivReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "privacy_ldiv_replay") { r =>
     import graft.ops.Privacy
-    val tmp = java.nio.file.Files.createTempDirectory("privacy_ldiv_replay")
-    val out = s"$tmp/cells"
+    val stream = Tables.customerStream(spark, sfDir)
+      .filter(col("c_custkey") % 2 === 1)
+      .groupBy(Privacy.qiSeg: _*)
+      .agg(count(lit(1)).as("k"))
     // standing fit is stream-independent — overlap with the drain
-    val standingJ = graft.ops.Overlap.begin(Seq(
-      () => Privacy.sharedClassCounts(spark, sfDir,
-        "privacy_qiseg_st", Privacy.qiSeg,
-        Tables.customer(spark, sfDir).filter(col("c_custkey") % 2 === 0))),
-      cap = 1)(0)
-    withStatePartitions(spark, 8) {
-      val q = Tables.customerStream(spark, sfDir)
-        .filter(col("c_custkey") % 2 === 1)
-        .groupBy(Privacy.qiSeg: _*)
-        .agg(count(lit(1)).as("k"))
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Update.toString)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          mergeByKey(batch, out, Seq("qi", "seg"))
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val (counts, standing) = r.eachBatchWith(stream, OutputMode.Update(), stream,
+        graft.ops.Overlap.start(Privacy.sharedClassCounts(spark, sfDir,
+          "privacy_qiseg_st", Privacy.qiSeg,
+          Tables.customer(spark, sfDir).filter(col("c_custkey") % 2 === 0)))) { (batch, _) =>
+      mergeByKey(batch, r.out, Seq("qi", "seg"))
     }
-    val standing = standingJ()
-    Privacy.lHistogram(
-      Privacy.mergeCounts(standing, drainMerged(spark, out)(standing.limit(0))))
+    Privacy.lHistogram(Privacy.mergeCounts(standing, counts))
   }
 
   /** The ORACLE-GATED streaming GENERALIZATION-LADDER twin — k-anonymity
@@ -1300,32 +1082,18 @@ object StreamingPipeline {
     * VERBATIM.
     */
   def privacyLadderReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "privacy_ladder_replay") { r =>
     import graft.ops.Privacy
-    val tmp = java.nio.file.Files.createTempDirectory("privacy_ladder_replay")
-    val out = s"$tmp/classes"
+    val stream = Privacy.ladderCounts(
+      Tables.customerStream(spark, sfDir).filter(col("c_custkey") % 2 === 1),
+      Tables.nation(spark, sfDir))
     // standing ladder fit is stream-independent — overlap with the drain
-    val standingJ = graft.ops.Overlap.begin(Seq(
-      () => Privacy.sharedLadderCounts(spark, sfDir)), cap = 1)(0)
-    withStatePartitions(spark, 8) {
-      val q = Privacy.ladderCounts(
-          Tables.customerStream(spark, sfDir)
-            .filter(col("c_custkey") % 2 === 1),
-          Tables.nation(spark, sfDir))
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Update.toString)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          mergeByKey(batch, out, Seq("level", "qi"))
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val (counts, standing) = r.eachBatchWith(stream, OutputMode.Update(), stream,
+        graft.ops.Overlap.start(Privacy.sharedLadderCounts(spark, sfDir))) { (batch, _) =>
+      mergeByKey(batch, r.out, Seq("level", "qi"))
     }
-    val standing = standingJ()
     Privacy.ladderRollup(
-      standing
-        .unionByName(drainMerged(spark, out)(standing.limit(0)))
+      standing.unionByName(counts)
         .groupBy(col("level"), col("qi")).agg(sum(col("k")).as("k")))
   }
 
@@ -1372,27 +1140,14 @@ object StreamingPipeline {
     * (`Similarity.indexDriftStreamSql`).
     */
   def indexDriftReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("index_drift_replay")
-    val out = s"$tmp/drift"
+      sfDir: String): DataFrame = Replay(spark, "index_drift_replay") { r =>
     val (cellCol, cosCol) = graft.ops.Similarity.sharedDriftScorer(spark, sfDir)
-    withStatePartitions(spark, 8) {
-      val arrivals = Tables.embeddingsStream(spark, sfDir)
-        .filter(col("vec_id") % 2 === 1)
-      val q = indexDriftStreamWith(arrivals, cellCol, cosCol)
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Complete.toString)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainOr(spark, out, emptyFrame(spark, "cell" -> org.apache.spark.sql.types.IntegerType,
-        "n_new" -> org.apache.spark.sql.types.LongType, "avg_cos_new" -> org.apache.spark.sql.types.DoubleType))
-      .select(col("cell"), col("n_new"), col("avg_cos_new"))
+    val arrivals = Tables.embeddingsStream(spark, sfDir)
+      .filter(col("vec_id") % 2 === 1)
+    val stream = indexDriftStreamWith(arrivals, cellCol, cosCol)
+    r.eachBatch(stream, OutputMode.Complete(), stream) { (batch, _) =>
+      batch.write.mode("overwrite").parquet(r.out)
+    }.select(col("cell"), col("n_new"), col("avg_cos_new"))
   }
 
   /** Streaming DSIR scoring — the online half of the batch
@@ -1419,21 +1174,9 @@ object StreamingPipeline {
     * DSIR, with selection left to the downstream consumer.
     */
   def dsirScoreReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("dsir_score_replay")
-    val out = s"$tmp/scores"
+      sfDir: String): DataFrame = Replay(spark, "dsir_score_replay") { r =>
     val model = graft.ops.TextAnalysis.sharedDsirModel(spark, sfDir)
-    val q = graft.ops.TextAnalysis
-      .dsirScored(Tables.documentsStream(spark, sfDir), model)
-      .writeStream.format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .outputMode(OutputMode.Append.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    drainOr(spark, out, graft.ops.TextAnalysis
-      .dsirScored(Tables.documents(spark, sfDir).limit(0), model))
+    r.files(graft.ops.TextAnalysis.dsirScored(Tables.documentsStream(spark, sfDir), model))
   }
 
   /** Streaming mixture gate — the sampling half of the batch
@@ -1500,27 +1243,13 @@ object StreamingPipeline {
     * micro-batches, so no update is dropped as late.
     */
   def anomalyReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("anomaly_replay")
-    val out = s"$tmp/alerts"
-    withStatePartitions(spark, 8) {
-      val q = anomalyStream(Tables.eventsStream(spark, sfDir),
-          Tables.events(spark, sfDir))
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Update.toString)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          mergeByKey(batch, out, Seq("event_type", "day"))
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainOr(spark, out, emptyFrame(spark, "event_type" -> org.apache.spark.sql.types.StringType,
-        "day" -> org.apache.spark.sql.types.StringType, "n_events" -> org.apache.spark.sql.types.LongType,
-        "z_score" -> org.apache.spark.sql.types.DoubleType, "is_anomaly" -> org.apache.spark.sql.types.BooleanType))
-      .select(col("event_type"), col("day"), col("n_events"),
-        col("z_score"), col("is_anomaly"))
+      sfDir: String): DataFrame = Replay(spark, "anomaly_replay") { r =>
+    val stream = anomalyStream(Tables.eventsStream(spark, sfDir),
+      Tables.events(spark, sfDir))
+    r.eachBatch(stream, OutputMode.Update(), stream) { (batch, _) =>
+      mergeByKey(batch, r.out, Seq("event_type", "day"))
+    }.select(col("event_type"), col("day"), col("n_events"),
+      col("z_score"), col("is_anomaly"))
   }
 
   /** Streaming sessionization — the stateful twin of the batch
@@ -1545,7 +1274,7 @@ object StreamingPipeline {
   /** Streaming sessionization with KEYED STATE — per-EVENT emission,
     * the form that faces the oracle where [[userSessionsStream]]'s
     * `session_window` cannot: session windows support neither update
-    * mode nor a final flush under `Trigger.AvailableNow` (the watermark
+    * mode nor a final flush under an AvailableNow trigger (the watermark
     * is always `gap` short of the last session's end, so append mode
     * withholds every user's final session forever). Here each arrival
     * is assigned its session's START instantly and immutably — with a
@@ -1597,26 +1326,12 @@ object StreamingPipeline {
     * latest session when the next batch arrives.
     */
   def userSessionsReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "sessions_replay") { r =>
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("sessions_replay")
-    val out = s"$tmp/assign"
-    withStatePartitions(spark, 8) {
-      val q = sessionizeStream(
-          Tables.eventsStream(spark, sfDir)
-            .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-            .as[TypedEvent])
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Append.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainOr(spark, out, emptyFrame(spark, "user_id" -> org.apache.spark.sql.types.LongType,
-        "event_id" -> org.apache.spark.sql.types.LongType, "us" -> org.apache.spark.sql.types.LongType,
-        "session_start_us" -> org.apache.spark.sql.types.LongType))
+    r.files(sessionizeStream(
+        Tables.eventsStream(spark, sfDir)
+          .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
+          .as[TypedEvent]).toDF())
       .groupBy(col("user_id"), col("session_start_us"))
       .agg(max(col("us")).as("session_last_us"),
         count(lit(1)).as("session_events"))
@@ -1708,36 +1423,6 @@ object StreamingPipeline {
       }
   }
 
-  /** Scoped shuffle-partition override for the replay queries (save/
-    * restore, never a session-wide mutation): a stateful streaming query
-    * lays out its state store from `spark.sql.shuffle.partitions` at
-    * FIRST start, and each micro-batch then pays one state-store commit
-    * (delta file + fsync to the checkpoint dir) PER PARTITION per
-    * stateful operator — pure fixed cost when the state is tiny (the
-    * replays hold O(in-flight days) join rows or one string per user).
-    * Under the session's 32 the stream-stream replay paid 32 commits ×
-    * 2 join state stores × every micro-batch for zero parallelism gain;
-    * 8 keeps the work spread while quartering the commit tax. A real
-    * deployment sizes this to its state volume the same way — state
-    * partitions are a capacity knob, not a correctness one (the gated
-    * oracle compare proves result-identity).
-    *
-    * CONCURRENCY CONTRACT: the override mutates the SHARED session conf
-    * for the duration of `body` — any query PLANNED concurrently in the
-    * same SparkSession would silently pick up the reduced partition
-    * count. The Verify/Bench harnesses run queries strictly sequentially
-    * (this is the assumption); a concurrent caller must instead use
-    * `spark.newSession()` (own conf, shared state) and set the override
-    * there.
-    */
-  private def withStatePartitions[T](spark: org.apache.spark.sql.SparkSession,
-      n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
   case class ValuedEvent(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
   case class AttributedPurchase(user_id: Long, touch_type: String, cents: Long)
@@ -1784,26 +1469,13 @@ object StreamingPipeline {
     * SQL as `event_attribution`.
     */
   def eventAttributionReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "attribution_replay") { r =>
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("attribution_replay")
-    val out = s"$tmp/credits"
-    withStatePartitions(spark, 8) {
-      val q = attributionStream(
-          Tables.eventsStream(spark, sfDir)
-            .select(col("event_id"), col("ts"), col("user_id"),
-              col("event_type"), col("value"))
-            .as[ValuedEvent])
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Append.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainOr(spark, out, emptyFrame(spark, "user_id" -> org.apache.spark.sql.types.LongType,
-        "touch_type" -> org.apache.spark.sql.types.StringType, "cents" -> org.apache.spark.sql.types.LongType))
+    r.files(attributionStream(
+        Tables.eventsStream(spark, sfDir)
+          .select(col("event_id"), col("ts"), col("user_id"),
+            col("event_type"), col("value"))
+          .as[ValuedEvent]).toDF())
       .groupBy(col("touch_type"))
       .agg(count(lit(1)).as("n_purchases"),
         sum(col("cents")).as("revenue_cents"))
@@ -1819,9 +1491,8 @@ object StreamingPipeline {
     * driver-checked exact-hash, not just spec'd.
     */
   def txEnrichStreamJoin(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("ss_enrich_replay")
-    val priceDir = s"$tmp/price_feed"
+      sfDir: String): DataFrame = Replay(spark, "ss_enrich_replay") { r =>
+    val priceDir = r.path("price_feed")
     val priceFeed = Tables.dailyPrice(spark, sfDir)
       .select(col("chain"), col("price_date").cast("timestamp").as("price_ts"),
         col("price"))
@@ -1832,22 +1503,11 @@ object StreamingPipeline {
       .schema(priceFeed.schema).parquet(priceDir)
     val tx = Tables.txFrom(Tables.eventsStream(spark, sfDir))
       .filter(col("createdAt") > lit(java.sql.Timestamp.valueOf(Tables.WM)))
-    val out = s"$tmp/enriched"
-    withStatePartitions(spark, 8) {
-      val q = enrichJoinStream(tx, priceStream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Append.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(out)
+    r.files(enrichJoinStream(tx, priceStream))
   }
 
   /** The ORACLE-GATED replay of [[transitionsStream]]: the events table
-    * arrives through the file-stream source (Trigger.AvailableNow — the
+    * arrives through the file-stream source (an AvailableNow trigger — the
     * reference's cron shape), the online operator emits its (prev, cur)
     * pairs into a parquet sink, and the sink rolls up through the SAME
     * matrix arithmetic as the batch lag window — end to end distributed
@@ -1859,26 +1519,13 @@ object StreamingPipeline {
     * [[transitionsStream]]).
     */
   def eventTransitionsReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "transitions_replay") { r =>
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("transitions_replay")
-    val out = s"$tmp/pairs"
-    withStatePartitions(spark, 8) {
-      val q = transitionsStream(
+    graft.ops.Relational.transitionMatrix(
+      r.files(transitionsStream(
           Tables.eventsStream(spark, sfDir)
             .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-            .as[TypedEvent])
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Append.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.ops.Relational.transitionMatrix(
-      drainOr(spark, out, emptyFrame(spark, "prev_type" -> org.apache.spark.sql.types.StringType,
-          "cur_type" -> org.apache.spark.sql.types.StringType))
+            .as[TypedEvent]).toDF())
         .select(col("prev_type"), col("cur_type")))
   }
 
@@ -1894,24 +1541,10 @@ object StreamingPipeline {
     * (createdAt, _id) wins, matching the batch sort.
     */
   def firstSeenReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "first_seen_replay") { r =>
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("first_seen_replay")
-    val out = s"$tmp/first_seen"
-    withStatePartitions(spark, 8) {
-      val q = firstSeen(
-          Tables.txFrom(Tables.eventsStream(spark, sfDir)).as[TxRow])
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Append.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainOr(spark, out, emptyFrame(spark, "chain" -> org.apache.spark.sql.types.LongType,
-        "stashId" -> org.apache.spark.sql.types.LongType, "_id" -> org.apache.spark.sql.types.LongType,
-        "firstSeenAt" -> org.apache.spark.sql.types.TimestampType, "firstStake" -> org.apache.spark.sql.types.DoubleType))
+    r.files(firstSeen(
+        Tables.txFrom(Tables.eventsStream(spark, sfDir)).as[TxRow]).toDF())
       .select(col("chain"), col("stashId"), col("_id"),
         col("firstSeenAt"), col("firstStake"))
   }
@@ -1932,41 +1565,34 @@ object StreamingPipeline {
     * against the sink — a replayed batch is a no-op.
     */
   def decontamScrubReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("scrub_replay")
-    val out = s"$tmp/scrubbed"
+      sfDir: String): DataFrame = Replay(spark, "scrub_replay") { r =>
+    import graft.ops.TextAnalysis
     // the standing suite's shingle set is built and materialized ONCE —
     // per-batch work must never include re-shingling the whole suite
-    val benchShingles = graft.ops.TextAnalysis.benchShinglesOf(
+    val benchShingles = TextAnalysis.benchShinglesOf(
         Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % graft.ops.TextAnalysis.DECONTAM_MOD === 0))
+          .filter(col("doc_id") % TextAnalysis.DECONTAM_MOD === 0))
       .localCheckpoint()
-    val q = Tables.documentsStream(spark, sfDir)
-      .writeStream
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val scrubbed = graft.ops.TextAnalysis.decontamScrubAgainstShingles(
-          batch.filter(col("doc_id") % graft.ops.TextAnalysis.DECONTAM_MOD =!= 0),
-          benchShingles)
-        // foreachBatch is at-least-once; the anti-join against the sink
-        // makes a replayed batch a no-op (same contract as writeIdempotent).
-        // Existence resolves through the Hadoop FileSystem API so the
-        // guard holds for ANY sink scheme (hdfs://, s3a://, file:) — a
-        // java.io.File probe would silently skip the anti-join off-box
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val delta =
-          if (fs.exists(outPath))
-            scrubbed.join(spark.read.parquet(out).select(col("doc_id")),
-              Seq("doc_id"), "left_anti")
-          else scrubbed
-        delta.write.mode("append").parquet(out)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    drainOr(spark, out, graft.ops.TextAnalysis.decontamScrubAgainstShingles(
-      Tables.documents(spark, sfDir).limit(0), benchShingles))
+    r.eachBatch(Tables.documentsStream(spark, sfDir), OutputMode.Append(),
+        TextAnalysis.decontamScrubAgainstShingles(
+          Tables.documents(spark, sfDir).limit(0), benchShingles)) { (batch, _) =>
+      val scrubbed = TextAnalysis.decontamScrubAgainstShingles(
+        batch.filter(col("doc_id") % TextAnalysis.DECONTAM_MOD =!= 0),
+        benchShingles)
+      // foreachBatch is at-least-once; the anti-join against the sink
+      // makes a replayed batch a no-op (same contract as writeIdempotent).
+      // Existence resolves through the Hadoop FileSystem API so the
+      // guard holds for ANY sink scheme (hdfs://, s3a://, file:) — a
+      // java.io.File probe would silently skip the anti-join off-box
+      val outPath = new org.apache.hadoop.fs.Path(r.out)
+      val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val delta =
+        if (fs.exists(outPath))
+          scrubbed.join(spark.read.parquet(r.out).select(col("doc_id")),
+            Seq("doc_id"), "left_anti")
+        else scrubbed
+      delta.write.mode("append").parquet(r.out)
+    }
   }
 
   /** `seq` is the event-order tiebreaker within a day (event_id /
@@ -2086,19 +1712,6 @@ object StreamingPipeline {
       }
   }
 
-  /** The ORACLE-GATED replay of [[scd2Stream]]: the events table arrives
-    * as a change feed (per-day state = the day's final event, ranked by
-    * (seq, tie) = (ts-µs, event_id) — the batch (ts DESC, event_id
-    * DESC) winner rule, carried unpacked), closed
-    * intervals append to the sink, and the sink faces the BATCH
-    * `events_scd2` oracle minus exactly the rows the emission contract
-    * holds back: each user's LAST interval (still open), and the
-    * second-to-last IFF the last spans a single day (its close is still
-    * pending — no strictly later day ever arrived to prove it final).
-    * That subtraction is a two-window SQL view over the shared batch
-    * CTEs, so the state machine's flush rule itself is driver-checked,
-    * not just spec'd.
-    */
   /** The ORACLE-GATED replay of the streaming data-quality ledger: the
     * events ledger ([[graft.ops.DataQuality]]'s events slice) maintained
     * as a STREAMING aggregation — rules melted to (rule, bad) rows per
@@ -2113,54 +1726,40 @@ object StreamingPipeline {
     * ([[graft.ops.DataQuality.dqEventsLedgerSql]]).
     */
   def dqLedgerReplay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("dq_ledger_replay")
-    val out = s"$tmp/ledger"
-    withStatePartitions(spark, 8) {
-      val melted = graft.ops.DataQuality.dqEventMelt(
+      sfDir: String): DataFrame = Replay(spark, "dq_ledger_replay") { r =>
+    val stream = graft.ops.DataQuality.dqEventMelt(
         Tables.eventsStream(spark, sfDir), Tables.customer(spark, sfDir))
-      val q = melted.groupBy(col("rule"))
-        .agg(count(lit(1)).as("checked"), sum(col("bad")).as("violations"))
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Update.toString)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          mergeByKey(batch, out, Seq("rule"))
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainOr(spark, out, emptyFrame(spark, "rule" -> org.apache.spark.sql.types.StringType,
-        "checked" -> org.apache.spark.sql.types.LongType, "violations" -> org.apache.spark.sql.types.LongType))
-      .select(col("rule"), lit("events").as("tbl"), col("checked"),
-        col("violations"), (col("violations") === 0).cast("int").as("pass"))
+      .groupBy(col("rule"))
+      .agg(count(lit(1)).as("checked"), sum(col("bad")).as("violations"))
+    r.eachBatch(stream, OutputMode.Update(), stream) { (batch, _) =>
+      mergeByKey(batch, r.out, Seq("rule"))
+    }.select(col("rule"), lit("events").as("tbl"), col("checked"),
+      col("violations"), (col("violations") === 0).cast("int").as("pass"))
   }
 
+  /** The ORACLE-GATED replay of [[scd2Stream]]: the events table arrives
+    * as a change feed (per-day state = the day's final event, ranked by
+    * (seq, tie) = (ts-µs, event_id) — the batch (ts DESC, event_id
+    * DESC) winner rule, carried unpacked), closed
+    * intervals append to the sink, and the sink faces the BATCH
+    * `events_scd2` oracle minus exactly the rows the emission contract
+    * holds back: each user's LAST interval (still open), and the
+    * second-to-last IFF the last spans a single day (its close is still
+    * pending — no strictly later day ever arrived to prove it final).
+    * That subtraction is a two-window SQL view over the shared batch
+    * CTEs, so the state machine's flush rule itself is driver-checked,
+    * not just spec'd.
+    */
   def scd2Replay(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): DataFrame = {
+      sfDir: String): DataFrame = Replay(spark, "scd2_replay") { r =>
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("scd2_replay")
-    val out = s"$tmp/closed"
-    withStatePartitions(spark, 8) {
-      val changes = Tables.eventsStream(spark, sfDir)
-        .select(col("user_id"), to_date(col("ts")).as("d"),
-          col("event_type").as("state"),
-          unix_micros(col("ts")).as("seq"),
-          col("event_id").as("tie"))
-        .as[StateChange]
-      val q = scd2Stream(changes).toDF()
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Append.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainOr(spark, out, emptyFrame(spark, "user_id" -> org.apache.spark.sql.types.LongType,
-        "state" -> org.apache.spark.sql.types.StringType, "valid_from" -> org.apache.spark.sql.types.StringType,
-        "valid_to" -> org.apache.spark.sql.types.StringType, "n_days" -> org.apache.spark.sql.types.LongType))
+    val changes = Tables.eventsStream(spark, sfDir)
+      .select(col("user_id"), to_date(col("ts")).as("d"),
+        col("event_type").as("state"),
+        unix_micros(col("ts")).as("seq"),
+        col("event_id").as("tie"))
+      .as[StateChange]
+    r.files(scd2Stream(changes).toDF())
       .select(col("user_id"), col("state"), col("valid_from"),
         col("valid_to"), col("n_days"))
   }
