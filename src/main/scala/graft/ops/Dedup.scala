@@ -343,9 +343,11 @@ object Dedup {
     // the pair lambda interpreted, which measures ~3× slower.
     val sigs = simhashSignatures(exactReps(docs)).localCheckpoint()
     val spark = docs.sparkSession
+    val scratch = Resources.scratchBudget(spark)
     val (blocks, radius) = mihGeometry(sigs.count(),
       SIMHASH_BANDS, SIMHASH_MAX_HAMMING,
-      simhashRung1N(spark), simhashRung2N(spark))
+      simhashRung1N(Resources.payloadBudget(spark), scratch),
+      simhashRung2N(scratch))
     if (radius > 1)
       mihPairsRung2(sigs, "doc_id", "simhash",
         SIMHASH_BITS, SIMHASH_MAX_HAMMING, ("d1", "d2"))
@@ -411,16 +413,14 @@ object Dedup {
     * boundary (spec-asserted under both the adversarial and the
     * degenerate config).
     */
-  def simhashRung1N(spark: SparkSession): Long = {
+  def simhashRung1N(payloadBytes: Long, scratchBytes: Long): Long = {
     val blocks = SIMHASH_BANDS
     val bandBits = SIMHASH_BITS / SIMHASH_BANDS
     math.min(
       math.min(
-        Resources.bandedRungCeiling(Resources.payloadBudget(spark),
-          blocks, bandBits, 0),
-        Resources.bandedRungCeiling(Resources.scratchBudget(spark),
-          blocks, bandBits, 0)),
-      simhashRung2N(spark))
+        Resources.bandedRungCeiling(payloadBytes, blocks, bandBits, 0),
+        Resources.bandedRungCeiling(scratchBytes, blocks, bandBits, 0)),
+      simhashRung2N(scratchBytes))
   }
 
   /** Corpus size where SimHash pairing switches to the rung-2 cogroup
@@ -442,8 +442,8 @@ object Dedup {
     * executor — a small-scratch fleet lowers the budget and flips to
     * the survivable kernel earlier.
     */
-  def simhashRung2N(spark: SparkSession): Long =
-    Resources.bandedRungCeiling(Resources.scratchBudget(spark),
+  def simhashRung2N(scratchBytes: Long): Long =
+    Resources.bandedRungCeiling(scratchBytes,
       SIMHASH_BANDS / 2, SIMHASH_BITS / (SIMHASH_BANDS / 2), 1)
 
   /** Hamming-≤maxH pairs of a signature frame via rung-geometry banded
@@ -585,8 +585,8 @@ object Dedup {
     * gated corpora picks the join, and `dedup_jaccard_grouped` forces
     * the kernel against the same oracle SQL.
     */
-  def jaccardGroupedN(spark: SparkSession): Long =
-    Resources.payloadBudget(spark) / JACCARD_VERIFY_BYTES_PER_DOC
+  def jaccardGroupedN(payloadBytes: Long): Long =
+    payloadBytes / JACCARD_VERIFY_BYTES_PER_DOC
 
   def ngramJaccardPairs(docs: DataFrame): DataFrame =
     ngramJaccardPairsFromSets(jaccardSets(docs))
@@ -606,7 +606,8 @@ object Dedup {
     graft.functions.ArrayFunctions.register(sets.sparkSession)
     val n = if (nDocsHint >= 0L) nDocsHint else sets.count()
     val pfx = jaccardPrefix(sets)
-    if (n < jaccardGroupedN(sets.sparkSession)) jaccardVerifyJoin(sets, pfx)
+    if (n < jaccardGroupedN(Resources.payloadBudget(sets.sparkSession)))
+      jaccardVerifyJoin(sets, pfx)
     else jaccardVerifyGrouped(sets, pfx)
   }
 
@@ -1129,14 +1130,6 @@ object Dedup {
       when(expr(s"vec_dot(embedding, $arr)") > 0, lit(1 << i)).otherwise(lit(0))
     }.reduce(_ + _)
 
-  /** Diagnostic (graft.tools.GraphProbe): per-table bucket-occupancy
-    * accounting for the occupancy-pinned hyperplane geometry. The
-    * candidate mass of the knn bucket self-join is Σ occ² per table —
-    * the AVERAGE-occupancy pin bounds the mean, but clustered vectors
-    * share sign patterns, so the L2 norm of the occupancy distribution
-    * is what actually prices the join. Returns (t, n_buckets, max_occ,
-    * cand_rows = Σ occ²).
-    */
   /** The knn candidate stage as a BUCKET-GROUPED KERNEL — the rung-2
     * cogroup lesson applied to the hyperplane tables: instead of the
     * bucket self-JOIN (occ² UnsafeRow join outputs, each copying two
@@ -1153,35 +1146,25 @@ object Dedup {
     * oracles stay exact-hash green. Ladder-(d) is justified here the
     * same way as [[mihPairsRung2]]: a measured multiple on the dominant
     * stage at rehearsal scale, with output equality spec-asserted.
+    *
+    * Each group keeps only its per-vector top-`kCut` under the global
+    * strict order (cosine desc, nn_id asc): any pair in a vector's GLOBAL
+    * top-k ranks ≤ k inside every bucket containing it (a bucket's
+    * candidate set is a subset of the union), so the union of per-bucket
+    * cuts is a complete superset — emission drops from occ² to occ·k rows.
     */
-  /** The (group, vec_id, embedding, nm) frame the grouped kernel consumes
-    * — factored so the probe can price the bucket-assignment scan apart
-    * from the kernel.
-    */
-  private[graft] def knnBucketFrame(base: DataFrame, bits: Int,
-      dim: Int): DataFrame =
-    base.select(
-      col("vec_id"), col("embedding"), col("nm"),
-      explode(array((0 until HYP_TABLES).map(t =>
-        struct(lit(t).as("t"), bucketColBits(t, dim, bits).as("bucket"))): _*)).as("tb"))
-      .select((col("tb.t").cast("long") * lit(1L << 32) +
-        col("tb.bucket").cast("long")).as("g"),
-        col("vec_id"), col("embedding"), col("nm"))
-
-  /** [[knnBucketFrame]] computed in TYPED primitive loops instead of the
-    * per-bit `vec_dot` expression chain — the 300× rehearsal measured the
-    * expression form's bucket assignment at 76.7 s of the 190 s
-    * construction (the explode generator evaluates its 3·bits vec_dot
-    * calls INTERPRETED, outside whole-stage codegen; the same dots as
-    * primitive loops cost ~2 s). Bit-identical: the hyperplanes are the
-    * same [[hypSign]] ±1 floats, the fold is the same ascending
-    * double-accumulate as [[graft.functions.FloatVecDot]], and a product
-    * with ±1.0f is exact.
-    */
-  private[graft] def knnBucketFrameTyped(base: DataFrame, bits: Int,
-      dim: Int): org.apache.spark.sql.Dataset[(Long, Long, Array[Float], Double)] = {
+  private[graft] def knnCandGrouped(base: DataFrame, bits: Int,
+      dim: Int, kCut: Int): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
+    // bucket assignment in TYPED primitive loops instead of the per-bit
+    // `vec_dot` expression chain — the 300× rehearsal measured the
+    // expression form at 76.7 s of the 190 s construction (the explode
+    // generator evaluates its 3·bits vec_dot calls INTERPRETED, outside
+    // whole-stage codegen; the same dots as primitive loops cost ~2 s).
+    // Bit-identical to [[bucketColBits]]: the hyperplanes are the same
+    // [[hypSign]] ±1 floats, the fold is the same ascending
+    // double-accumulate, and a product with ±1.0f is exact.
     val planes: Array[Array[Array[Float]]] =
       Array.tabulate(HYP_TABLES, bits, dim)((t, i, j) => hypSign(t, i, j, bits).toFloat)
     base.select(col("vec_id"), col("embedding"), col("nm"))
@@ -1202,13 +1185,6 @@ object Dedup {
           (t.toLong * (1L << 32) + bucket, id, emb, nm)
         }
       }
-  }
-
-  private[graft] def knnCandGrouped(base: DataFrame, bits: Int,
-      dim: Int, kCut: Int = 0): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    knnBucketFrameTyped(base, bits, dim)
       .groupByKey(_._1)
       .flatMapGroups { (_, it) =>
         val rows = it.toArray
@@ -1225,112 +1201,47 @@ object Dedup {
           java.math.BigDecimal.valueOf(acc / (na * nb))
             .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
         }
-        if (kCut <= 0) {
-          // full emission — the probe's equality form
-          val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Double)](m * (m - 1))
-          var i = 0
-          while (i < m - 1) {
-            var j = i + 1
-            while (j < m) {
-              val c = cosOf(i, j)
-              out += ((rows(i)._2, rows(j)._2, c))
-              out += ((rows(j)._2, rows(i)._2, c))
-              j += 1
-            }
-            i += 1
+        val k = kCut
+        val topCos = Array.ofDim[Double](m, k)
+        val topNn = Array.ofDim[Long](m, k)
+        val topLen = new Array[Int](m)
+        @inline def offer(r: Int, c: Double, nn: Long): Unit = {
+          val len = topLen(r)
+          var pos = len
+          val tc = topCos(r); val tn = topNn(r)
+          while (pos > 0 && (tc(pos - 1) < c ||
+              (tc(pos - 1) == c && tn(pos - 1) > nn))) pos -= 1
+          if (pos < k) {
+            var q = math.min(len, k - 1)
+            while (q > pos) { tc(q) = tc(q - 1); tn(q) = tn(q - 1); q -= 1 }
+            tc(pos) = c; tn(pos) = nn
+            if (len < k) topLen(r) = len + 1
           }
-          out.iterator
-        } else {
-          // per-bucket top-k cut under the global strict order
-          // (cosine desc, nn_id asc): any pair in a vector's GLOBAL
-          // top-k ranks ≤ k inside every bucket containing it (a
-          // bucket's candidate set is a subset of the union), so the
-          // union of per-bucket cuts is a complete superset — emission
-          // drops from occ² to occ·k rows
-          val k = kCut
-          val topCos = Array.ofDim[Double](m, k)
-          val topNn = Array.ofDim[Long](m, k)
-          val topLen = new Array[Int](m)
-          @inline def offer(r: Int, c: Double, nn: Long): Unit = {
-            val len = topLen(r)
-            var pos = len
-            val tc = topCos(r); val tn = topNn(r)
-            while (pos > 0 && (tc(pos - 1) < c ||
-                (tc(pos - 1) == c && tn(pos - 1) > nn))) pos -= 1
-            if (pos < k) {
-              var q = math.min(len, k - 1)
-              while (q > pos) { tc(q) = tc(q - 1); tn(q) = tn(q - 1); q -= 1 }
-              tc(pos) = c; tn(pos) = nn
-              if (len < k) topLen(r) = len + 1
-            }
-          }
-          var i = 0
-          while (i < m - 1) {
-            var j = i + 1
-            while (j < m) {
-              val c = cosOf(i, j)
-              offer(i, c, rows(j)._2)
-              offer(j, c, rows(i)._2)
-              j += 1
-            }
-            i += 1
-          }
-          val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Double)](m * k)
-          var r = 0
-          while (r < m) {
-            var x = 0
-            while (x < topLen(r)) {
-              out += ((rows(r)._2, topNn(r)(x), topCos(r)(x)))
-              x += 1
-            }
-            r += 1
-          }
-          out.iterator
         }
+        var i = 0
+        while (i < m - 1) {
+          var j = i + 1
+          while (j < m) {
+            val c = cosOf(i, j)
+            offer(i, c, rows(j)._2)
+            offer(j, c, rows(i)._2)
+            j += 1
+          }
+          i += 1
+        }
+        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Double)](m * k)
+        var r = 0
+        while (r < m) {
+          var x = 0
+          while (x < topLen(r)) {
+            out += ((rows(r)._2, topNn(r)(x), topCos(r)(x)))
+            x += 1
+          }
+          r += 1
+        }
+        out.iterator
       }
       .toDF("vec_id", "nn_id", "cosine")
-  }
-
-  /** Diagnostic (graft.tools.GraphProbe): the knn construction's candidate
-    * stage alone — bucket self-join + per-candidate cosine + the
-    * (vec_id, nn_id) min-dedup — WITHOUT the per-node top-k window, so
-    * the probe can attribute wall time between the join/agg mass and the
-    * ranking stage.
-    */
-  private[graft] def knnCandStage(emb: DataFrame, dedup: Boolean): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
-    val base = Similarity.withNorm(emb).localCheckpoint()
-    val bits = hypBitsFor(base.count())
-    val buckets = base.select(
-      col("vec_id"), col("embedding"), col("nm"),
-      explode(array((0 until HYP_TABLES).map(t =>
-        struct(lit(t).as("t"), bucketColBits(t, EMB_DIM, bits).as("bucket"))): _*)).as("tb"))
-      .select(col("vec_id"), col("embedding"), col("nm"),
-        col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-    val a = buckets.select(col("t"), col("bucket"), col("vec_id"),
-      col("embedding").as("ea"), col("nm").as("na"))
-    val b = buckets.select(col("t"), col("bucket"), col("vec_id").as("nn_id"),
-      col("embedding").as("eb"), col("nm").as("nb"))
-    val cand = a.join(b, Seq("t", "bucket"))
-      .filter(col("vec_id") =!= col("nn_id"))
-      .select(col("vec_id"), col("nn_id"),
-        round(Similarity.dotExpr("ea", "eb") / (col("na") * col("nb")), 6).as("cosine"))
-    if (dedup) cand.groupBy(col("vec_id"), col("nn_id")).agg(min(col("cosine")).as("cosine"))
-    else cand
-  }
-
-  private[graft] def knnOccupancy(emb: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
-    val base = Similarity.withNorm(emb).localCheckpoint()
-    val bits = hypBitsFor(base.count())
-    val buckets = base.select(
-      explode(array((0 until HYP_TABLES).map(t =>
-        struct(lit(t).as("t"), bucketColBits(t, EMB_DIM, bits).as("bucket"))): _*)).as("tb"))
-      .select(col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-    buckets.groupBy(col("t"), col("bucket")).agg(count(lit(1)).as("occ"))
-      .groupBy(col("t")).agg(count(lit(1)).as("n_buckets"),
-        max(col("occ")).as("max_occ"),
-        sum(col("occ") * col("occ")).as("cand_rows"))
   }
 
   /** Rung-2 MIH pair search — hamming-≤maxH pairs at the 2-block
@@ -1880,7 +1791,6 @@ object Dedup {
       labels = next
       round += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG")) println(s"[cc-debug] rounds=$round")
     // Singletons (nodes with no edge) have cluster_size 1 BY DEFINITION and
     // their rep set is disjoint from the labeled reps (a rep is always an
     // edge endpoint), so sizes derive from `labels` alone and singletons
@@ -2434,7 +2344,7 @@ object Dedup {
     // emitted instead of occ² — the 300× rehearsal priced the former
     // join form's UnsafeRow candidate mass at 155 of 191 s. Bit-identical
     // output (spec-asserted against [[knnGraphJoin]]; exceptAll-checked
-    // at rehearsal scale via graft.tools.GraphProbe).
+    // at rehearsal scale, see SCALING.md).
     val cand = knnCandGrouped(base, bits, dim, kCut = k)
       .groupBy(col("vec_id"), col("nn_id")).agg(min(col("cosine")).as("cosine"))
     val w = Window.partitionBy(col("vec_id")).orderBy(col("cosine").desc, col("nn_id"))

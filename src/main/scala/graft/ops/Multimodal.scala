@@ -375,18 +375,14 @@ object Multimodal {
     * budget — ≈1.23M at this box's default, the r13 absolute pin (10⁶)
     * within 23%, now moving with the fleet's executors.
     */
-  def pfpRung1N(spark: SparkSession): Long =
+  def pfpRung1N(payloadBytes: Long, scratchBytes: Long): Long =
     // min over BOTH budgets at rung 0's own geometry (the simhashRung1N
     // discipline): a small-scratch fleet leaves the exact-band join for
     // the O(N)-working-set cogroup before the band-bucket candidate
     // mass can spill its disk
     math.min(
-      graft.ops.Resources.bandedRungCeiling(
-        graft.ops.Resources.payloadBudget(spark),
-        PFP_BANDS, PFP_BAND_BITS, 0),
-      graft.ops.Resources.bandedRungCeiling(
-        graft.ops.Resources.scratchBudget(spark),
-        PFP_BANDS, PFP_BAND_BITS, 0))
+      Resources.bandedRungCeiling(payloadBytes, PFP_BANDS, PFP_BAND_BITS, 0),
+      Resources.bandedRungCeiling(scratchBytes, PFP_BANDS, PFP_BAND_BITS, 0))
 
   /** The perceptual rung ladder past [[pfpRung1N]] goes STRAIGHT to the
     * partition-grouped cogroup kernel ([[Dedup.mihPairsRung2]]) at the
@@ -394,7 +390,7 @@ object Multimodal {
     * image corpus re-entering the explode-join's quadratic with no next
     * rung built), closed by MEASUREMENT rather than a third pin: the
     * radius-1 explode-join is DOMINATED by the cogroup at every scale
-    * past the rung-0 pin (BandProbe, identical 22,320 / 67,681 pair
+    * past the rung-0 pin (SCALING.md, identical 22,320 / 67,681 pair
     * sets: 6.5 vs 4.9 s at 500k sigs, 25.4 vs 9.6 s at 1.5 M — the
     * join's 8.8× candidate-mass growth for 3× docs is the quadratic
     * arriving, while the cogroup never materializes candidate rows and
@@ -412,7 +408,7 @@ object Multimodal {
     val sigs = perceptualSignatures(frames).localCheckpoint()
     val spark = frames.sparkSession
     val n = sigs.count()
-    if (n < pfpRung1N(spark))
+    if (n < pfpRung1N(Resources.payloadBudget(spark), Resources.scratchBudget(spark)))
       Dedup.bandedHammingPairs(sigs, "media_id", "pfp",
         PFP_BITS, PFP_MAX_HAMMING, PFP_BANDS, 0, ("m1", "m2"))
     else

@@ -1563,61 +1563,76 @@ class TextMultimodalSpec extends SparkSpec {
         s"extra=${(rung2 -- rung0).take(5)}")
   }
 
-  test("resource-derived dispatch pins instantiate to the measured box brackets") {
+  test("dispatch pins at the measured box budgets sit inside the measured brackets") {
     import graft.ops.{Dedup, Resources}
-    // round 15: the default budgets DERIVE from the live runtime (heap +
-    // cache headroom; scratch-dir usable space) instead of box constants
-    // — on this box the derivation must land within a few percent of the
-    // measured constants (8g heap + 5 GB cache ≈ 13.6 vs the measured
-    // 13.4 GB bracket center), so every pin stays inside the bracket its
-    // round-12/13 measurement established, while a bigger JVM or a
-    // fuller disk now MOVES the budget instead of being ignored
-    assert(Resources.derivedPayloadDefault > 11_000_000_000L &&
-      Resources.derivedPayloadDefault < 16_000_000_000L,
-      s"derived payload ${Resources.derivedPayloadDefault} off this box's measured ceiling")
-    val g = Dedup.jaccardGroupedN(spark)
+    // the pins are pure in their budgets; at this box's measured budgets
+    // (13.4 GB payload, 78 GB scratch) every pin must stay inside the
+    // bracket its round-12/13 measurement established
+    val (payload, scratch) = (Resources.PAYLOAD_BUDGET_BOX, Resources.SCRATCH_BUDGET_BOX)
+    val g = Dedup.jaccardGroupedN(payload)
     assert(g >= 150000L && g <= 300000L,
       s"grouped-verify pin $g outside the measured (150k, 300k) crack bracket")
     assert(graft.ops.Resources.ballSize(6, 3) == 42L,  // the MIH probe fan-out
       "hamming-ball size: 1 + C(6,1) + C(6,2) + C(6,3)")
     assert(graft.ops.Resources.ballSize(14, 1) == 15L)
     assert(graft.ops.Resources.ballSize(28, 0) == 1L)
-    val s1 = Dedup.simhashRung1N(spark)
+    val s1 = Dedup.simhashRung1N(payload, scratch)
     assert(s1 >= 32768L && s1 <= 131072L, s"simhash rung-1 pin $s1 out of bracket")
-    val s2 = Dedup.simhashRung2N(spark)
+    val s2 = Dedup.simhashRung2N(scratch)
     assert(s2 > 500000L && s2 < 1500000L,
       s"simhash rung-2 pin $s2 must sit inside the measured (500k, 1.5M) crack bracket")
-    val p1 = Multimodal.pfpRung1N(spark)
+    val p1 = Multimodal.pfpRung1N(payload, scratch)
     assert(p1 >= 500000L && p1 <= 3000000L, s"pfp rung-1 pin $p1 out of bracket")
     // (no pfp rung-2 pin: past pfpRung1N the cogroup kernel is measured
     // dominant at every scale — see perceptualNearDup's ladder note)
-    // the pins MOVE with the configured fleet: a small-executor deployment
+    // the pins MOVE with the fleet's budgets: a small-executor deployment
     // flips to the survivable kernels earlier
+    assert(Dedup.jaccardGroupedN(payload / 10) == 20000L)
+    assert(Dedup.simhashRung2N(scratch / 10) < s2 / 3 + 1,
+      "scratch/10 must pull the rung-2 pin in by ~sqrt(10)")
+    assert(Multimodal.pfpRung1N(payload / 10, scratch / 10) < p1 / 3 + 1)
+    // adversarial big-memory/small-disk fleet: the ladder ordering must
+    // NOT invert (rung 0 is the most scratch-hungry plan — its own
+    // scratch ceiling, not the payload knee, must bound it)
+    val (bigMem, smallDisk) = (2000000000000L, 100000000000L)
+    assert(Dedup.simhashRung1N(bigMem, smallDisk) <= Dedup.simhashRung2N(smallDisk),
+      s"rung ladder inverted: ${Dedup.simhashRung1N(bigMem, smallDisk)} > " +
+        s"${Dedup.simhashRung2N(smallDisk)}")
+    assert(Dedup.simhashRung1N(bigMem, smallDisk) < 300000L,
+      "rung 0 must leave before its candidate mass spills a 100 GB scratch")
+    // degenerate budget (round-15 advice): below ~35 MB of scratch the
+    // rung-1 ceiling's LINEAR term binds and the raw formulas would
+    // invert — the pin's clamp must keep the ladder ordered even here
+    // (rung 0 hands off at the rung-2 boundary, never after it)
+    val tinyDisk = 10000000L // 10 MB
+    assert(Dedup.simhashRung1N(bigMem, tinyDisk) <= Dedup.simhashRung2N(tinyDisk),
+      s"degenerate-scratch ladder inverted: ${Dedup.simhashRung1N(bigMem, tinyDisk)} > " +
+        s"${Dedup.simhashRung2N(tinyDisk)}")
+  }
+
+  test("derived budget defaults follow the live heap and the scratch dirs' free space") {
+    import graft.ops.Resources
+    val heap = Runtime.getRuntime.maxMemory
+    assume(heap > 0 && heap < Long.MaxValue, "JVM reports no max heap")
+    assert(Resources.derivedPayloadDefault == heap + Resources.CACHE_HEADROOM_BYTES)
+    // the dirs the derivation reads: spark.local.dir, else java.io.tmpdir
+    val dirs = spark.conf.getOption("spark.local.dir")
+      .getOrElse(System.getProperty("java.io.tmpdir"))
+      .split(",").map(_.trim).filter(_.nonEmpty).distinct
+    def usable: Long = dirs.map(d => new java.io.File(d).getUsableSpace).sum
+    // free space can move while the derivation reads it; bracket the read
+    val before = usable
+    val derived = Resources.derivedScratchDefault(spark)
+    val after = usable
+    assert(derived >= math.min(before, after) && derived <= math.max(before, after),
+      s"derived scratch $derived outside the dirs' usable space [$before, $after]")
+    // a deployment's configured budgets replace the derived defaults
+    assert(Resources.payloadBudget(spark) == Resources.derivedPayloadDefault)
     try {
-      spark.conf.set("spark.graft.payloadBudgetBytes", "1340000000") // /10
+      spark.conf.set("spark.graft.payloadBudgetBytes", "1340000000")
       spark.conf.set("spark.graft.scratchBudgetBytes", "7800000000")
-      assert(Dedup.jaccardGroupedN(spark) == 20000L)
-      assert(Dedup.simhashRung2N(spark) < s2 / 3 + 1,
-        "scratch/10 must pull the rung-2 pin in by ~sqrt(10)")
-      assert(Multimodal.pfpRung1N(spark) < p1 / 3 + 1)
-      // adversarial big-memory/small-disk fleet: the ladder ordering must
-      // NOT invert (rung 0 is the most scratch-hungry plan — its own
-      // scratch ceiling, not the payload knee, must bound it)
-      spark.conf.set("spark.graft.payloadBudgetBytes", "2000000000000")
-      spark.conf.set("spark.graft.scratchBudgetBytes", "100000000000")
-      assert(Dedup.simhashRung1N(spark) <= Dedup.simhashRung2N(spark),
-        s"rung ladder inverted: ${Dedup.simhashRung1N(spark)} > ${Dedup.simhashRung2N(spark)}")
-      assert(Dedup.simhashRung1N(spark) < 300000L,
-        "rung 0 must leave before its candidate mass spills a 100 GB scratch")
-      // degenerate config (round-15 advice): below ~35 MB of scratch the
-      // rung-1 ceiling's LINEAR term binds and the raw formulas would
-      // invert — the accessor's clamp must keep the ladder ordered even
-      // here (rung 0 hands off at the rung-2 boundary, never after it)
-      spark.conf.set("spark.graft.payloadBudgetBytes", "2000000000000")
-      spark.conf.set("spark.graft.scratchBudgetBytes", "10000000") // 10 MB
-      assert(Dedup.simhashRung1N(spark) <= Dedup.simhashRung2N(spark),
-        s"degenerate-scratch ladder inverted: ${Dedup.simhashRung1N(spark)} > " +
-          s"${Dedup.simhashRung2N(spark)}")
+      assert(Resources.payloadBudget(spark) == 1340000000L)
+      assert(Resources.scratchBudget(spark) == 7800000000L)
     } finally {
       spark.conf.unset("spark.graft.payloadBudgetBytes")
       spark.conf.unset("spark.graft.scratchBudgetBytes")
