@@ -1823,8 +1823,8 @@ object TextAnalysis {
     decontamScrub(Tables.documents(spark, sfDir))
 
   /** Scrub against a DRIVER-HELD benchmark 3-gram set — the stateless-
-    * projection form of [[decontamScrub]] the streaming twin uses:
-    * membership is a per-row `array_intersect` against the literal set,
+    * projection form of [[decontamScrub]], kept as the property tests'
+    * reference for the join form (CurationProps): membership is a per-row `array_intersect` against the literal set,
     * so a document is scrubbed with no join, no shuffle, and no state
     * store. Bounded by the eval suite's size (the fixed-size-benchmark
     * argument every decontam variant here rests on); a many-suite union
@@ -3728,7 +3728,7 @@ object TextAnalysis {
     * ONE codegen'd projection (the weight array is a literal; the
     * per-token lookup and mean run inside an `aggregate` HOF), so
     * scoring shuffles NOTHING and runs unchanged on a stream (see
-    * [[graft.streaming.StreamingPipeline.dsirScoreStream]]).
+    * [[graft.streaming.StreamingPipeline.dsirScoreReplay]]).
     */
   def dsirScored(docs: DataFrame, model: Array[Double]): DataFrame =
     docs.withColumn("warr", typedLit(model.toSeq))

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The whole cron job (updatescript.py:221-241) as one batch run over
@@ -11,16 +11,19 @@ import org.apache.spark.sql.functions._
   * between steps can only cause re-processing, which the anti-joins absorb).
   *
   * Sink layout under `sinkDir`: one parquet dir per reference collection
-  * (FIXTURES.md §A.2). Append sinks are written idempotently — incoming
-  * LEFT ANTI JOIN sink-on-key, then append — so re-running any window is
-  * a no-op, exactly the reference's insert-if-absent contract
-  * (updatescript.py:62,87,166,...). Singletons (stats, lastUpdated) are
-  * overwritten in place (Q3: the stats docs are rolling, no history).
+  * (FIXTURES.md §A.2). Every write goes through [[Sink]]. Append sinks
+  * are written idempotently ([[Sink.appendNew]]: incoming LEFT ANTI JOIN
+  * sink-on-key, then append), so re-running any window is a no-op, exactly
+  * the reference's insert-if-absent contract (updatescript.py:62,87,166,...).
+  * Singletons (stats, lastUpdated) are replaced whole by a generation swap
+  * ([[Sink.replace]]; Q3: the stats docs are rolling, no history), so a
+  * run killed mid-write leaves the previous watermark readable instead of
+  * restarting from `bootstrapWm`.
   *
   * Scale posture: the anti-join keys the sink scan on the join column only
   * (column pruning); at 100 TB the sinks would be date-partitioned so the
   * incremental window prunes to the recent partitions. No driver-side data
-  * movement except the two singletons.
+  * movement except the watermark scalar.
   */
 object PipelineRunner {
 
@@ -32,68 +35,8 @@ object PipelineRunner {
 
   private def sinkPath(c: Config, name: String) = s"${c.sinkDir}/$name"
 
-  /** Hadoop-FS existence probe — works on any scheme the cluster mounts
-    * (file://, hdfs://, s3a://); a java.io.File check would silently
-    * report "missing" for every non-local sink.
-    */
-  def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def readSink(spark: SparkSession, c: Config, name: String): Option[DataFrame] = {
-    val p = sinkPath(c, name)
-    if (pathExists(spark, p)) Some(spark.read.parquet(p)) else None
-  }
-
-  /** Idempotent append: anti-join on `key` against current sink content,
-    * checkpoint the delta (cuts lineage so the append never scans the very
-    * files it is writing), append, return appended row count.
-    *
-    * `partitionDate` (an expression over the incoming rows) makes the sink
-    * date-partitioned (`p_date=.../`), and `prune` restricts the anti-join's
-    * sink scan to the partitions a replay could collide with. Every incoming
-    * row satisfies `createdAt > wm`, and a key can only collide with the
-    * row that originally carried it (same key ⇒ same row ⇒ same date), so
-    * scanning `p_date >= date(wm)` is exhaustive — at 100 TB the dedup
-    * probe reads days-since-watermark, not years of sink history.
-    */
-  private def appendNew(spark: SparkSession, c: Config, name: String,
-      incoming: DataFrame, key: Seq[String],
-      partitionDate: Option[org.apache.spark.sql.Column] = None,
-      prune: Option[org.apache.spark.sql.Column] = None): Long = {
-    val withPart = partitionDate match {
-      case Some(d) => incoming.withColumn("p_date", d)
-      case None => incoming
-    }
-    val delta = readSink(spark, c, name) match {
-      case Some(existing0) =>
-        val existing = prune.foldLeft(existing0)((df, p) => df.filter(p))
-        withPart.join(existing.select(key.map(col): _*).distinct(), key, "left_anti")
-      case None => withPart
-    }
-    val materialized = delta.localCheckpoint(true)
-    val n = materialized.count()
-    if (n > 0) {
-      val w = materialized.write.mode(SaveMode.Append)
-      (if (partitionDate.isDefined) w.partitionBy("p_date") else w)
-        .parquet(sinkPath(c, name))
-    }
-    n
-  }
-
-  private def overwriteSingleton(spark: SparkSession, c: Config, name: String,
-      df: DataFrame): Unit = {
-    // singletons are a handful of rows: materialize driver-side, then
-    // overwrite — the one place a collect is the right call (SURVEY §7.5.6)
-    val rows = df.collect().toSeq
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), df.schema)
-      .write.mode(SaveMode.Overwrite).parquet(sinkPath(c, name))
-  }
-
   def currentWatermark(spark: SparkSession, c: Config): String =
-    readSink(spark, c, "lastUpdated")
+    Sink.read(spark, sinkPath(c, "lastUpdated"))
       .map(_.select(col("lastUpdated").cast("string")).head().getString(0))
       .getOrElse(c.bootstrapWm)
 
@@ -106,7 +49,8 @@ object PipelineRunner {
     val days = spark.range(2).select(col("id").as("chain")).crossJoin(
       spark.sql(s"SELECT explode(sequence(to_date('$wm'), to_date('${c.asOfDate}'), interval 1 day)) AS price_date"))
     val gapPrices = days.join(price, Seq("chain", "price_date"))
-    val priceAppended = appendNew(spark, c, "priceInUSD", gapPrices, Seq("chain", "price_date"))
+    val priceAppended = Sink.appendNew(gapPrices, sinkPath(c, "priceInUSD"),
+      Seq("chain", "price_date"), None, None)
 
     // step 2 — tx enrichment (updatescript.py:57-108), dedup by _id;
     // sink date-partitioned, anti-join pruned to the replayable window.
@@ -114,12 +58,12 @@ object PipelineRunner {
       .select(col("chain"), col("price_date"), col("price"))
     val enriched = ReferencePipeline.enrich(Tables.txSince(spark, c.sfDir, wm), priceSink)
     val wmDate = to_date(lit(wm).cast("timestamp"))
-    val txAppended = appendNew(spark, c, "transactiondatas", enriched, Seq("_id"),
+    val txAppended = Sink.appendNew(enriched, sinkPath(c, "transactiondatas"), Seq("_id"),
       partitionDate = Some(to_date(col("createdAt"))),
       prune = Some(col("p_date") >= wmDate))
 
-    // step 3 — rolling stats singletons (Q3: overwrite, no history).
-    overwriteSingleton(spark, c, "stats", ReferencePipeline.statsRollup(spark, c.sfDir))
+    // step 3 — rolling stats singletons (Q3: replaced, no history).
+    Sink.replace(ReferencePipeline.statsRollup(spark, c.sfDir).coalesce(1), sinkPath(c, "stats"))
 
     // step 4 — advance the watermark (updatescript.py:149-152). Data-derived:
     // max processed event time, so reprocessing windows stay contiguous.
@@ -127,14 +71,13 @@ object PipelineRunner {
     val newWm = batch.agg(max(col("createdAt")).cast("string")).head().getString(0)
     val effectiveWm = Option(newWm).getOrElse(wm)
     import spark.implicits._
-    overwriteSingleton(spark, c, "lastUpdated",
-      Seq(effectiveWm).toDF("lastUpdated")
-        .select(col("lastUpdated").cast("timestamp")))
+    Sink.replace(Seq(effectiveWm).toDF("lastUpdated")
+      .select(col("lastUpdated").cast("timestamp")).coalesce(1), sinkPath(c, "lastUpdated"))
 
     // step 5 — routing (updatescript.py:154-218); runs on the watermark
     // captured at start (Q4), against current AUM sink state for first-seen.
     val successful = batch.filter(col("successful"))
-    val priorStashes = readSink(spark, c, "AUMdata").map(_.select("chain", "stashId").distinct())
+    val priorStashes = Sink.read(spark, sinkPath(c, "AUMdata")).map(_.select("chain", "stashId").distinct())
     val routed = Map(
       "nominationsupdateddata" ->
         Routing.nominationsRows(successful.filter(col("chain") === 0)),
@@ -144,7 +87,7 @@ object PipelineRunner {
         Routing.kusamaNominationsRows(successful.filter(col("chain") === 1)),
       "AUMdata" -> Routing.aumRows(successful, priorStashes))
     val routedCounts = routed.map { case (name, df) =>
-      name -> appendNew(spark, c, name, df, Seq("_id"),
+      name -> Sink.appendNew(df, sinkPath(c, name), Seq("_id"),
         partitionDate = Some(to_date(col("createdAt"))),
         prune = Some(col("p_date") >= wmDate))
     }

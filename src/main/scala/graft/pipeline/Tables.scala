@@ -132,29 +132,39 @@ object Tables {
       streamRead(spark, schema, s"$sfDir/{events.parquet}"))
   }
 
-  /** Events with `ts > wm`, with the watermark predicate applied in RAW
-    * nanos space *before* the µs conversion. `timestamp_micros(ts div 1000)
-    * > wm` is an expression over the column, which Parquet cannot push —
-    * at 100 TB that is a full scan. A plain long comparison pushes down and
-    * row-group min/max stats skip everything before the watermark, which is
-    * the entire point of incremental processing.
-    * floor(ns/1000) > wm_µs  ⇔  ns > wm_µs*1000 + 999.
+  /** Events with `ts > wm` — the incremental batch (see [[eventsCut]]). */
+  def eventsSince(spark: SparkSession, sfDir: String, wm: String): DataFrame =
+    eventsCut(spark, sfDir, wm, after = true)
+
+  /** The complement slice: events with `ts <= wm` — the HISTORY side of an
+    * incremental rollup (the rows a materialized view has already
+    * absorbed).
     */
-  def eventsSince(spark: SparkSession, sfDir: String, wm: String): DataFrame = {
+  def eventsUntil(spark: SparkSession, sfDir: String, wm: String): DataFrame =
+    eventsCut(spark, sfDir, wm, after = false)
+
+  /** One side of the watermark, with the predicate applied to the RAW
+    * column in its own vintage's space *before* the normalization.
+    * `timestamp_micros(ts div 1000) > wm` is an expression over the
+    * column, which Parquet cannot push — at 100 TB that is a full scan.
+    * A plain literal comparison pushes down and row-group min/max stats
+    * skip everything on the far side of the watermark, which is the
+    * entire point of incremental processing. Raw nanos:
+    * floor(ns/1000) > wm_µs  ⇔  ns > wm_µs*1000 + 999 (and `<=` likewise).
+    * NTZ: the wall clock, which under the pinned UTC session equals the
+    * instant.
+    */
+  private def eventsCut(spark: SparkSession, sfDir: String, wm: String,
+      after: Boolean): DataFrame = {
     val df = eventsRaw(spark, sfDir)
     val wmTs = java.sql.Timestamp.valueOf(wm)
-    if (tsIsRawNanos(df)) {
-      val wmMicros = wmTs.getTime * 1000L // whole-second watermark: no sub-ms part
-      df.filter(col("ts") > lit(wmMicros * 1000L + 999L))
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    } else if (tsIsNtz(df)) {
-      // Filter in NTZ space (a plain literal comparison Parquet can push;
-      // min/max row-group stats skip the pre-watermark history), THEN cast.
-      // Under the pinned UTC session the NTZ wall-clock equals the instant.
-      df.filter(col("ts") > lit(wmTs).cast("timestamp_ntz"))
-        .withColumn("ts", col("ts").cast("timestamp"))
-    } else df.filter(col("ts") > lit(wmTs))
+    val bound = // the watermark is whole seconds: no sub-ms part to carry
+      if (tsIsRawNanos(df)) lit(wmTs.getTime * 1000L * 1000L + 999L)
+      else if (tsIsNtz(df)) lit(wmTs).cast("timestamp_ntz")
+      else lit(wmTs)
+    normalizeEventsTs(df.filter(if (after) col("ts") > bound else col("ts") <= bound))
   }
+
   /** The documents table as a FILE STREAM — the replay shape for the
     * text-family streaming twins (same brace-glob trick as
     * [[eventsStream]]; documents has no vintage hazard).
@@ -180,24 +190,6 @@ object Tables {
   private[graft] def customerStream(spark: SparkSession, sfDir: String): DataFrame = {
     val schema = read(spark, sfDir, "customer").schema
     streamRead(spark, schema, s"$sfDir/{customer.parquet}")
-  }
-
-  /** The complement slice: events with `ts <= wm` — the HISTORY side of an
-    * incremental rollup (the rows a materialized view has already
-    * absorbed). Same raw-space pushdown as [[eventsSince]]:
-    * floor(ns/1000) <= wm_µs  ⇔  ns <= wm_µs*1000 + 999.
-    */
-  def eventsUntil(spark: SparkSession, sfDir: String, wm: String): DataFrame = {
-    val df = eventsRaw(spark, sfDir)
-    val wmTs = java.sql.Timestamp.valueOf(wm)
-    if (tsIsRawNanos(df)) {
-      val wmMicros = wmTs.getTime * 1000L
-      df.filter(col("ts") <= lit(wmMicros * 1000L + 999L))
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    } else if (tsIsNtz(df)) {
-      df.filter(col("ts") <= lit(wmTs).cast("timestamp_ntz"))
-        .withColumn("ts", col("ts").cast("timestamp"))
-    } else df.filter(col("ts") <= lit(wmTs))
   }
 
   def documents(spark: SparkSession, sfDir: String): DataFrame = read(spark, sfDir, "documents")

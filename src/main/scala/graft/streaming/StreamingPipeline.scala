@@ -6,18 +6,17 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.pipeline.{ReferencePipeline, Tables}
+import graft.pipeline.{Sink, Tables}
 
 /** The reference cron job is batch-incremental with a manual watermark —
   * exactly the shape of Structured Streaming with an AvailableNow trigger
   * (SURVEY.md §2.10). This module is the streaming expression of the same
   * operators, so the engine covers both deployment modes:
   *
-  *  - [[enrichStream]]: step 2 as a stream-static broadcast join — the
-  *    price dim stays a static (periodically reloaded) table, new
-  *    transactions stream through; checkpointing replaces the lastUpdated
-  *    bookmark, and the idempotent-append contract becomes exactly-once
-  *    sink semantics via foreachBatch + anti-join.
+  *  - [[enrichJoinStream]]: step 2 as a stream-stream join — both the
+  *    transactions and the price dim arrive live; checkpointing replaces
+  *    the lastUpdated bookmark, and the idempotent-append contract becomes
+  *    exactly-once sink semantics via foreachBatch + [[Sink.appendNew]].
   *  - [[dailyVolume]]: the reference's 1-day buckets as a true event-time
   *    tumbling window with lateness bounded by the watermark.
   *  - [[firstSeen]]: the W1 first-seen-per-stash state (updatescript.py:175)
@@ -32,17 +31,6 @@ object StreamingPipeline {
 
   case class FirstSeen(chain: Long, stashId: Long, _id: Long,
       firstSeenAt: Timestamp, firstStake: Double)
-
-  /** The tx projection applies unchanged to a streaming events frame —
-    * same columns, same semantics as the batch view.
-    */
-  def txStream(events: DataFrame): DataFrame = Tables.txFrom(events)
-
-  /** Step 2 as stream-static join: `price` is a static dim (broadcast),
-    * the streaming side never shuffles for the join.
-    */
-  def enrichStream(txStream: DataFrame, price: DataFrame): DataFrame =
-    ReferencePipeline.enrich(txStream, price)
 
   /** A price-dimension arrival: `price_ts` is the START of the day the
     * price covers (the event time the join state is bounded by).
@@ -125,7 +113,7 @@ object StreamingPipeline {
     * decimals). Exact across batches for the same reason as the other
     * replays: the fixture replays as ts-sortable micro-batches, so no
     * update is ever dropped as late. The sink is the PARTITIONED merge
-    * ([[mergeByKeyPartitioned]], partitioned by `chain` — the key
+    * ([[Sink.mergeByKeyPartitioned]], partitioned by `chain` — the key
     * prefix): each batch rewrites only the chain partitions it touched,
     * so the replay exercises the fact-scale MERGE form end-to-end
     * against the oracle, not just the constant-size dashboard form.
@@ -138,129 +126,9 @@ object StreamingPipeline {
       .select(col("day").cast("date").cast("string").as("day"), col("chain"),
         col("n_tx"), col("total_stake"))
     r.eachBatch(stream, OutputMode.Update(), stream) { (batch, _) =>
-      mergeByKeyPartitioned(batch, r.out, Seq("day", "chain"), "chain")
+      Sink.mergeByKeyPartitioned(batch, r.out, Seq("day", "chain"), "chain")
     }.select(col("day"), col("chain").cast("long").as("chain"), col("n_tx"),
       round(col("total_stake"), 4).as("total_stake"))
-  }
-
-  /** MERGE an update-mode micro-batch into a keyed parquet sink:
-    * matched keys replaced by the batch's rows (an update-mode
-    * aggregation emits each changed group at its NEW running total, so
-    * last write wins is the correct semantics), unmatched sink rows
-    * kept, new keys inserted — [[graft.ops.Relational.keyedMergeUpsert]]
-    * (the property-tested MERGE shape) applied per micro-batch: the
-    * foreachBatch upsert every update-mode aggregation needs to
-    * materialize a dashboard table.
-    *
-    * GENERATION SWAP, never delete-in-place: the merged frame writes to
-    * a staging dir (it reads the live one, so writing over it would
-    * both need a pre-materialization and — worse — a failure
-    * mid-overwrite would lose every previously merged key while leaving
-    * the dir present, so the retried batch would silently merge against
-    * partial remains). The staged write can fail harmlessly; only after
-    * it commits does the swap retire the live generation (live → .old,
-    * staging → live, drop .old). The one crash window — after live is
-    * renamed away, before staging lands — is healed on the next call by
-    * restoring `.old`, so foreachBatch's at-least-once retry always
-    * merges against a complete prior generation.
-    *
-    * FILESYSTEM ASSUMPTION: the crash-safety argument above requires
-    * `FileSystem.rename` to be an atomic directory move — true on HDFS
-    * and local/POSIX, FALSE on object stores (s3a rename is a per-file
-    * copy+delete), where a failure mid-"rename" can leave a PARTIAL live
-    * dir that the next call would trust as a complete generation. On an
-    * object store, point the sink at a table format whose commit is a
-    * metadata swap (Iceberg/Delta) or front the swap with a commit-marker
-    * protocol — do not rely on this rename. (Unlike
-    * [[decontamScrubReplay]]'s guard, which holds for any sink scheme,
-    * this one is rename-atomicity-scoped — round-11 advice.)
-    *
-    * SCALE CAVEAT: each call rewrites the WHOLE sink — correct and
-    * constant-cost for this consumer (|days×chains| rows), the
-    * scale-killer form for a fact-scale keyed sink. At fact scale use
-    * [[mergeByKeyPartitioned]], which rewrites only the key-prefix
-    * partitions the batch touches.
-    */
-  def mergeByKey(batch: Dataset[org.apache.spark.sql.Row], sinkDir: String,
-      key: Seq[String]): Unit = {
-    val sp = batch.sparkSession
-    val live = new org.apache.hadoop.fs.Path(sinkDir)
-    val staging = new org.apache.hadoop.fs.Path(sinkDir + ".staging")
-    val old = new org.apache.hadoop.fs.Path(sinkDir + ".old")
-    val fs = live.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live) && fs.exists(old)) fs.rename(old, live) // heal
-    fs.delete(staging, true) // leftover of a failed staged write
-    val merged =
-      if (fs.exists(live))
-        graft.ops.Relational.keyedMergeUpsert(
-          sp.read.parquet(sinkDir), batch.toDF(), key)
-      else batch.toDF()
-    merged.write.mode("overwrite").parquet(staging.toString)
-    fs.delete(old, true)
-    if (fs.exists(live)) fs.rename(live, old)
-    fs.rename(staging, live)
-    fs.delete(old, true)
-  }
-
-  /** PARTITION-PRUNED streaming MERGE — the fact-scale form of
-    * [[mergeByKey]]: the sink is laid out as parquet partitioned by
-    * `partCol` (a key prefix — here `chain`; at fact scale a
-    * day-or-hash bucket of the key), and each micro-batch rewrites ONLY
-    * the partitions it touches, via dynamic partition overwrite:
-    *
-    *  1. the batch's distinct `partCol` values name the touched
-    *     partitions (driver-side, bounded by touched-partition count —
-    *     an update-mode batch touches few);
-    *  2. only those partitions are read back (the `isin` filter prunes
-    *     at the directory level — `PartitionFilters`, zero bytes read
-    *     from untouched partitions);
-    *  3. [[graft.ops.Relational.keyedMergeUpsert]] merges batch into
-    *     the subset (schema re-aligned: partition-value read-back
-    *     infers narrow integer types);
-    *  4. `partitionOverwriteMode=dynamic` overwrite writes back ONLY
-    *     the partitions present in the merged frame — untouched
-    *     partitions' files stay byte-identical on disk
-    *     (spec-asserted in StreamingSinkSpec).
-    *
-    * So per-batch cost is O(touched partitions), not O(sink) — the
-    * difference between a dashboard-table merge and a 100 TB keyed
-    * fact sink where full-generation rewrite is the scale-killer.
-    * Crash safety: Spark's dynamic overwrite DELETES a touched
-    * partition's existing contents during commit before moving the
-    * staged files in — a crash inside that delete-then-commit window
-    * loses the old generation even on HDFS/local (weaker than
-    * [[mergeByKey]]'s .old backup-and-restore protocol). The recovery
-    * story is the checkpoint, not the filesystem: foreachBatch's
-    * at-least-once retry re-reads the SAME batch from the checkpointed
-    * offsets and re-derives the whole touched partition from
-    * (surviving sink state ∪ batch), and replace-on-match with
-    * identical rows is a fixpoint — so the sink converges on retry;
-    * only a crash with no subsequent retry leaves a partition torn.
-    * Deployments needing the stronger single-commit guarantee should
-    * front this with a metadata-commit table format (which also lifts
-    * the [[mergeByKey]] s3a non-atomic-rename caveat).
-    */
-  def mergeByKeyPartitioned(batch: Dataset[org.apache.spark.sql.Row],
-      sinkDir: String, key: Seq[String], partCol: String): Unit = {
-    val sp = batch.sparkSession
-    val live = new org.apache.hadoop.fs.Path(sinkDir)
-    val fs = live.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(live) &&
-      fs.listStatus(live).exists(_.getPath.getName.startsWith(s"$partCol="))
-    val merged =
-      if (exists) {
-        val touched = batch.select(col(partCol)).distinct()
-          .collect().map(_.get(0)).toSeq
-        val subset = sp.read.parquet(sinkDir)
-          .filter(col(partCol).isin(touched: _*))
-        val aligned = subset.select(batch.schema.fields
-          .map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-        graft.ops.Relational.keyedMergeUpsert(aligned, batch.toDF(), key)
-      } else batch.toDF()
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol)
-      .parquet(sinkDir)
   }
 
   /** GROUP-BY-day twin of the [[dailyVolumeReplay]] sink. */
@@ -271,53 +139,12 @@ object StreamingPipeline {
        |       round(sum(stake), 4) AS total_stake
        |FROM tx GROUP BY 1, 2""".stripMargin
 
-  /** Exactly-once idempotent parquet sink for a streaming frame: per
-    * micro-batch, LEFT ANTI join the sink on `key`, then append — the
-    * foreachBatch + MERGE pattern (SURVEY.md §2.10). Checkpointing gives
-    * at-least-once delivery; the anti-join makes the replayed batch a
-    * no-op, which together is exactly-once in the sink — the streaming twin
-    * of the cron job's insert-if-absent guards (updatescript.py:62).
-    */
-  def writeIdempotent(df: DataFrame, sinkDir: String, key: Seq[String],
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta =
-          if (graft.pipeline.PipelineRunner.pathExists(spark, sinkDir)) {
-            val existing = spark.read.parquet(sinkDir)
-            batch.join(existing.select(key.map(col): _*).distinct(), key, "left_anti")
-          } else batch.toDF()
-        val materialized = delta.localCheckpoint(true)
-        if (materialized.count() > 0)
-          materialized.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .start()
-
-  /** Streaming exact dedup — the firehose twin of `Dedup.exactGroups`:
-    * emit only the FIRST document carrying each normalized-content
-    * fingerprint. The batch operator's groupBy has no end-of-stream to
-    * wait for, so the streaming form keeps seen-fingerprint state and
-    * bounds it with the event-time watermark
-    * (`dropDuplicatesWithinWatermark`): duplicates later than the
-    * lateness horizon age out of state instead of growing it forever —
-    * the only state policy that survives an unbounded crawl.
-    */
-  def dedupStream(docs: DataFrame, tsCol: String,
-      lateness: String = "1 hour"): DataFrame =
-    docs
-      .withColumn("fp", graft.ops.Dedup.exactFp(col("text")))
-      .withWatermark(tsCol, lateness)
-      .dropDuplicatesWithinWatermark("fp")
-
   case class DocArrival(doc_id: Long, ts: Timestamp, fp: String)
   case class FpGroup(fp: String, keep_id: Long, dup_count: Long)
 
-  /** Streaming exact-dedup GROUPS with keyed state — the form of
-    * [[dedupStream]] that faces the oracle: `dropDuplicatesWithinWatermark`
-    * keeps an ARBITRARY first row per fingerprint within a micro-batch
+  /** Streaming exact-dedup GROUPS with keyed state — the firehose twin of
+    * `Dedup.exactGroups`, in the form that faces the oracle:
+    * `dropDuplicatesWithinWatermark` keeps an ARBITRARY first row per fingerprint within a micro-batch
     * (partition order, not event order), which production dedup happily
     * accepts but an exact-hash differential cannot. Here the state per
     * fingerprint is (winner's event-time key, running count); each
@@ -392,7 +219,7 @@ object StreamingPipeline {
       .as[DocArrival]
     val stream = dedupGroupsStream(arrivals).toDF()
     r.eachBatch(stream, OutputMode.Update(), stream) { (batch, _) =>
-      mergeByKeyPartitioned(
+      Sink.mergeByKeyPartitioned(
         batch.withColumn("fp_p", substring(col("fp"), 1, 1)),
         r.out, Seq("fp"), "fp_p")
     }.select(col("fp"), col("keep_id"), col("dup_count"))
@@ -495,86 +322,18 @@ object StreamingPipeline {
       .agg(count(lit(1)).as("n_bands"))
   }
 
-  /** Streaming corpus gate — the batch quality/sampling operators applied
-    * UNCHANGED to a document stream: [[graft.ops.TextAnalysis.quality]]
-    * and [[graft.ops.TextAnalysis.hashSample]]'s bucket predicate are
-    * stateless projections, so the same code runs in both deployment
-    * modes with zero state store — the filter a streaming ingest applies
-    * before handing documents to the (stateful) streaming dedup. Keeps
-    * documents whose quality score clears `minScore` AND whose md5 bucket
-    * falls under `samplePct`.
-    */
-  def corpusGateStream(docs: DataFrame,
-      minScore: Double = graft.ops.TextAnalysis.QUALITY_MIN,
-      samplePct: Int = 100): DataFrame = {
-    val bucket = graft.ops.TextAnalysis.md5Bucket(col("doc_id")) % 100
-    graft.ops.TextAnalysis.quality(docs)
-      .filter(col("quality_score") >= minScore && bucket < samplePct)
-  }
-
-  /** Streaming decontamination — the batch [[graft.ops.TextAnalysis
-    * .decontam]] shape adapted to a stream: the benchmark's distinct
-    * shingle hashes come from a STATIC frame (eval suites are fixed and
-    * small), collected once at query build and riding into the stream
-    * as a constant sorted array. Each document's overlap count is then
-    * the codegen'd `sorted_intersect_count` of its own shingle-hash set
-    * against that constant — a STATELESS projection + filter, so it
-    * composes with any downstream stateful stage (dedup, sessionize)
-    * without adding a state store of its own. Keeps clean documents.
-    */
-  def decontamStream(docs: DataFrame, bench: DataFrame): DataFrame = {
-    val spark = bench.sparkSession
-    graft.functions.TextFunctions.register(spark)
-    graft.functions.ArrayFunctions.register(spark)
-    val benchHashes: Seq[Long] = bench
-      .select(explode(
-        call_function("shingle_hashes", split(col("text"), "\\s+"))).as("h"))
-      .distinct().orderBy(col("h"))
-      .collect().map(_.getLong(0)).toSeq
-    docs
-      .withColumn("shs",
-        call_function("shingle_hashes", split(col("text"), "\\s+")))
-      .withColumn("n_contam",
-        call_function("sorted_intersect_count", col("shs"),
-          typedLit(benchHashes)).cast("long"))
-      .filter(col("n_contam") === 0)
-      .drop("shs")
-  }
-
-  /** Streaming decontamination SCRUB — the redact-don't-drop twin of
-    * [[decontamStream]] and the online form of
-    * [[graft.ops.TextAnalysis.decontamScrub]]: the benchmark 3-gram set
-    * comes from the STANDING corpus (collected once at query build —
-    * the same fixed-size-eval-suite bound every decontam variant rests
-    * on), and each arriving document is scrubbed by one stateless array
-    * projection: contaminated spans redacted, the remainder
-    * fingerprinted. No state store, no shuffle, any output mode;
-    * row-identical to the batch scrub over the same corpus (spec'd).
-    */
-  def scrubStream(docs: DataFrame, standing: DataFrame): DataFrame = {
-    val bench: Seq[String] = Tables.shingles(
-        standing.filter(col("doc_id") % graft.ops.TextAnalysis.DECONTAM_MOD === 0))
-      .select(col("shingle")).distinct().orderBy(col("shingle"))
-      .collect().map(_.getString(0)).toSeq
-    graft.ops.TextAnalysis.scrubAgainstSet(docs, bench)
-  }
-
   /** Streaming IVF ingest — the index-build twin of the batch
     * [[graft.ops.Similarity.kmeansCells]]: the coarse quantizer fits
     * once on the STANDING corpus (the model is K·dim driver-held
-    * constants, exactly like the batch path), and each arriving vector
-    * is routed to its cell by a stateless codegen projection — no state
-    * store, any output mode. This is how a vector index grows in
-    * production: the quantizer is refit offline; ingest only assigns.
-    * Emits (vec_id, cell) plus the vector for the downstream writer.
+    * constants, exactly like the batch path) and arrives here as its
+    * assignment column (`Similarity.cellAssigner`, or the FitStore-served
+    * `sharedCellAssigner`); each arriving vector is routed to its cell by
+    * a stateless codegen projection — no state store, any output mode.
+    * This is how a vector index grows in production: the quantizer is
+    * refit offline; ingest only assigns. Emits (vec_id, cell) plus the
+    * vector for the downstream writer.
     */
-  def ivfAssignStream(vectors: DataFrame, corpus: DataFrame): DataFrame =
-    ivfAssignStreamWith(vectors, graft.ops.Similarity.cellAssigner(corpus))
-
-  /** [[ivfAssignStream]] against a pre-built assignment column (the
-    * serving form: quantizer loaded from the FitStore, not refit).
-    */
-  def ivfAssignStreamWith(vectors: DataFrame,
+  def ivfAssignStream(vectors: DataFrame,
       assign: org.apache.spark.sql.Column): DataFrame =
     graft.ops.Similarity.withNorm(vectors)
       .withColumn("cell", assign)
@@ -594,7 +353,7 @@ object StreamingPipeline {
   def ivfAssignReplay(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): DataFrame = Replay(spark, "ivf_assign_replay") { r =>
     val assign = graft.ops.Similarity.sharedCellAssigner(spark, sfDir)
-    r.files(ivfAssignStreamWith(Tables.embeddingsStream(spark, sfDir), assign)
+    r.files(ivfAssignStream(Tables.embeddingsStream(spark, sfDir), assign)
       .select(col("vec_id"), col("cell")))
   }
 
@@ -1034,7 +793,7 @@ object StreamingPipeline {
         graft.ops.Overlap.start(Privacy.sharedClassCounts(spark, sfDir,
           "privacy_qik_st", Privacy.qiK,
           Tables.customer(spark, sfDir).filter(col("c_custkey") % 2 === 0)))) { (batch, _) =>
-      mergeByKey(batch, r.out, Seq("qi"))
+      Sink.mergeByKey(batch, r.out, Seq("qi"))
     }
     Privacy.kHistogram(
       Privacy.mergeCounts(standing, counts).select(col("qi"), col("k")))
@@ -1064,7 +823,7 @@ object StreamingPipeline {
         graft.ops.Overlap.start(Privacy.sharedClassCounts(spark, sfDir,
           "privacy_qiseg_st", Privacy.qiSeg,
           Tables.customer(spark, sfDir).filter(col("c_custkey") % 2 === 0)))) { (batch, _) =>
-      mergeByKey(batch, r.out, Seq("qi", "seg"))
+      Sink.mergeByKey(batch, r.out, Seq("qi", "seg"))
     }
     Privacy.lHistogram(Privacy.mergeCounts(standing, counts))
   }
@@ -1090,7 +849,7 @@ object StreamingPipeline {
     // standing ladder fit is stream-independent — overlap with the drain
     val (counts, standing) = r.eachBatchWith(stream, OutputMode.Update(), stream,
         graft.ops.Overlap.start(Privacy.sharedLadderCounts(spark, sfDir))) { (batch, _) =>
-      mergeByKey(batch, r.out, Seq("level", "qi"))
+      Sink.mergeByKey(batch, r.out, Seq("level", "qi"))
     }
     Privacy.ladderRollup(
       standing.unionByName(counts)
@@ -1100,24 +859,18 @@ object StreamingPipeline {
   /** Streaming index-drift monitor — the online half of the batch
     * [[graft.ops.Similarity.indexDrift]]: the drift quantizer fits once
     * on the STANDING corpus (same fit rule as the batch report's
-    * prior-half fit; the model is K·dim driver-held constants), each
-    * arriving vector is assigned and scored by stateless codegen
-    * projections, and the arriving stream's per-cell occupancy and
-    * tightness is a streaming aggregation whose state is bounded at K
-    * rows — emits exactly the (cell, n_new, avg_cos_new) numbers the
-    * batch report sets against the standing index's own. This is how
-    * drift monitoring runs in production: refit offline, watch the
-    * ingest firehose online, alarm when a cell's numbers walk.
+    * prior-half fit; the model is K·dim driver-held constants) and
+    * arrives here as (cell, cos) scorer columns
+    * (`Similarity.driftScorerCols`, or the FitStore-served
+    * `sharedDriftScorer`); each arriving vector is assigned and scored by
+    * stateless codegen projections, and the arriving stream's per-cell
+    * occupancy and tightness is a streaming aggregation whose state is
+    * bounded at K rows — emits exactly the (cell, n_new, avg_cos_new)
+    * numbers the batch report sets against the standing index's own.
+    * This is how drift monitoring runs in production: refit offline,
+    * watch the ingest firehose online, alarm when a cell's numbers walk.
     */
-  def indexDriftStream(vectors: DataFrame, corpus: DataFrame): DataFrame = {
-    val (cellCol, cosCol) = graft.ops.Similarity.driftScorerCols(corpus)
-    indexDriftStreamWith(vectors, cellCol, cosCol)
-  }
-
-  /** [[indexDriftStream]] against pre-built (cell, cos) scorer columns
-    * (the serving form: standing quantizer loaded, not refit).
-    */
-  def indexDriftStreamWith(vectors: DataFrame,
+  def indexDriftStream(vectors: DataFrame,
       cellCol: org.apache.spark.sql.Column,
       cosCol: org.apache.spark.sql.Column): DataFrame =
     graft.ops.Similarity.withNorm(vectors)
@@ -1144,26 +897,14 @@ object StreamingPipeline {
     val (cellCol, cosCol) = graft.ops.Similarity.sharedDriftScorer(spark, sfDir)
     val arrivals = Tables.embeddingsStream(spark, sfDir)
       .filter(col("vec_id") % 2 === 1)
-    val stream = indexDriftStreamWith(arrivals, cellCol, cosCol)
+    val stream = indexDriftStream(arrivals, cellCol, cosCol)
     r.eachBatch(stream, OutputMode.Complete(), stream) { (batch, _) =>
       batch.write.mode("overwrite").parquet(r.out)
     }.select(col("cell"), col("n_new"), col("avg_cos_new"))
   }
 
-  /** Streaming DSIR scoring — the online half of the batch
-    * [[graft.ops.TextAnalysis.dsirScores]]: the importance model fits
-    * once on the STANDING corpus ([[graft.ops.TextAnalysis.dsirModel]],
-    * 64 driver-held doubles), and each arriving document is scored by
-    * the same zero-shuffle projection the batch path uses — no state
-    * store, any output mode. This is how importance-based data selection
-    * runs in production: refit the cheap model offline, score the
-    * firehose online, keep what clears the bar downstream.
-    */
-  def dsirScoreStream(docs: DataFrame, corpus: DataFrame): DataFrame =
-    graft.ops.TextAnalysis.dsirScored(docs,
-      graft.ops.TextAnalysis.dsirModel(corpus))
-
-  /** The ORACLE-GATED replay of [[dsirScoreStream]]: the whole corpus
+  /** The ORACLE-GATED streaming DSIR scoring — the online half of the
+    * batch [[graft.ops.TextAnalysis.dsirScores]]: the whole corpus
     * arrives as a file stream and every document is scored by the
     * session-shared standing importance model (the same
     * FitStore-persisted 64 doubles the batch `text_dsir` selection
@@ -1177,24 +918,6 @@ object StreamingPipeline {
       sfDir: String): DataFrame = Replay(spark, "dsir_score_replay") { r =>
     val model = graft.ops.TextAnalysis.sharedDsirModel(spark, sfDir)
     r.files(graft.ops.TextAnalysis.dsirScored(Tables.documentsStream(spark, sfDir), model))
-  }
-
-  /** Streaming mixture gate — the sampling half of the batch
-    * [[graft.ops.TextAnalysis.mixSample]] on a document stream: the
-    * per-language rates come from a profile of the STANDING corpus
-    * (rates are corpus statistics — a stream cannot know its own totals
-    * in advance), and the md5-bucket draw against rate·2³² is a
-    * stateless projection + filter, so the gate adds no state store.
-    * Unknown languages drop, matching the batch report's inner join.
-    */
-  def mixGateStream(docs: DataFrame, rates: Map[String, Double]): DataFrame = {
-    val bucket = graft.ops.TextAnalysis.md5Bucket(col("doc_id"))
-    val rateCol = rates.foldLeft(lit(Double.NaN)) { case (acc, (lang, r)) =>
-      when(col("lang") === lang, lit(r)).otherwise(acc)
-    }
-    docs.withColumn("rate", rateCol)
-      .filter(!isnan(col("rate")) &&
-        bucket.cast("double") < col("rate") * lit(4294967296.0))
   }
 
   /** Streaming anomaly flags — the monitoring twin of the batch
@@ -1247,33 +970,17 @@ object StreamingPipeline {
     val stream = anomalyStream(Tables.eventsStream(spark, sfDir),
       Tables.events(spark, sfDir))
     r.eachBatch(stream, OutputMode.Update(), stream) { (batch, _) =>
-      mergeByKey(batch, r.out, Seq("event_type", "day"))
+      Sink.mergeByKey(batch, r.out, Seq("event_type", "day"))
     }.select(col("event_type"), col("day"), col("n_events"),
       col("z_score"), col("is_anomaly"))
   }
-
-  /** Streaming sessionization — the stateful twin of the batch
-    * lag+running-sum `Relational.userSessions`: `session_window` merges
-    * events into per-user sessions that close after `gap` of silence,
-    * with state finalized (and emitted, in append mode) once the
-    * watermark passes the session end. One shuffle on the session key;
-    * session state lives in the state store, never on the driver.
-    */
-  def userSessionsStream(events: DataFrame, gap: String = "30 minutes",
-      lateness: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(session_window(col("ts"), gap).as("sw"), col("user_id"))
-      .agg(count(lit(1)).as("session_events"))
-      .select(col("user_id"), col("sw.start").as("session_start"),
-        col("sw.end").as("session_end"), col("session_events"))
 
   case class SessionAssign(user_id: Long, event_id: Long, us: Long,
       session_start_us: Long)
 
   /** Streaming sessionization with KEYED STATE — per-EVENT emission,
-    * the form that faces the oracle where [[userSessionsStream]]'s
-    * `session_window` cannot: session windows support neither update
+    * the form that faces the oracle where a `session_window` stream
+    * cannot: session windows support neither update
     * mode nor a final flush under an AvailableNow trigger (the watermark
     * is always `gap` short of the last session's end, so append mode
     * withholds every user's final session forever). Here each arrival
@@ -1555,12 +1262,12 @@ object StreamingPipeline {
     * each document's own shingle count, never O(|bench|) per row), then
     * the parquet sink is read back — against the SAME DuckDB SQL as the
     * batch `text_decontam_scrub`. This is the form that survives a
-    * LARGE suite: the literal-set twin ([[scrubStream]], still spec'd
-    * for small-suite firehoses) measurably goes linear-in-suite when
-    * the suite grows with the corpus (SCALING.md round 10 — the 10×
-    * rehearsal grows the suite by construction and the literal probe hit
-    * exponent 1.0, while this join form stays flat). No state store;
-    * exactly-once the same way [[writeIdempotent]] is: foreachBatch is
+    * LARGE suite: the literal-set form
+    * ([[graft.ops.TextAnalysis.scrubAgainstSet]]) measurably goes
+    * linear-in-suite when the suite grows with the corpus (SCALING.md
+    * round 10 — the 10× rehearsal grows the suite by construction and
+    * the literal probe hit exponent 1.0, while this join form stays flat). No state store;
+    * exactly-once through [[Sink.appendNew]]: foreachBatch is
     * at-least-once, so the append is guarded by a doc_id anti-join
     * against the sink — a replayed batch is a no-op.
     */
@@ -1579,19 +1286,7 @@ object StreamingPipeline {
       val scrubbed = TextAnalysis.decontamScrubAgainstShingles(
         batch.filter(col("doc_id") % TextAnalysis.DECONTAM_MOD =!= 0),
         benchShingles)
-      // foreachBatch is at-least-once; the anti-join against the sink
-      // makes a replayed batch a no-op (same contract as writeIdempotent).
-      // Existence resolves through the Hadoop FileSystem API so the
-      // guard holds for ANY sink scheme (hdfs://, s3a://, file:) — a
-      // java.io.File probe would silently skip the anti-join off-box
-      val outPath = new org.apache.hadoop.fs.Path(r.out)
-      val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val delta =
-        if (fs.exists(outPath))
-          scrubbed.join(spark.read.parquet(r.out).select(col("doc_id")),
-            Seq("doc_id"), "left_anti")
-        else scrubbed
-      delta.write.mode("append").parquet(r.out)
+      Sink.appendNew(scrubbed, r.out, Seq("doc_id"), None, None)
     }
   }
 
@@ -1732,7 +1427,7 @@ object StreamingPipeline {
       .groupBy(col("rule"))
       .agg(count(lit(1)).as("checked"), sum(col("bad")).as("violations"))
     r.eachBatch(stream, OutputMode.Update(), stream) { (batch, _) =>
-      mergeByKey(batch, r.out, Seq("rule"))
+      Sink.mergeByKey(batch, r.out, Seq("rule"))
     }.select(col("rule"), lit("events").as("tbl"), col("checked"),
       col("violations"), (col("violations") === 0).cast("int").as("pass"))
   }

@@ -56,7 +56,10 @@ object CurationProps extends Properties("Curation") {
       val viaJoin = TextAnalysis.decontamScrub(df)
         .select("doc_id", "n_tokens", "n_contam_ngrams", "n_redacted", "clean_fp")
         .as[(Long, Long, Long, Long, String)].collect().sortBy(key).toSeq
-      val viaSet = graft.streaming.StreamingPipeline.scrubStream(df, df)
+      val bench = graft.pipeline.Tables.shingles(
+          df.filter($"doc_id" % TextAnalysis.DECONTAM_MOD === 0))
+        .select("shingle").distinct().as[String].collect().sorted.toSeq
+      val viaSet = TextAnalysis.scrubAgainstSet(df, bench)
         .select("doc_id", "n_tokens", "n_contam_ngrams", "n_redacted", "clean_fp")
         .as[(Long, Long, Long, Long, String)].collect().sortBy(key).toSeq
       viaJoin == viaSet

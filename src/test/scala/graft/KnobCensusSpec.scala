@@ -31,6 +31,22 @@ class KnobCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
       "SPREAD", "BENCH_ONLY").map("SPARK_GRAFT_" + _))
   }
 
+  test("every StreamingPipeline def is called from main code") {
+    // code only: scaladoc/comment lines and trailing `// ` comments dropped
+    def code(src: String): String = src.linesIterator
+      .filterNot { l => val t = l.trim; t.startsWith("*") || t.startsWith("/*") || t.startsWith("//") }
+      .map(_.replaceAll("\\s// .*$", "")).mkString("\n")
+    val main = sources(root).map { case (_, src) => code(src) }.mkString("\n")
+    val pipeline = new String(Files.readAllBytes(
+      root.resolve("graft/streaming/StreamingPipeline.scala")), "UTF-8")
+    val defs = """(?m)^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+      .findAllMatchIn(pipeline).map(_.group(1)).toSeq.distinct
+    assert(defs.size > 20, defs)
+    // a name named only by its own definition has no caller in main code
+    val uncalled = defs.filter(d => s"\\b$d\\b".r.findAllMatchIn(main).size < 2)
+    assert(uncalled.isEmpty, s"defs only tests can reach: ${uncalled.mkString(", ")}")
+  }
+
   test("library packages never write to stdout") {
     val writers = Seq("ops", "streaming", "functions", "sources").flatMap { d =>
       sources(root.resolve(s"graft/$d")).collect {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.pipeline.PipelineRunner
 
@@ -47,5 +47,18 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(enrichedRows == SparkEntry.queries("tx_enrich")(spark, "/root/testdata/sf0.001").count())
     val aumRows = spark.read.parquet(s"$sink/AUMdata").count()
     assert(aumRows == SparkEntry.queries("route_aum")(spark, "/root/testdata/sf0.001").count())
+  }
+
+  test("a run killed inside the watermark swap resumes from its own watermark") {
+    val sink = Files.createTempDirectory("graft-sink-swap").toString
+    val c = PipelineRunner.Config("/root/testdata/sf0.001", sink)
+    val r1 = PipelineRunner.run(spark, c)
+    // the swap's crash window: the live generation renamed away, the
+    // staged one not yet in
+    val live = Paths.get(s"$sink/lastUpdated")
+    Files.move(live, Paths.get(s"$sink/lastUpdated.old"))
+    assert(PipelineRunner.currentWatermark(spark, c) == r1.newWatermark,
+      "the previous generation is restored, not the bootstrap watermark")
+    assert(Files.isDirectory(live) && !Files.exists(Paths.get(s"$sink/lastUpdated.old")))
   }
 }

@@ -18,6 +18,19 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), "price dim join must broadcast")
   }
 
+  test("watermark cut: txSince and eventsUntil push the ts bound into the parquet scan") {
+    import graft.pipeline.Tables
+    val sf = "/root/testdata/sf0.001"
+    def pushed(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        .linesIterator.filter(_.startsWith("PushedFilters:")).mkString("\n")
+    assert(pushed(Tables.txSince(spark, sf, Tables.WM)).contains("GreaterThan(ts,"),
+      "the incremental cron reads only the events after its watermark")
+    assert(pushed(Tables.eventsUntil(spark, sf, Tables.WM)).contains("LessThanOrEqual(ts,"),
+      "the history slice reads only the events up to the watermark")
+  }
+
   test("route_aum: pushed filters include the successful predicate") {
     val p = plan("route_aum")
     assert(p.contains("GreaterThan(ts,"))

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 
 import graft.ops.Overlap
-import graft.streaming.{Replay, StreamingPipeline}
+import graft.pipeline.Sink
+import graft.streaming.Replay
 
 /** The streaming-replay helper and the Overlap handles it holds. */
 class ReplaySpec extends SparkSpec {
@@ -72,7 +73,7 @@ class ReplaySpec extends SparkSpec {
         // the drain has begun: poll the caller's conf until the replay returns
         if (!poller.isAlive) poller.start()
         assert(batch.sparkSession.conf.get(key) == "8", "the stream's clone keeps the override")
-        StreamingPipeline.mergeByKey(batch, r.out, Seq("k"))
+        Sink.mergeByKey(batch, r.out, Seq("k"))
       }.as[(Long, Long)].collect().sorted.toSeq
     } finally {
       polling = false
@@ -151,10 +152,10 @@ class ReplaySpec extends SparkSpec {
         "file sink" -> (_.files(open())),
         "keyed merge" -> { r => val s = agg
           r.eachBatch(s, OutputMode.Update(), s) { (b, _) =>
-            StreamingPipeline.mergeByKey(b, r.out, Seq("k", "day")) } },
+            Sink.mergeByKey(b, r.out, Seq("k", "day")) } },
         "partitioned merge" -> { r => val s = agg
           r.eachBatch(s, OutputMode.Update(), s) { (b, _) =>
-            StreamingPipeline.mergeByKeyPartitioned(b, r.out, Seq("k", "day"), "day") } },
+            Sink.mergeByKeyPartitioned(b, r.out, Seq("k", "day"), "day") } },
         "batchId overwrite" -> { r => val s = open()
           r.eachBatch(s, OutputMode.Append(), s) { (b, id) =>
             b.write.mode("overwrite").parquet(r.batchDir(id)) } })

@@ -3,8 +3,11 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{lit, raise_error, when}
 
+import graft.pipeline.Sink
 import graft.streaming.StreamingPipeline
 import graft.streaming.StreamingPipeline.TxRow
 
@@ -18,7 +21,12 @@ class StreamingSinkSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-stream-sink")
     val sink = s"$dir/out"
     val in = MemoryStream[TxRow]
-    val q = StreamingPipeline.writeIdempotent(in.toDF(), sink, Seq("_id"), s"$dir/ckpt")
+    val q = in.toDF().writeStream
+      .option("checkpointLocation", s"$dir/ckpt")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        Sink.appendNew(batch, sink, Seq("_id"), None, None); ()
+      }
+      .start()
     in.addData(
       TxRow(1L, ts("2024-01-11 01:00:00"), 10L, 5.0, 1.0, true, 0L),
       TxRow(2L, ts("2024-01-11 02:00:00"), 11L, 3.0, 2.0, true, 0L))
@@ -35,8 +43,8 @@ class StreamingSinkSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-merge-sink")
     val sink = s"$dir/daily"
     def batch(rows: (String, Long)*) = rows.toDF("day", "n")
-    StreamingPipeline.mergeByKey(batch(("d1", 1L), ("d2", 1L)), sink, Seq("day"))
-    StreamingPipeline.mergeByKey(batch(("d2", 5L), ("d3", 1L)), sink, Seq("day"))
+    Sink.mergeByKey(batch(("d1", 1L), ("d2", 1L)), sink, Seq("day"))
+    Sink.mergeByKey(batch(("d2", 5L), ("d3", 1L)), sink, Seq("day"))
     def read() = spark.read.parquet(sink).as[(String, Long)].collect().sorted.toSeq
     assert(read() == Seq(("d1", 1L), ("d2", 5L), ("d3", 1L)),
       "matched key replaced, unmatched kept, new inserted")
@@ -46,7 +54,7 @@ class StreamingSinkSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(sink),
       new org.apache.hadoop.fs.Path(sink + ".old")))
-    StreamingPipeline.mergeByKey(batch(("d3", 9L)), sink, Seq("day"))
+    Sink.mergeByKey(batch(("d3", 9L)), sink, Seq("day"))
     assert(read() == Seq(("d1", 1L), ("d2", 5L), ("d3", 9L)),
       "the healed generation preserves every previously merged key")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(sink + ".old")) &&
@@ -54,11 +62,24 @@ class StreamingSinkSpec extends SparkSpec {
       "no generation debris after a successful swap")
   }
 
+  test("replace whose write job throws keeps the previous generation, leaves no debris") {
+    val dir = Files.createTempDirectory("graft-replace-sink")
+    val sink = s"$dir/lastUpdated"
+    Sink.replace(Seq(1L, 2L).toDF("v"), sink)
+    val failing = spark.range(3).select(
+      when($"id" === 2L, raise_error(lit("boom"))).otherwise($"id").as("v"))
+    intercept[Exception](Sink.replace(failing, sink))
+    assert(spark.read.parquet(sink).as[Long].collect().sorted.toSeq == Seq(1L, 2L),
+      "the previous generation is still the live one")
+    assert(!Files.exists(java.nio.file.Paths.get(sink + ".staging")) &&
+      !Files.exists(java.nio.file.Paths.get(sink + ".old")))
+  }
+
   test("mergeByKeyPartitioned: merges touched partitions, untouched files byte-identical") {
     val dir = Files.createTempDirectory("graft-merge-part")
     val sink = s"$dir/daily"
     def batch(rows: (String, Long, Long)*) = rows.toDF("day", "chain", "n")
-    StreamingPipeline.mergeByKeyPartitioned(
+    Sink.mergeByKeyPartitioned(
       batch(("d1", 0L, 1L), ("d1", 1L, 2L), ("d2", 1L, 3L)),
       sink, Seq("day", "chain"), "chain")
     val fs = new org.apache.hadoop.fs.Path(sink)
@@ -70,7 +91,7 @@ class StreamingSinkSpec extends SparkSpec {
         .toMap
     val chain0Before = files("chain=0")
     // second batch touches ONLY chain=1
-    StreamingPipeline.mergeByKeyPartitioned(
+    Sink.mergeByKeyPartitioned(
       batch(("d2", 1L, 7L), ("d3", 1L, 4L)),
       sink, Seq("day", "chain"), "chain")
     assert(files("chain=0") == chain0Before,
@@ -81,7 +102,7 @@ class StreamingSinkSpec extends SparkSpec {
     assert(read() == Seq(("d1", 0L, 1L), ("d1", 1L, 2L), ("d2", 1L, 7L), ("d3", 1L, 4L)),
       "matched key replaced in the touched partition, unmatched kept, new inserted")
     // idempotency of the at-least-once retry: re-merging the same batch is a fixpoint
-    StreamingPipeline.mergeByKeyPartitioned(
+    Sink.mergeByKeyPartitioned(
       batch(("d2", 1L, 7L), ("d3", 1L, 4L)),
       sink, Seq("day", "chain"), "chain")
     assert(read() == Seq(("d1", 0L, 1L), ("d1", 1L, 2L), ("d2", 1L, 7L), ("d3", 1L, 4L)))

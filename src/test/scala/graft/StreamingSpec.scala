@@ -22,7 +22,7 @@ class StreamingSpec extends SparkSpec {
       TxRow(1L, ts("2024-01-11 01:00:00"), 10L, 5.0, 5.0, true, 0L),
       TxRow(2L, ts("2024-01-11 02:00:00"), 11L, 3.0, 8.0, false, 0L))
     // AvailableNow = the cron shape: process everything present, then stop
-    val q = StreamingPipeline.enrichStream(in.toDF(), price)
+    val q = graft.pipeline.ReferencePipeline.enrich(in.toDF(), price)
       .writeStream.format("memory").queryName("enriched")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -113,26 +113,6 @@ class StreamingSpec extends SparkSpec {
     assert(got(12L) == ((12L, 5L, 6.0)))
   }
 
-  test("streaming exact dedup emits first occurrence per fingerprint across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, String)]
-    val q = StreamingPipeline.dedupStream(
-        in.toDF().toDF("doc_id", "ts", "text"), "ts")
-      .writeStream.format("memory").queryName("dedupstream")
-      .outputMode("append").start()
-    in.addData(
-      (1L, ts("2024-01-11 01:00:00"), "spark table scan"),
-      (2L, ts("2024-01-11 01:05:00"), "  SPARK   table SCAN "), // dup of 1
-      (3L, ts("2024-01-11 01:10:00"), "hash join plan"))
-    q.processAllAvailable()
-    in.addData(
-      (4L, ts("2024-01-11 01:20:00"), "spark table scan"),      // dup of 1, batch 2
-      (5L, ts("2024-01-11 01:30:00"), "window agg state"))      // new
-    q.processAllAvailable(); q.stop()
-    val ids = spark.table("dedupstream").select("doc_id").as[Long].collect().toSet
-    assert(ids == Set(1L, 3L, 5L))
-  }
-
   test("streaming near-dup emits band candidates against the first-seen bucket doc") {
     implicit val sqlCtx = spark.sqlContext
     val base = "spark table scan hash join sort merge window agg batch " +
@@ -159,8 +139,10 @@ class StreamingSpec extends SparkSpec {
   test("streaming corpus gate: batch quality/sample operators run unchanged on a stream") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, String, String)]
-    val q = StreamingPipeline.corpusGateStream(
-        in.toDF().toDF("doc_id", "text", "lang", "source"))
+    import graft.ops.TextAnalysis
+    def gate(docs: org.apache.spark.sql.DataFrame) = TextAnalysis.quality(docs)
+      .filter($"quality_score" >= TextAnalysis.QUALITY_MIN)
+    val q = gate(in.toDF().toDF("doc_id", "text", "lang", "source"))
       .writeStream.format("memory").queryName("corpusgate")
       .outputMode("append").start()
     val rows = Seq(
@@ -171,8 +153,7 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable(); q.stop()
     val streamed = spark.table("corpusgate").select("doc_id").as[Long].collect().toSet
     // batch run of the same gate on the same rows must agree exactly
-    val batch = StreamingPipeline.corpusGateStream(
-        rows.toDF("doc_id", "text", "lang", "source"))
+    val batch = gate(rows.toDF("doc_id", "text", "lang", "source"))
       .select("doc_id").as[Long].collect().toSet
     assert(streamed == batch)
     assert(!streamed.contains(2L) && streamed.contains(1L))
@@ -180,22 +161,30 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming scrub: arrivals redacted identically to the batch scrub over the same corpus") {
     implicit val sqlCtx = spark.sqlContext
+    import graft.ops.TextAnalysis
     val standing = Seq((0L, "a b c d", "en", "s0")) // 0 % 97 == 0 → the benchmark
       .toDF("doc_id", "text", "lang", "source")
+    val bench = TextAnalysis.benchShinglesOf(standing).localCheckpoint()
+    val dir = java.nio.file.Files.createTempDirectory("graft-scrub-sink")
+    val sink = s"$dir/out"
     val in = MemoryStream[(Long, String, String, String)]
-    val q = StreamingPipeline.scrubStream(
-        in.toDF().toDF("doc_id", "text", "lang", "source"), standing)
-      .writeStream.format("memory").queryName("scrubstream")
-      .outputMode("append").start()
+    // the replay's per-batch body: join-form scrub, then the idempotent append
+    val q = in.toDF().toDF("doc_id", "text", "lang", "source").writeStream
+      .option("checkpointLocation", s"$dir/ckpt")
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        graft.pipeline.Sink.appendNew(TextAnalysis.decontamScrubAgainstShingles(
+          batch.filter($"doc_id" % TextAnalysis.DECONTAM_MOD =!= 0), bench),
+          sink, Seq("doc_id"), None, None); ()
+      }.start()
     val arrivals = Seq(
       (1L, "x a b c d y z", "en", "s0"), // quotes the benchmark mid-doc
       (2L, "p q r s t", "en", "s1"),     // clean
       (194L, "a b c d", "en", "s1"))     // 194 % 97 == 0 → bench id, dropped
     in.addData(arrivals.take(2): _*)
     q.processAllAvailable()
-    in.addData(arrivals.drop(2): _*)
+    in.addData(arrivals.drop(1): _*) // doc 2 delivered again
     q.processAllAvailable(); q.stop()
-    val streamed = spark.table("scrubstream")
+    val streamed = spark.read.parquet(sink)
       .select("doc_id", "n_tokens", "n_contam_ngrams", "n_redacted", "clean_fp")
       .as[(Long, Long, Long, Long, String)].collect().sortBy(_._1)
     // batch twin over standing ∪ arrivals must agree row for row
@@ -398,8 +387,8 @@ class StreamingSpec extends SparkSpec {
       (2L, vocabB, "de", "s"), (3L, vocabB, "de", "s"))
       .toDF("doc_id", "text", "lang", "source")
     val in = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.dsirScoreStream(
-        in.toDF().toDF("doc_id", "text"), corpus)
+    val q = graft.ops.TextAnalysis.dsirScored(
+        in.toDF().toDF("doc_id", "text"), graft.ops.TextAnalysis.dsirModel(corpus))
       .writeStream.format("memory").queryName("dsirstream")
       .outputMode("append").start()
     in.addData((10L, vocabA), (11L, vocabB), (12L, "neverseen tokens here"))
@@ -413,71 +402,6 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id", "dsir_score").as[(Long, Double)].collect().toMap
     assert(streamed == batch)
     assert(streamed(10L) > streamed(11L), "on-target text must outscore off-target")
-  }
-
-  test("streaming decontamination: static benchmark set filters the stream statelessly") {
-    implicit val sqlCtx = spark.sqlContext
-    val bench = Seq((0L, "a b c d", "en", "s0"))
-      .toDF("doc_id", "text", "lang", "source")
-    val in = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.decontamStream(
-        in.toDF().toDF("doc_id", "text"), bench)
-      .writeStream.format("memory").queryName("decontamstream")
-      .outputMode("append").start()
-    in.addData(
-      (1L, "a b c x y z"),      // shares 'a b c' -> contaminated
-      (2L, "p q r s t"),        // clean
-      (3L, "x b c d y"))        // 'b c d' -> contaminated
-    q.processAllAvailable(); q.stop()
-    val kept = spark.table("decontamstream").select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(2L))
-  }
-
-  test("streaming mixture gate: corpus-profile rates filter the stream statelessly") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, String, String)]
-    val rates = Map("en" -> 0.5, "de" -> 1.0)
-    val q = StreamingPipeline.mixGateStream(
-        in.toDF().toDF("doc_id", "text", "lang"), rates)
-      .writeStream.format("memory").queryName("mixgate")
-      .outputMode("append").start()
-    val rows = (0 until 40).map(i =>
-      (i.toLong, "w", if (i % 4 == 0) "de" else if (i % 4 == 1) "xx" else "en"))
-    in.addData(rows: _*)
-    q.processAllAvailable(); q.stop()
-    val kept = spark.table("mixgate").select("doc_id", "lang")
-      .as[(Long, String)].collect()
-    // rate-1.0 stratum passes whole; unknown langs drop; en subsets
-    assert(kept.count(_._2 == "de") == rows.count(_._3 == "de"))
-    assert(!kept.exists(_._2 == "xx"))
-    val en = rows.filter(_._3 == "en").map(_._1).toSet
-    val keptEn = kept.filter(_._2 == "en").map(_._1).toSet
-    assert(keptEn.subsetOf(en) && keptEn.size < en.size)
-    // the draw equals the batch gate on the same rows
-    val batch = StreamingPipeline.mixGateStream(
-        rows.toDF("doc_id", "text", "lang"), rates)
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept.map(_._1).toSet == batch)
-  }
-
-  test("streaming sessionization merges events within the gap and splits across it") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp)]
-    val q = StreamingPipeline.userSessionsStream(
-        in.toDF().toDF("user_id", "ts"))
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("complete").start()
-    in.addData(
-      (1L, ts("2024-01-11 01:00:00")),
-      (1L, ts("2024-01-11 01:10:00")),  // within 30min gap: same session
-      (1L, ts("2024-01-11 03:00:00")),  // >30min later: new session
-      (2L, ts("2024-01-11 01:05:00")))
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("sessions")
-      .select("user_id", "session_events").as[(Long, Long)]
-      .collect().groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-    assert(got(1L) == Seq(1L, 2L)) // one 2-event session + one 1-event session
-    assert(got(2L) == Seq(1L))
   }
 
   test("streaming anomaly: closed day windows score against the static history profile") {
@@ -545,7 +469,7 @@ class StreamingSpec extends SparkSpec {
       .option("checkpointLocation", s"$tmp/ckpt")
       .outputMode("update")
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        StreamingPipeline.mergeByKey(b, out, Seq("day", "chain"))
+        graft.pipeline.Sink.mergeByKey(b, out, Seq("day", "chain"))
       }
       .start()
     val rows = Seq(
@@ -582,7 +506,8 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     val in = MemoryStream[(Long, Array[Float], Int)]
     val q = StreamingPipeline.ivfAssignStream(
-        in.toDF().toDF("vec_id", "embedding", "label"), corpusDf)
+        in.toDF().toDF("vec_id", "embedding", "label"),
+        graft.ops.Similarity.cellAssigner(corpusDf))
       .writeStream.format("memory").queryName("ivfingest")
       .outputMode("append").start()
     // stream the corpus's own vectors in two micro-batches
@@ -612,9 +537,10 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect()
       .map { case (c, n, a) => c -> ((n, a)) }.toMap
     val in = MemoryStream[(Long, Array[Float], Int)]
+    val (cellCol, cosCol) = graft.ops.Similarity.driftScorerCols(
+      prior.toDF("vec_id", "embedding", "label"))
     val q = StreamingPipeline.indexDriftStream(
-        in.toDF().toDF("vec_id", "embedding", "label"),
-        prior.toDF("vec_id", "embedding", "label"))
+        in.toDF().toDF("vec_id", "embedding", "label"), cellCol, cosCol)
       .writeStream.format("memory").queryName("driftmon")
       .outputMode("complete").start()
     in.addData(arriving.take(7): _*)
