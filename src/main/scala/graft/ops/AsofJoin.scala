@@ -175,8 +175,7 @@ object AsofJoin {
     * graft.plans.AsofJoinPlan/Exec): same semantics as [[asofJoin]], but
     * executed as one forward merge per co-partition instead of a
     * union+window. Installs [[graft.plans.AsofJoinStrategy]] into the
-    * session's extra strategies (idempotent; `GraftExtensions` users get
-    * it at session build).
+    * session's extra strategies (idempotent).
     */
   def asofJoinNative(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTime: String, rightTime: String, valueCols: Seq[String]): DataFrame = {

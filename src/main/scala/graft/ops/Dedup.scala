@@ -47,7 +47,6 @@ object Dedup {
     */
   val SIMHASH_BITS = 56
   val SIMHASH_BANDS = 8
-  val SIMHASH_BAND_BITS: Int = SIMHASH_BITS / SIMHASH_BANDS
   val SIMHASH_MAX_HAMMING: Int = SIMHASH_BANDS - 1
 
   /** Exact dedup: group documents by the md5 of whitespace/case-normalized
@@ -326,10 +325,11 @@ object Dedup {
 
   /** SimHash near-dup pairs: signatures within hamming distance ≤
     * [[SIMHASH_MAX_HAMMING]], found via banded LSH — each signature is cut
-    * into [[SIMHASH_BANDS]] bands of [[SIMHASH_BAND_BITS]] bits, candidates
-    * are pairs sharing any (band_no, band_val) bucket, and the exact hamming
-    * filter runs only inside buckets. Pigeonhole makes this EXACT: hamming
-    * ≤ bands−1 implies ≥ 1 identical band, so no qualifying pair is missed.
+    * into [[SIMHASH_BANDS]] bands of [[SIMHASH_BITS]] / bands bits,
+    * candidates are pairs sharing any (band_no, band_val) bucket, and the
+    * exact hamming filter runs only inside buckets. Pigeonhole makes this
+    * EXACT: hamming ≤ bands−1 implies ≥ 1 identical band, so no
+    * qualifying pair is missed.
     * One shuffle (the bucket groupBy); pair fan-out is bounded by bucket
     * population, never corpus size — no cross join anywhere in the plan.
     * The signature carries into the bucket rows, so the hamming check needs
@@ -1108,19 +1108,14 @@ object Dedup {
       s"(CASE WHEN ($proj) > 0 THEN ${1 << i} ELSE 0 END)"
     }.mkString(" + ")
 
-  /** Spark Column for the same bucket id, via `vec_dot` against the
-    * constant ±1 hyperplane (folded to a literal float array): the fused
-    * codegen loop replaces an 18×dim-term inlined expression, which blows
-    * past codegen limits and falls back to interpretation (~20× slower,
-    * measured). Bit-identical to [[bucketExprSql]]: multiplying by ±1.0f
-    * is exact and vec_dot folds left from 0.0 in double, exactly like the
-    * SQL chain.
-    */
-  private[ops] def bucketCol(t: Int, dim: Int): Column =
-    bucketColBits(t, dim, HYP_BITS)
-
-  /** [[bucketCol]] at an explicit bit-width (see [[hypBitsFor]]) — at
-    * `bits` = [[HYP_BITS]] this IS [[bucketCol]], same planes, same sum.
+  /** Spark Column for the same bucket id at an explicit bit-width (see
+    * [[hypBitsFor]]), via `vec_dot` against the constant ±1 hyperplane
+    * (folded to a literal float array): the fused codegen loop replaces
+    * an 18×dim-term inlined expression, which blows past codegen limits
+    * and falls back to interpretation (~20× slower, measured). At `bits`
+    * = [[HYP_BITS]] it is bit-identical to [[bucketExprSql]]: multiplying
+    * by ±1.0f is exact and vec_dot folds left from 0.0 in double, exactly
+    * like the SQL chain.
     */
   private[ops] def bucketColBits(t: Int, dim: Int, bits: Int): Column =
     (0 until bits).map { i =>

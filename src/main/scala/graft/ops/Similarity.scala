@@ -2443,42 +2443,37 @@ object Similarity {
     */
   val NND_ITERS = 3
 
-  /** MEASURED degree schedule for corpus growth (SCALING.md round 12):
-    * at the fixed serving constants, recall over the ScaleUp decades is
-    * GRAPH-limited, not schedule-limited — the traversal lands exactly
-    * on the graph-local ceiling (truth ∩ own adjacency) at every scale,
-    * and rounds (3→5/7), beam (8→32), and a 1024-anchor coarse entry
-    * layer are all inert at 30×, because extreme-value noise cosines
-    * displace true weak-signal neighbors out of a FIXED-degree
-    * adjacency as N grows (ceiling 0.46 @2k → 0.33 @20k → 0.29 @60k).
-    * Rebuilding at higher degree restores it: k=24 @60k → 0.42,
-    * k=32 @60k → 0.58 (above 1×'s 0.46 at the same beam). So the dial
-    * that survives scale is construction DEGREE ∝ log N — the HNSW M
-    * convention — costing the traversal only linearly in k:
-    * k(N) = max(12, 2·log₂N) fits the measured points (2 000 → 22,
+  /** The construction degrees the MEASURED degree schedule for corpus
+    * growth is gated through (SCALING.md round 12). At the fixed serving
+    * constants, recall over the ScaleUp decades is GRAPH-limited, not
+    * schedule-limited — the traversal lands exactly on the graph-local
+    * ceiling (truth ∩ own adjacency) at every scale, and rounds (3→5/7),
+    * beam (8→32), and a 1024-anchor coarse entry layer are all inert at
+    * 30×, because extreme-value noise cosines displace true weak-signal
+    * neighbors out of a FIXED-degree adjacency as N grows (ceiling 0.46
+    * @2k → 0.33 @20k → 0.29 @60k). Rebuilding at higher degree restores
+    * it: k=24 @60k → 0.42, k=32 @60k → 0.58 (above 1×'s 0.46 at the same
+    * beam). So the dial that survives scale is construction DEGREE ∝ log N
+    * — the HNSW M convention — costing the traversal only linearly in k:
+    * k(N) = max(12, ⌈2·log₂N⌉) fits the measured points (2 000 → 22,
     * 60 000 → 32). The GATED queries serve the fixed [[GRAPH_DEGREE]]
-    * index (byte-stable oracles); a deployment sizes its build with
-    * this schedule and the recall sweep re-measures it per corpus.
-    */
-  def graphDegreeFor(n: Long): Int =
-    math.max(GRAPH_DEGREE,
-      math.ceil(2.0 * math.log(math.max(2L, n).toDouble) / math.log(2.0)).toInt)
-
-  /** The degree sweep the schedule is gated through: the shipped serving
-    * degree, one rung up, 24 — the first rung inside
-    * [[graphDegreeFor]]'s OPERATIVE regime (the schedule says 22–32 for
-    * every corpus from 2k up, so a deployment acting on it runs a
-    * construction of this class; gating only 12/16 would leave the
-    * regime that actually ships oracle-unchecked — the round-12 gap) —
-    * and 32, the schedule's TOP rung (round 15, closing the carried
-    * r13 ask: [[graphDegreeFor]] emits 32 from ≈65k docs up, and a
-    * rung the schedule can emit must face the oracle like every other
-    * dispatch regime; the 60k-corpus recall rehearsal for the same rung
-    * is SCALING.md's r15 degree-32 row).
+    * index (byte-stable oracles); a deployment sizes its build with this
+    * schedule and the recall sweep re-measures it per corpus.
+    *
+    * The rungs: the shipped serving degree, one rung up, 24 — the first
+    * rung inside the schedule's OPERATIVE regime (it says 22–32 for every
+    * corpus from 2k up, so a deployment acting on it runs a construction
+    * of this class; gating only 12/16 would leave the regime that
+    * actually ships oracle-unchecked — the round-12 gap) — and 32, the
+    * schedule's TOP rung (round 15, closing the carried r13 ask: the
+    * schedule emits 32 from ≈65k docs up, and a rung the schedule can
+    * emit must face the oracle like every other dispatch regime; the
+    * 60k-corpus recall rehearsal for the same rung is SCALING.md's r15
+    * degree-32 row).
     */
   val GRAPH_DEGREES: Seq[Int] = Seq(GRAPH_DEGREE, 16, 24, 32)
 
-  /** The [[graphDegreeFor]] schedule's DIAL, gated: the graph-local
+  /** The degree schedule's DIAL, gated: the graph-local
     * recall ceiling (truth ∩ the query's own adjacency row — SCALING.md
     * round 12 shows the traversal lands exactly on this ceiling, so it
     * IS the serve path's recall in the regime that matters) per

@@ -34,8 +34,8 @@ case class AsofJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsofJoinPlan]] as [[AsofJoinExec]]; injectable both through
-  * `spark.experimental.extraStrategies` and `GraftExtensions`.
+/** Plans [[AsofJoinPlan]] as [[AsofJoinExec]]; [[graft.ops.AsofJoin]]
+  * installs it into `spark.experimental.extraStrategies`.
   */
 object AsofJoinStrategy extends SparkStrategy {
 

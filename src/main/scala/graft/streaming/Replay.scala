@@ -20,11 +20,12 @@ import graft.ops.Overlap
   *
   * A replay owns, inside one scope ([[Replay.apply]]):
   *
-  *  - a fresh temp dir holding the checkpoint (`ckpt/`) and the sink
-  *    ([[out]]). Once the scope closes, everything but the sink is
-  *    deleted — the checkpoint is dead once the stream has terminated
-  *    and the drain never reads it. The sink dir STAYS: the returned
-  *    frame reads it lazily. A scope that throws deletes the whole dir.
+  *  - a fresh dir under [[Replay.root]] holding the checkpoint (`ckpt/`)
+  *    and the sink ([[out]]). Once the scope closes, everything but the
+  *    sink is deleted — the checkpoint is dead once the stream has
+  *    terminated and the drain never reads it. The sink dir STAYS: the
+  *    returned frame reads it lazily, so it lives until the JVM exits and
+  *    deletes the root. A scope that throws deletes the whole dir.
   *  - the run: checkpoint location, the AvailableNow trigger, `start()`
   *    and `awaitTermination()`, into either Spark's parquet file sink
   *    ([[files]]) or the caller's `foreachBatch` body ([[eachBatch]]).
@@ -61,14 +62,14 @@ import graft.ops.Overlap
   * `newSession()`: a session's streaming listener bus reports only its
   * own queries, and progress listeners attach to the caller's.
   */
-private[graft] final class Replay private (spark: SparkSession, root: Path) {
+private[graft] final class Replay private (spark: SparkSession, dir: Path) {
   private val held = ArrayBuffer.empty[Overlap.Handle[_]]
 
   /** The sink dir the drain reads. */
-  val out: String = root.resolve("out").toString
+  val out: String = dir.resolve("out").toString
 
   /** A scratch path beside the sink (a side input the stream reads). */
-  def path(name: String): String = root.resolve(name).toString
+  def path(name: String): String = dir.resolve(name).toString
 
   /** The dir a batchId sink OVERWRITES for one micro-batch — a retried
     * batch rewrites its own rows instead of appending them twice.
@@ -130,7 +131,7 @@ private[graft] final class Replay private (spark: SparkSession, root: Path) {
     }
 
   private def drain(empty: => DataFrame): DataFrame = {
-    val d = root.resolve("out")
+    val d = dir.resolve("out")
     // an actual part file ANYWHERE under the sink (flat sinks, batchId
     // subdirs, Hive-partitioned MERGE sinks like chain=…/); a bare
     // `_spark_metadata` dir still fails schema inference
@@ -147,8 +148,8 @@ private[graft] final class Replay private (spark: SparkSession, root: Path) {
     try held.foreach(_.cancel())
     finally {
       val doomed =
-        if (ok) { val st = Files.list(root); try st.iterator.asScala.toList finally st.close() }
-        else List(root)
+        if (ok) { val st = Files.list(dir); try st.iterator.asScala.toList finally st.close() }
+        else List(dir)
       doomed.filterNot(_.toString == out).foreach(p => FileUtils.deleteQuietly(p.toFile))
     }
 }
@@ -157,11 +158,21 @@ private[graft] object Replay {
   /** State-store partitions of every stateful replay. */
   val STATE_PARTITIONS = 8
 
-  /** Open a replay scope under a temp dir named after `tag`; `body`
-    * runs at most one stream through it.
+  /** The one temp dir this JVM's replay scopes live under, deleted at JVM
+    * exit (never another JVM's dirs): the sink dirs the returned frames
+    * read outlive their scopes, so nothing earlier may delete them.
+    */
+  private[graft] lazy val root: Path = {
+    val dir = Files.createTempDirectory("graft-replays")
+    sys.addShutdownHook(FileUtils.deleteQuietly(dir.toFile))
+    dir
+  }
+
+  /** Open a replay scope under a dir named after `tag`; `body` runs at
+    * most one stream through it.
     */
   def apply[R](spark: SparkSession, tag: String)(body: Replay => R): R = {
-    val r = new Replay(spark, Files.createTempDirectory(tag))
+    val r = new Replay(spark, Files.createTempDirectory(root, tag))
     var ok = false
     try { val res = body(r); ok = true; res }
     finally r.close(ok)

@@ -32,11 +32,6 @@ object StreamingPipeline {
   case class FirstSeen(chain: Long, stashId: Long, _id: Long,
       firstSeenAt: Timestamp, firstStake: Double)
 
-  /** A price-dimension arrival: `price_ts` is the START of the day the
-    * price covers (the event time the join state is bounded by).
-    */
-  case class PriceTick(chain: Long, price_ts: Timestamp, price: Double)
-
   /** Step 2 as a STREAM-STREAM join — both sides live: transactions
     * stream in AND the price dimension itself arrives as a (slow) stream,
     * the reference's per-row price lookup (updatescript.py:66-67) with

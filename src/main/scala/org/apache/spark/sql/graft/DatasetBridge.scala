@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => 
 /** The one `private[sql]` doorway a third-party operator library needs:
   * turning a constructed [[LogicalPlan]] into a user-facing DataFrame.
   * Spark exposes every other ladder-(c) piece publicly (SparkPlan,
-  * Strategy, `experimental.extraStrategies`, SparkSessionExtensions), but
+  * Strategy, `experimental.extraStrategies`), but
   * plan→Dataset is `private[sql]`, so this shim lives under
   * `org.apache.spark.sql` — the established packaging pattern for Spark
   * extension libraries.

@@ -2,11 +2,15 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.tools.nsc.{Global, Settings}
+import scala.tools.nsc.reporters.StoreReporter
 
 /** The program's environment surface, read from the main sources: every
-  * env var a main or operator reads, and no stdout writes from library
-  * code (Bench's stdout carries exactly one JSON line).
+  * env var a main or operator reads, no stdout writes from library code
+  * (Bench's stdout carries exactly one JSON line), and no library member
+  * that only tests reach.
   */
 class KnobCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -31,28 +35,150 @@ class KnobCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
       "SPREAD", "BENCH_ONLY").map("SPARK_GRAFT_" + _))
   }
 
-  test("every StreamingPipeline def is called from main code") {
-    // code only: scaladoc/comment lines and trailing `// ` comments dropped
-    def code(src: String): String = src.linesIterator
-      .filterNot { l => val t = l.trim; t.startsWith("*") || t.startsWith("/*") || t.startsWith("//") }
-      .map(_.replaceAll("\\s// .*$", "")).mkString("\n")
-    val main = sources(root).map { case (_, src) => code(src) }.mkString("\n")
-    val pipeline = new String(Files.readAllBytes(
-      root.resolve("graft/streaming/StreamingPipeline.scala")), "UTF-8")
-    val defs = """(?m)^  (?:private(?:\[\w+\])? )?def (\w+)""".r
-      .findAllMatchIn(pipeline).map(_.group(1)).toSeq.distinct
-    assert(defs.size > 20, defs)
-    // a name named only by its own definition has no caller in main code
-    val uncalled = defs.filter(d => s"\\b$d\\b".r.findAllMatchIn(main).size < 2)
-    assert(uncalled.isEmpty, s"defs only tests can reach: ${uncalled.mkString(", ")}")
+  /** Members no entry point calls, kept because a test needs them. */
+  private val testOnly = Map(
+    // references the tests diff kernels against
+    "AsofJoin.asofJoin" -> "union+window as-of join the bucketed and native forms are diffed against",
+    "Dedup.ngramJaccardPairsJoin" -> "join form the grouped n-gram Jaccard kernel is asserted equal to",
+    "Dedup.knnGraphJoin" -> "join form the grouped kNN-graph kernel is asserted equal to",
+    "TextAnalysis.scrubAgainstSet" -> "explicit-set scrub CurationProps checks against decontamScrub",
+    "Tables.rawShingles" -> "exploded shingles the ngram_stats kernel is diffed against",
+    "Multimodal.extractFeatures" -> "per-partition decoder the relational multimodal queries are diffed against",
+    "Multimodal.mediaFromDocuments" -> "media table the decoder reference reads",
+    "Multimodal.sampleFrames" -> "flatMap frame sampler the relational frame query is diffed against",
+    "StreamingPipeline.DeltaIndex.runCount" -> "the run count StreamingSinkSpec bounds by log2(batches) + 1",
+    // frame-level seams: the session query reads sfDir, the spec feeds a hand-built frame
+    "Dedup.incrementalMinhashMatches" -> "incremental MinHash matching over given new/prior frames",
+    "EntityResolution.erGoldenIncrementalOver" -> "incremental golden records over given standing/arrival frames",
+    "Graph.undirectedKnn" -> "undirected kNN edges over given embeddings",
+    "Similarity.cellAssigner" -> "IVF cell assignment fitted on a given corpus",
+    "Similarity.driftScorerCols" -> "drift scorer columns fitted on a given corpus",
+    "Similarity.indexDrift" -> "index-drift report over given embeddings",
+    "Similarity.diverseSample" -> "diverse sample over given embeddings",
+    "TextAnalysis.corpusFilter" -> "corpus filter over a given document frame",
+    "TextAnalysis.corpusAssembly" -> "corpus assembly over a given document frame",
+    "TextAnalysis.corpusRejections" -> "rejection ledger over a given document frame",
+    "TextAnalysis.dsirScores" -> "DSIR scores over a given document frame")
+
+  test("every library member is used by main code or allowlisted with its reason") {
+    val main = sources(root).map { case (p, src) => Census.parse(p, src) }
+    // this spec's allowlist names every entry, so it is no caller
+    val test = sources(Paths.get("src/test/scala"))
+      .filterNot(_._1.endsWith("KnobCensusSpec.scala"))
+      .map { case (p, src) => Census.parse(p, src) }
+    // the entry points: SparkEntry and every object that defines `main`
+    val roots = main.flatMap(Census.entryPoints).toSet
+    val defined = main.flatMap(Census.members).filterNot { case (q, _) => roots(q) }
+    val usedInMain = main.flatMap(Census.uses).toSet
+    val usedInTest = test.flatMap(Census.uses).toSet
+    val unreached = defined.collect { case (q, n) if !usedInMain(n) => q }.toSet
+    val stray = (unreached -- testOnly.keySet).toSeq.sorted
+    assert(stray.isEmpty, s"members no entry point reaches: ${stray.mkString(", ")}")
+    // the allowlist cannot rot: each entry still exists, still lacks a main caller, has a test caller
+    val simple = defined.toMap
+    val rotten = testOnly.keys.toSeq.sorted.flatMap { q =>
+      simple.get(q) match {
+        case None => Some(s"$q is not defined")
+        case Some(n) if usedInMain(n) => Some(s"$q is used in main")
+        case Some(n) if !usedInTest(n) => Some(s"$q has no caller in src/test")
+        case _ => None
+      }
+    }
+    assert(rotten.isEmpty, rotten.mkString("; "))
   }
 
   test("library packages never write to stdout") {
-    val writers = Seq("ops", "streaming", "functions", "sources").flatMap { d =>
+    val writers = Seq("ops", "streaming", "functions").flatMap { d =>
       sources(root.resolve(s"graft/$d")).collect {
         case (p, src) if src.contains("println") => p
       }
     }
     assert(writers.isEmpty, s"println in library code: ${writers.mkString(", ")}")
+  }
+}
+
+/** A use-site census over parsed sources: the Scala parser only, no typer
+  * and no Spark.
+  *
+  *  - A member is a `def`/`val`/`class`/`object`/`trait` of a package or a
+  *    template; `override`s (Catalyst and Spark callbacks) and
+  *    constructor fields are not counted.
+  *  - A name is USED where an identifier or a selection names it outside a
+  *    definition of that name, or where a string literal holds it as a
+  *    word (generated Java names its kernels). Bindings are not uses: a
+  *    parameter, pattern variable or local definition shadows the name in
+  *    its scope, and a named argument's name and an import name nothing.
+  */
+private object Census {
+  private val settings = new Settings
+  settings.usejavacp.value = true
+  private val reporter = new StoreReporter(settings)
+  val global = new Global(settings, reporter)
+  import global._
+  new Run // the parser reads the current run's settings
+
+  def parse(path: Path, src: String): Tree = {
+    val tree = newUnitParser(src, path.toString).parse()
+    assert(!reporter.hasErrors, s"$path: ${reporter.infos.mkString("; ")}")
+    tree
+  }
+
+  private def counted(d: MemberDef): Boolean =
+    !d.mods.isOverride && !d.mods.isParamAccessor && d.name != nme.CONSTRUCTOR &&
+      !d.name.decoded.contains("$")
+
+  /** (qualified name, name) of every member, nested ones under their owner. */
+  def members(t: Tree): Seq[(String, String)] = {
+    def in(prefix: String, t: Tree): Seq[(String, String)] = t match {
+      case PackageDef(_, stats) => stats.flatMap(in(prefix, _))
+      case d: ImplDef if counted(d) =>
+        val q = prefix + d.name.decoded
+        (q -> d.name.decoded) +: d.impl.body.flatMap(in(q + ".", _))
+      case d: ValOrDefDef if counted(d) => Seq((prefix + d.name.decoded) -> d.name.decoded)
+      case _ => Nil
+    }
+    in("", t)
+  }
+
+  /** The qualified names an entry point contributes: the object and its `main`. */
+  def entryPoints(t: Tree): Seq[String] = t.collect {
+    case m: ModuleDef if m.name.decoded == "SparkEntry" ||
+        m.impl.body.exists { case d: DefDef => d.name.decoded == "main"; case _ => false } =>
+      m.name.decoded
+  }.flatMap(o => Seq(o, s"$o.main"))
+
+  /** The names a tree brings into scope for its children. */
+  private def binders(t: Tree): Seq[Name] = t match {
+    case d: DefDef => d.tparams.map(_.name) ++ d.vparamss.flatten.map(_.name)
+    case d: ImplDef => d.impl.body.collect { case v: ValDef if v.mods.isParamAccessor => v.name }
+    case Function(params, _) => params.map(_.name)
+    case Block(stats, _) => stats.collect { case d: MemberDef => d.name }
+    case CaseDef(pat, _, _) => pat.collect { case b: Bind => b.name }
+    case _ => Nil
+  }
+
+  private val word = """\w+""".r
+
+  def uses(t: Tree): Set[String] = {
+    val out = mutable.Set.empty[String]
+    // `locals`: names a binding shadows; `owners`: the defs and templates
+    // being walked, whose own names inside them are no use
+    def walk(t: Tree, locals: Set[String], owners: Set[String]): Unit = t match {
+      case _: Import => ()
+      case Ident(n) => if (!locals(n.decoded) && !owners(n.decoded)) out += n.decoded
+      case Select(q, n) => if (!owners(n.decoded)) out += n.decoded; walk(q, locals, owners)
+      case NamedArg(_, rhs) => walk(rhs, locals, owners)
+      case Literal(Constant(s: String)) => out ++= word.findAllIn(s).filterNot(owners)
+      case _ =>
+        val scope = locals ++ binders(t).map(_.decoded)
+        val own = t match {
+          case d: DefDef => owners + d.name.decoded
+          case d: ImplDef => owners + d.name.decoded
+          case _ => owners
+        }
+        t.children.foreach(walk(_, scope, own))
+    }
+    walk(t, Set.empty, Set.empty)
+    out.toSet
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.commons.io.FileUtils
+
 import graft.pipeline.PipelineRunner
 
 /** Golden end-to-end: the full 5-step pipeline over sf0.001, run twice
@@ -47,6 +49,7 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(enrichedRows == SparkEntry.queries("tx_enrich")(spark, "/root/testdata/sf0.001").count())
     val aumRows = spark.read.parquet(s"$sink/AUMdata").count()
     assert(aumRows == SparkEntry.queries("route_aum")(spark, "/root/testdata/sf0.001").count())
+    Seq(sink, sink2).foreach(d => FileUtils.deleteQuietly(new java.io.File(d)))
   }
 
   test("a run killed inside the watermark swap resumes from its own watermark") {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
@@ -22,7 +22,7 @@ class ReplaySpec extends SparkSpec {
 
   /** A two-file parquet source dir of (k, day, v) rows. */
   private def source(): String = {
-    val dir = Files.createTempDirectory("graft-replay-src").resolve("in").toString
+    val dir = Files.createTempDirectory(Replay.root, "src").resolve("in").toString
     Seq((1L, "d1", 10L), (2L, "d1", 20L), (1L, "d2", 30L)).toDF("k", "day", "v")
       .repartition(2).write.parquet(dir)
     dir
@@ -45,6 +45,13 @@ class ReplaySpec extends SparkSpec {
 
   private def noActiveJobs(): Boolean =
     spark.sparkContext.statusTracker.getActiveJobIds().isEmpty
+
+  test("a replay's sink dir lies under the one per-JVM root in java.io.tmpdir") {
+    val (out, rows) = Replay(spark, "rooted_replay") { r => (r.out, r.files(read(source())).count()) }
+    assert(rows == 3)
+    assert(Paths.get(out).startsWith(Replay.root) && Files.isDirectory(Paths.get(out)), out)
+    assert(Replay.root.getParent == Paths.get(System.getProperty("java.io.tmpdir")), Replay.root)
+  }
 
   test("stateful is read off the analyzed plan: aggregation and stream-stream join, not filters") {
     val s = read(source())
@@ -141,7 +148,7 @@ class ReplaySpec extends SparkSpec {
 
   test("zero-row drain: every sink kind drains to an empty frame of its written schema") {
     val src = source()
-    val emptyDir = Files.createTempDirectory("graft-replay-empty").toString
+    val emptyDir = Files.createTempDirectory(Replay.root, "empty").toString
     // a source whose filter matches nothing (batches fire, write no rows)
     // and an empty source dir (no batch fires at all)
     for ((label, open) <- Seq[(String, () => DataFrame)](

@@ -108,24 +108,6 @@ class StreamingSinkSpec extends SparkSpec {
     assert(read() == Seq(("d1", 0L, 1L), ("d1", 1L, 2L), ("d2", 1L, 7L), ("d3", 1L, 4L)))
   }
 
-  test("GraftExtensions registers vec_dot in a fresh extended session") {
-    // A second SparkSession in the same JVM shares the SparkContext but can
-    // carry its own extensions.
-    val extended = org.apache.spark.sql.SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    try {
-      val ext = new org.apache.spark.sql.SparkSessionExtensions
-      new GraftExtensions().apply(ext) // constructs + injects without error
-      // functional check through the registry path used by the extension
-      graft.functions.VectorFunctions.register(extended)
-      val d = extended.sql(
-        "SELECT vec_dot(array(CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT))) AS d")
-        .collect().head.getDouble(0)
-      assert(d == 6.0)
-    } finally ()
-  }
-
   test("DeltaIndex: view row set is batch-decomposition-invariant and fanout stays logarithmic") {
     // The accumulated-arrival index behind the streaming replays: the
     // same 64 rows arriving as 1, 2, or 32 batch deltas must yield the

@@ -8,8 +8,16 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.StreamingPipeline
 import graft.streaming.StreamingPipeline.TxRow
 
+object StreamingSpec {
+  /** A price-dimension arrival: `price_ts` is the START of the day the
+    * price covers (the event time the join state is bounded by).
+    */
+  case class PriceTick(chain: Long, price_ts: Timestamp, price: Double)
+}
+
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+  import StreamingSpec.PriceTick
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -35,7 +43,6 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream enrichment: late price arrivals join buffered tx; state is watermark-bounded") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingPipeline.PriceTick
     val txIn = MemoryStream[TxRow]
     val pIn = MemoryStream[PriceTick]
     val q = StreamingPipeline.enrichJoinStream(txIn.toDF(), pIn.toDF())
