@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.DatasetBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native Catalyst expression: intersection size of two ASCENDING-sorted
@@ -87,14 +87,7 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
 
 object ArrayFunctions {
 
-  /** Register `sorted_intersect_count`; idempotent (see VectorFunctions). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier("sorted_intersect_count")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "sorted_intersect_count",
-        exprs => SortedLongIntersectCount(exprs(0), exprs(1)), "built-in")
-    }
-  }
+  /** Intersection size of two ascending-sorted `array<bigint>` columns. */
+  def sortedIntersectCount(a: Column, b: Column): Column =
+    column(SortedLongIntersectCount(expression(a), expression(b)))
 }

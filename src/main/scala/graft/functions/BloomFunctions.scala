@@ -1,19 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.graft.DatasetBridge.{column, expression}
 
-/** Registry aliases for Spark's OWN Bloom-filter expressions —
+/** Column builders for Spark's OWN Bloom-filter expressions —
   * `BloomFilterAggregate` (the distributed build: one partial Bloom per
   * partition, OR-merged at the reduce, exactly how Spark's runtime
   * row-group filters are built) and `BloomFilterMightContain` (the
   * codegen'd probe). Spark uses the pair internally for
-  * `InjectRuntimeFilter` but does not expose either in the public
-  * function registry; aliasing them makes the semi-join-pushdown pattern
-  * available to library users as `bloom_agg(h, n_items, n_bits)` /
-  * `bloom_might_contain(bf, h)` with zero new expression code — and
+  * `InjectRuntimeFilter` but does not expose either as a public function;
+  * wrapping them makes the semi-join-pushdown pattern available as
+  * [[bloomAgg]] / [[mightContain]] with zero new expression code — and
   * keeps the probe inside WholeStageCodegen.
   */
 object BloomFunctions {
@@ -26,18 +25,12 @@ object BloomFunctions {
       math.ceil(-(nItems.toDouble * math.log(fpp)) /
         (math.log(2) * math.log(2))).toLong)
 
-  /** Register both aliases; idempotent (see VectorFunctions). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val probe = FunctionIdentifier("bloom_might_contain")
-    if (!registry.functionExists(probe)) {
-      registry.createOrReplaceTempFunction("bloom_might_contain",
-        exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-    }
-    val agg = FunctionIdentifier("bloom_agg")
-    if (!registry.functionExists(agg)) {
-      registry.createOrReplaceTempFunction("bloom_agg",
-        exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)), "built-in")
-    }
-  }
+  /** Aggregate: the serialized Bloom filter (binary) over bigint `h`. */
+  def bloomAgg(h: Column, nItems: Long, nBits: Long): Column =
+    column(new BloomFilterAggregate(expression(h), Literal(nItems), Literal(nBits))
+      .toAggregateExpression())
+
+  /** Probe: may bigint `h` be in the serialized filter `bf`? */
+  def mightContain(bf: Column, h: Column): Column =
+    column(BloomFilterMightContain(expression(bf), expression(h)))
 }

@@ -2,13 +2,13 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.DatasetBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Single-pass per-document text kernels, shared by the eval and codegen
@@ -280,7 +280,7 @@ case class ShingleHashes(child: Expression) extends UnaryExpression {
 }
 
 /** `minhash_sig(tokens, nHashes)` → `array<bigint>` of the K–M MinHash
-  * minima (nHashes must be a foldable integer literal).
+  * minima (nHashes is a positive constant of the plan).
   */
 case class MinhashSig(child: Expression, nHashes: Int) extends UnaryExpression {
 
@@ -306,8 +306,8 @@ case class MinhashSig(child: Expression, nHashes: Int) extends UnaryExpression {
 }
 
 /** `winnow_fps(tokens, spanWords, window)` → sorted distinct
-  * `array<bigint>` of winnowing fingerprints (span sizes must be foldable
-  * integer literals).
+  * `array<bigint>` of winnowing fingerprints (span sizes are positive
+  * constants of the plan).
   */
 case class WinnowFps(child: Expression, spanWords: Int, window: Int)
     extends UnaryExpression {
@@ -389,41 +389,22 @@ case class TokEntropy(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** Column builders for the kernels above: each wraps its expression
+  * straight into the plan, so whole-stage codegen fuses it in place.
+  */
 object TextFunctions {
 
-  /** Register `simhash56` and `ngram_stats`; idempotent (see
-    * VectorFunctions).
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("simhash56"))) {
-      registry.createOrReplaceTempFunction(
-        "simhash56", exprs => SimhashFromTokens(exprs(0)), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("ngram_stats"))) {
-      registry.createOrReplaceTempFunction(
-        "ngram_stats", exprs => NgramStats(exprs(0)), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("shingle_hashes"))) {
-      registry.createOrReplaceTempFunction(
-        "shingle_hashes", exprs => ShingleHashes(exprs(0)), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("minhash_sig"))) {
-      registry.createOrReplaceTempFunction(
-        "minhash_sig",
-        exprs => MinhashSig(exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("tok_entropy"))) {
-      registry.createOrReplaceTempFunction(
-        "tok_entropy", exprs => TokEntropy(exprs(0)), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("winnow_fps"))) {
-      registry.createOrReplaceTempFunction(
-        "winnow_fps",
-        exprs => WinnowFps(exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue(),
-          exprs(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    }
-  }
+  def simhash56(toks: Column): Column = column(SimhashFromTokens(expression(toks)))
+
+  def shingleHashes(toks: Column): Column = column(ShingleHashes(expression(toks)))
+
+  def ngramStats(toks: Column): Column = column(NgramStats(expression(toks)))
+
+  def tokEntropy(toks: Column): Column = column(TokEntropy(expression(toks)))
+
+  def minhashSig(toks: Column, nHashes: Int): Column =
+    column(MinhashSig(expression(toks), nHashes))
+
+  def winnowFps(toks: Column, spanWords: Int, window: Int): Column =
+    column(WinnowFps(expression(toks), spanWords, window))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.graft.DatasetBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for the vector hot path.
@@ -73,38 +73,7 @@ case class FloatVecDot(left: Expression, right: Expression)
 
 object VectorFunctions {
 
-  /** Register `vec_dot` in the session's function registry. Spark 4 keeps
-    * the Column↔Expression bridge private, so the public route to a custom
-    * expression is registration + `expr("vec_dot(...)")`. Idempotent: the
-    * existence check keeps repeat calls from re-registering (re-registration
-    * is harmless but emits a WARN per call, which pollutes harness stdout).
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "vec_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "built-in")
-    }
-  }
-
-  /** Dot product of two float-array columns (double result). Registers the
-    * function on the session bound to the active query when first used.
-    */
-  def vec_dot(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    expr(s"vec_dot($a, $b)")
-  }
-
-  /** Column-argument form, for operands that are constructed Columns
-    * rather than named columns — e.g. a `typedLit` centroid array. Same
-    * expression, resolved through the registry by name.
-    */
-  def vec_dot_cols(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("vec_dot", a, b)
-  }
-
-  /** Squared L2 norm of a float-array column. */
-  def vec_norm_sq(spark: SparkSession, a: String): Column = vec_dot(spark, a, a)
+  /** Dot product of two float-array columns (double result). */
+  def vecDot(a: Column, b: Column): Column =
+    column(FloatVecDot(expression(a), expression(b)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{ArrayFunctions, TextFunctions, VectorFunctions}
 import graft.pipeline.Tables
 
 /** Deduplication operators over the `documents` table — the core of any
@@ -120,10 +121,9 @@ object Dedup {
   val MINHASH_MASK: Long = (1L << 56) - 1
 
   def signatures(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), expr(s"minhash_sig(toks, $NUM_HASHES)").as("sig"))
+      .select(col("doc_id"), TextFunctions.minhashSig(col("toks"), NUM_HASHES).as("sig"))
       .select(col("doc_id") +:
         (0 until NUM_HASHES).map(h => element_at(col("sig"), h + 1).as(s"mh$h")): _*)
   }
@@ -313,11 +313,10 @@ object Dedup {
     * excluded, exactly like the exploded group-by.
     */
   def simhashSignatures(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), expr("simhash56(toks)").as("simhash"))
+      .select(col("doc_id"), TextFunctions.simhash56(col("toks")).as("simhash"))
   }
 
   def dedupSimhash(spark: SparkSession, sfDir: String): DataFrame =
@@ -600,10 +599,6 @@ object Dedup {
     */
   private[graft] def ngramJaccardPairsFromSets(sets: DataFrame,
       nDocsHint: Long = -1L): DataFrame = {
-    // both verify kernels call sorted_intersect_count; the seam owns the
-    // registration so a caller handing in a pre-built set table (instead
-    // of coming through jaccardSets) doesn't depend on session state
-    graft.functions.ArrayFunctions.register(sets.sparkSession)
     val n = if (nDocsHint >= 0L) nDocsHint else sets.count()
     val pfx = jaccardPrefix(sets)
     if (n < jaccardGroupedN(Resources.payloadBudget(sets.sparkSession)))
@@ -642,12 +637,10 @@ object Dedup {
     * whose token explode is the expensive half of its pass.
     */
   private[graft] def jaccardSets(docs: DataFrame): DataFrame = {
-    graft.functions.ArrayFunctions.register(docs.sparkSession)
-    graft.functions.TextFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), expr("shingle_hashes(toks)").as("shs"))
+      .select(col("doc_id"), TextFunctions.shingleHashes(col("toks")).as("shs"))
       .withColumn("n", size(col("shs")).cast("long"))
       .localCheckpoint()
   }
@@ -702,7 +695,7 @@ object Dedup {
       // the per-pair merge intersect
       .filter(col("n1") * JACCARD_THRESHOLD <= col("n2") &&
         col("n2") * JACCARD_THRESHOLD <= col("n1"))
-      .withColumn("c", expr("sorted_intersect_count(shs1, shs2)"))
+      .withColumn("c", ArrayFunctions.sortedIntersectCount(col("shs1"), col("shs2")))
       .filter(jacc >= JACCARD_THRESHOLD)
       .select(col("d1"), col("d2"), round(jacc, 6).as("jaccard"))
   }
@@ -976,14 +969,12 @@ object Dedup {
     * agreement is an array-side zip over the two 12-long signatures.
     */
   def minhashEstimates(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
-    graft.functions.ArrayFunctions.register(docs.sparkSession)
     val payload = exactReps(docs)
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"),
-        expr(s"minhash_sig(toks, $NUM_HASHES)").as("sig"),
-        expr("shingle_hashes(toks)").as("shs"))
+        TextFunctions.minhashSig(col("toks"), NUM_HASHES).as("sig"),
+        TextFunctions.shingleHashes(col("toks")).as("shs"))
       .withColumn("n", size(col("shs")).cast("long"))
       .localCheckpoint() // both pair sides read it
     val s1 = payload.select(col("doc_id").as("d1"), col("sig").as("sig1"),
@@ -997,7 +988,7 @@ object Dedup {
       .join(s1, Seq("d1")).join(s2, Seq("d2"))
       .withColumn("n_agree",
         expr("size(filter(zip_with(sig1, sig2, (x, y) -> x = y), b -> b))").cast("long"))
-      .withColumn("c", expr("sorted_intersect_count(shs1, shs2)"))
+      .withColumn("c", ArrayFunctions.sortedIntersectCount(col("shs1"), col("shs2")))
       .select(col("d1"), col("d2"), col("n_bands"), col("n_agree"),
         est.as("est_jaccard"), exact.as("jaccard"),
         round(abs(est - exact), 6).as("abs_err"))
@@ -1119,10 +1110,9 @@ object Dedup {
     */
   private[ops] def bucketColBits(t: Int, dim: Int, bits: Int): Column =
     (0 until bits).map { i =>
-      val arr = (0 until dim)
-        .map(j => s"CAST(${hypSign(t, i, j, bits)} AS FLOAT)")
-        .mkString("array(", ", ", ")")
-      when(expr(s"vec_dot(embedding, $arr)") > 0, lit(1 << i)).otherwise(lit(0))
+      val plane = Array.tabulate(dim)(j => hypSign(t, i, j, bits).toFloat)
+      when(VectorFunctions.vecDot(col("embedding"), typedLit(plane)) > 0, lit(1 << i))
+        .otherwise(lit(0))
     }.reduce(_ + _)
 
   /** The knn candidate stage as a BUCKET-GROUPED KERNEL — the rung-2
@@ -1354,8 +1344,6 @@ object Dedup {
     * shingles. Verification is the codegen'd sorted-merge intersect.
     */
   def containmentPairs(docs: DataFrame): DataFrame = {
-    graft.functions.ArrayFunctions.register(docs.sparkSession)
-    graft.functions.TextFunctions.register(docs.sparkSession)
     // measured: spreading the input before this kernel is a net LOSS at
     // fixture scale (the single-pass hash kernel is cheaper than the
     // exchange it would take to parallelize it) — unlike the DSIR fit,
@@ -1363,7 +1351,7 @@ object Dedup {
     val sets = docs
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), expr("shingle_hashes(toks)").as("shs"))
+      .select(col("doc_id"), TextFunctions.shingleHashes(col("toks")).as("shs"))
       .withColumn("n", size(col("shs")).cast("long"))
       .localCheckpoint()
     val sh = sets.select(col("doc_id"), col("n"), explode(col("shs")).as("h"))
@@ -1385,7 +1373,7 @@ object Dedup {
     val s2 = sets.select(col("doc_id").as("d2"), col("shs").as("shs2"))
     val cont = col("c").cast("double") / col("n1").cast("double")
     cands.join(s1, Seq("d1")).join(s2, Seq("d2"))
-      .withColumn("c", expr("sorted_intersect_count(shs1, shs2)"))
+      .withColumn("c", ArrayFunctions.sortedIntersectCount(col("shs1"), col("shs2")))
       .filter(cont >= CONTAINMENT_THRESHOLD)
       .select(col("d1"), col("d2"), round(cont, 6).as("containment"))
   }
@@ -1894,12 +1882,10 @@ object Dedup {
     * [[incrementalClusters]]. One zero-shuffle codegen projection.
     */
   private def shingleSets(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
-    graft.functions.ArrayFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id").as("id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("id"), expr("shingle_hashes(toks)").as("shs"))
+      .select(col("id"), TextFunctions.shingleHashes(col("toks")).as("shs"))
       .withColumn("n", size(col("shs")).cast("long"))
   }
 
@@ -1916,7 +1902,7 @@ object Dedup {
     cands.join(s1, Seq(aCol)).join(s2, Seq(bCol))
       .filter(col("n1") * JACCARD_THRESHOLD <= col("n2") &&
         col("n2") * JACCARD_THRESHOLD <= col("n1"))
-      .withColumn("c", expr("sorted_intersect_count(shs1, shs2)"))
+      .withColumn("c", ArrayFunctions.sortedIntersectCount(col("shs1"), col("shs2")))
       .filter(jacc >= JACCARD_THRESHOLD)
       .select(col(aCol), col(bCol))
   }
@@ -2211,12 +2197,11 @@ object Dedup {
     * 14 md5 hex chars (56 bits, sign-safe) of the span text.
     */
   def winnowFingerprints(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= SPAN_WORDS + WINNOW_WINDOW - 1)
       .select(col("doc_id"), explode(
-        expr(s"winnow_fps(toks, $SPAN_WORDS, $WINNOW_WINDOW)")).as("fp"))
+        TextFunctions.winnowFps(col("toks"), SPAN_WORDS, WINNOW_WINDOW)).as("fp"))
   }
 
   /** Winnowing dedup: candidate pairs share a selected fingerprint — the
@@ -2278,7 +2263,6 @@ object Dedup {
     // duplicate candidates from multi-table hits are left in place — they
     // carry identical cosines, so the rn=1 winner is unchanged and the
     // dedup shuffle is saved.
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     val base = Similarity.withNorm(emb).localCheckpoint()
     // occupancy-pinned geometry (see [[hypBitsFor]]): the per-vector
     // candidate pool stays at its gated design size instead of growing
@@ -2295,7 +2279,7 @@ object Dedup {
       col("embedding").as("ea"), col("nm").as("na"))
     val b = buckets.select(col("t"), col("bucket"), col("vec_id").as("nn_id"),
       col("embedding").as("eb"), col("nm").as("nb"))
-    val cosine = round(Similarity.dotExpr("ea", "eb") / (col("na") * col("nb")), 6)
+    val cosine = round(VectorFunctions.vecDot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
     // best candidate per vector as min(struct(−cosine, nn_id)) — the same
     // winner a row_number window picks (max cosine, then min nn_id), but a
     // partial-agg-friendly hash aggregate: bucket-join fan-out combines
@@ -2327,7 +2311,6 @@ object Dedup {
   val KNN_K = 3
 
   def knnGraph(emb: DataFrame, k: Int = KNN_K, dim: Int = EMB_DIM): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     val base = Similarity.withNorm(emb).localCheckpoint()
     // occupancy-pinned geometry: one count over the checkpointed base (a
     // driver scalar, same cost class as pageRank's node count) sizes the
@@ -2357,7 +2340,6 @@ object Dedup {
     */
   private[graft] def knnGraphJoin(emb: DataFrame, k: Int = KNN_K,
       dim: Int = EMB_DIM): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     val base = Similarity.withNorm(emb).localCheckpoint()
     val bits = hypBitsFor(base.count())
     val buckets = base.select(
@@ -2373,7 +2355,8 @@ object Dedup {
     val cand = a.join(b, Seq("t", "bucket"))
       .filter(col("vec_id") =!= col("nn_id"))
       .select(col("vec_id"), col("nn_id"),
-        round(Similarity.dotExpr("ea", "eb") / (col("na") * col("nb")), 6).as("cosine"))
+        round(VectorFunctions.vecDot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
+          .as("cosine"))
       .groupBy(col("vec_id"), col("nn_id")).agg(min(col("cosine")).as("cosine"))
     val w = Window.partitionBy(col("vec_id")).orderBy(col("cosine").desc, col("nn_id"))
     cand.withColumn("rn", row_number().over(w))
@@ -2471,7 +2454,6 @@ object Dedup {
     * gate a vacuous zero).
     */
   def embLshQuality(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = Similarity.withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     val bits = hypBitsFor(base.count())
     val probes = base.filter(col("vec_id") < EMB_QUALITY_PROBES)
@@ -2480,7 +2462,8 @@ object Dedup {
       .select(col("vec_id").as("v_id"), col("embedding").as("ev"), col("nm").as("nv"))
       .join(broadcast(probes), col("q_id") =!= col("v_id"))
       .select(col("q_id"), col("v_id"),
-        round(Similarity.dotExpr("eq", "ev") / (col("nq") * col("nv")), 6).as("cosine"))
+        round(VectorFunctions.vecDot(col("eq"), col("ev")) / (col("nq") * col("nv")), 6)
+          .as("cosine"))
     val buckets = base.select(col("vec_id"),
       explode(array((0 until HYP_TABLES).map(t =>
         struct(lit(t).as("t"), bucketColBits(t, EMB_DIM, bits).as("bucket"))): _*)).as("tb"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions.vecDot
 import graft.pipeline.Tables
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -31,23 +32,12 @@ import graft.pipeline.Tables
   */
 object Similarity {
 
-  /** Left-fold dot product of two float-array columns, in double — the
-    * fused codegen expression (graft.functions.FloatVecDot), bit-identical
-    * to the HOF `aggregate(zip_with(...))` formulation it replaces but with
-    * no per-pair array allocation. Registration is session-idempotent; the
-    * SparkSession is taken from the active session of the calling query.
-    */
-  def dotExpr(a: String, b: String): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    graft.functions.VectorFunctions.vec_dot(spark, a, b)
-  }
-
   /** Adds the L2 norm `nm` to an embeddings frame — computed once per
     * vector, before any join fans rows out.
     */
   def withNorm(emb: DataFrame): DataFrame =
     emb.withColumn("nm",
-      sqrt(graft.functions.VectorFunctions.vec_norm_sq(emb.sparkSession, "embedding")))
+      sqrt(vecDot(col("embedding"), col("embedding"))))
 
   /** DuckDB twins: positional unnest + per-vector norms. */
   val UNNEST_CTE: String =
@@ -73,7 +63,7 @@ object Similarity {
     val cands = base.select(col("vec_id").as("n_id"), col("embedding").as("ec"), col("nm").as("nc"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
     cands.join(broadcast(queries), col("n_id") =!= col("q_id"))
-      .withColumn("cosine", round(dotExpr("eq", "ec") / (col("nq") * col("nc")), 6))
+      .withColumn("cosine", round(vecDot(col("eq"), col("ec")) / (col("nq") * col("nc")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("n_id"), col("cosine"), col("rnk"))
@@ -113,7 +103,7 @@ object Similarity {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
     cands.join(broadcast(queries), Seq("label"))
       .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cosine", round(dotExpr("eq", "ec") / (col("nq") * col("nc")), 6))
+      .withColumn("cosine", round(vecDot(col("eq"), col("ec")) / (col("nq") * col("nc")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("label"), col("n_id"), col("cosine"), col("rnk"))
@@ -152,12 +142,9 @@ object Similarity {
     * (max rounded cosine, then min cell) with no join and no shuffle.
     */
   private def assignCol(cents: Seq[Cent]): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
     val scored = cents.map { case (cell, carr, cnorm) =>
       val cos = round(
-        graft.functions.VectorFunctions
-          .vec_dot_cols(spark, col("embedding"), typedLit(carr)) /
-          (col("nm") * lit(cnorm)), 6)
+        vecDot(col("embedding"), typedLit(carr)) / (col("nm") * lit(cnorm)), 6)
       struct((-cos).as("nc"), lit(cell).as("cell"))
     }
     least(scored: _*).getField("cell")
@@ -166,7 +153,7 @@ object Similarity {
   /** One Lloyd round: assign (zero-shuffle projection) + per-(cell, pos)
     * component averages (one hash aggregation), K·dim rows collected to
     * the driver. Norms fold left in double over pos order — bit-identical
-    * to `vec_norm_sq` over the same float array. Cells that lose all
+    * to [[withNorm]]'s self-dot over the same float array. Cells that lose all
     * members disappear, matching the SQL group-by.
     */
   private def lloydRound(base: DataFrame, cents: Seq[Cent]): Seq[Cent] = {
@@ -256,7 +243,6 @@ object Similarity {
     */
   def cellAssigner(corpusEmb: DataFrame, k: Int = KMEANS_K,
       iters: Int = KMEANS_ITERS): Column = {
-    graft.functions.VectorFunctions.register(corpusEmb.sparkSession)
     val base = withNorm(corpusEmb).localCheckpoint()
     assignCol(kmeansModel(base, k, iters))
   }
@@ -270,7 +256,6 @@ object Similarity {
     * is deterministic and round-pinned).
     */
   def sharedCellAssigner(spark: SparkSession, sfDir: String): Column = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     assignCol(corpusModel(spark, sfDir, base))
   }
@@ -283,7 +268,6 @@ object Similarity {
     * against it as stateless codegen projections.
     */
   def sharedDriftScorer(spark: SparkSession, sfDir: String): (Column, Column) = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     val model = sharedPriorHalfModel(spark, sfDir, base)
     (assignCol(model), maxCosCol(model))
@@ -294,7 +278,6 @@ object Similarity {
     * only their own k-means cell.
     */
   def simsearchIvfKmeans(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     val withCell = base.withColumn("cell",
       assignCol(corpusModel(spark, sfDir, base)))
@@ -306,7 +289,7 @@ object Similarity {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
     cands.join(broadcast(queries), Seq("cell"))
       .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cosine", round(dotExpr("eq", "ec") / (col("nq") * col("nc")), 6))
+      .withColumn("cosine", round(vecDot(col("eq"), col("ec")) / (col("nq") * col("nc")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= IVF_TOP_K)
       .select(col("q_id"), col("cell"), col("n_id"), col("cosine"), col("rnk"))
@@ -333,7 +316,7 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("embedding").as("eq"), col("nm").as("nq"))
     val pw = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("cell"))
     val probed = queries.crossJoin(broadcast(cents))
-      .withColumn("qcos", round(dotExpr("eq", "carr") / (col("nq") * col("cnorm")), 6))
+      .withColumn("qcos", round(vecDot(col("eq"), col("carr")) / (col("nq") * col("cnorm")), 6))
       .withColumn("pr", row_number().over(pw))
       .filter(col("pr") <= nprobe)
       .select(col("q_id"), col("cell"), col("eq"), col("nq"))
@@ -343,14 +326,13 @@ object Similarity {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
     cands.join(broadcast(probed), Seq("cell"))
       .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cosine", round(dotExpr("eq", "ec") / (col("nq") * col("nc")), 6))
+      .withColumn("cosine", round(vecDot(col("eq"), col("ec")) / (col("nq") * col("nc")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= IVF_TOP_K)
       .select(col("q_id"), col("n_id"), col("cosine"), col("rnk"))
   }
 
   def simsearchIvfProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     val model = corpusModel(spark, sfDir, base)
     probeTopk(base.withColumn("cell", assignCol(model)),
@@ -372,7 +354,6 @@ object Similarity {
     * at corpus scale.
     */
   def simsearchRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     val model = corpusModel(spark, sfDir, base)
     val (cents, withCell) =
@@ -383,7 +364,7 @@ object Similarity {
       col("embedding").as("ec"), col("nm").as("nc"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
     val truth = cands.join(broadcast(queries), col("n_id") =!= col("q_id"))
-      .withColumn("cosine", round(dotExpr("eq", "ec") / (col("nq") * col("nc")), 6))
+      .withColumn("cosine", round(vecDot(col("eq"), col("ec")) / (col("nq") * col("nc")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= IVF_TOP_K)
       .select(col("q_id"), col("n_id"))
@@ -444,14 +425,13 @@ object Similarity {
   }
 
   def simsearchSq(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val coded = sqCodes(Tables.embeddings(spark, sfDir))
     val queries = coded.filter(col("vec_id") < N_QUERIES)
       .select(col("vec_id").as("q_id"), col("code").as("qc"))
     val cands = coded.select(col("vec_id").as("n_id"), col("code").as("cc"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("sq_score").desc, col("n_id"))
     cands.join(broadcast(queries), col("n_id") =!= col("q_id"))
-      .withColumn("sq_score", round(dotExpr("qc", "cc"), 6))
+      .withColumn("sq_score", round(vecDot(col("qc"), col("cc")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= IVF_TOP_K)
       .select(col("q_id"), col("n_id"), col("sq_score"), col("rnk").cast("long").as("rnk"))
@@ -495,7 +475,6 @@ object Similarity {
     * only rank candidates inside the cell.
     */
   def simsearchIvfSq(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     val cells = corpusCells(spark, sfDir, base)
     val coded = sqCodes(Tables.embeddings(spark, sfDir)).join(cells, Seq("vec_id"))
@@ -505,7 +484,7 @@ object Similarity {
     val w = Window.partitionBy(col("q_id")).orderBy(col("sq_score").desc, col("n_id"))
     cands.join(broadcast(queries), Seq("cell"))
       .filter(col("n_id") =!= col("q_id"))
-      .withColumn("sq_score", round(dotExpr("qc", "cc"), 6))
+      .withColumn("sq_score", round(vecDot(col("qc"), col("cc")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= IVF_TOP_K)
       .select(col("q_id"), col("cell"), col("n_id"), col("sq_score"),
@@ -596,7 +575,6 @@ object Similarity {
     * top-k search above and the two-stage refine ([[simsearchRerank]]).
     */
   private def pqAdcScored(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val perSub = (0 until PQ_M).map { s =>
       val model = pqModel(spark, sfDir, s)
@@ -612,7 +590,7 @@ object Similarity {
       queries.select(col("vec_id").as("q_id"),
           expr(s"slice(embedding, ${s * PQ_SUB + 1}, $PQ_SUB)").as("qs"))
         .crossJoin(broadcast(perSub(s)._1))
-        .select(col("q_id"), col("cell").as(s"c$s"), dotExpr("qs", "carr").as(s"p$s"))
+        .select(col("q_id"), col("cell").as(s"c$s"), vecDot(col("qs"), col("carr")).as(s"p$s"))
     }
     val joined = (1 until PQ_M).foldLeft(
       codesWide.join(broadcast(luts(0)), Seq("c0"))) { (acc, s) =>
@@ -714,14 +692,13 @@ object Similarity {
     */
   private def mipsTruth(spark: SparkSession, sfDir: String): DataFrame =
     SharedFits.memo(spark, s"mips_truth:$sfDir") {
-      graft.functions.VectorFunctions.register(spark)
       val emb = Tables.embeddings(spark, sfDir)
       val queries = emb.filter(col("vec_id") < N_QUERIES)
         .select(col("vec_id").as("q_id"), col("embedding").as("eq"))
       val cands = emb.select(col("vec_id").as("n_id"), col("embedding").as("ec"))
       val w = Window.partitionBy(col("q_id")).orderBy(col("ip").desc, col("n_id"))
       cands.join(broadcast(queries), col("n_id") =!= col("q_id"))
-        .withColumn("ip", round(dotExpr("eq", "ec"), 6))
+        .withColumn("ip", round(vecDot(col("eq"), col("ec")), 6))
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= IVF_TOP_K)
         .select(col("q_id"), col("n_id"))
@@ -729,7 +706,6 @@ object Similarity {
     }
 
   def simsearchRecallQuant(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val truth = mipsTruth(spark, sfDir)
     val denom = (N_QUERIES * IVF_TOP_K).toDouble
     def recallRow(method: String, res: DataFrame): DataFrame =
@@ -825,7 +801,6 @@ object Similarity {
     * rank identically.
     */
   def simsearchRerank(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc").desc, col("n_id"))
     val queries = emb.filter(col("vec_id") < N_QUERIES)
@@ -839,7 +814,7 @@ object Similarity {
     val exact = cand
       .join(emb.select(col("vec_id").as("n_id"), col("embedding").as("ec")), Seq("n_id"))
       .join(broadcast(queries), Seq("q_id"))
-      .withColumn("ip", round(dotExpr("eq", "ec"), 6))
+      .withColumn("ip", round(vecDot(col("eq"), col("ec")), 6))
       .select(col("q_id"), col("n_id"), col("prnk"), col("ip"))
       .localCheckpoint()
     // exact-MIPS truth — the SAME shared frame simsearchRecallQuant ranks
@@ -930,7 +905,6 @@ object Similarity {
     * the top k contribute 0. Same broadcast-probe shapes as every sweep.
     */
   def simsearchLabelMrr(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val labels = emb.select(col("vec_id"), col("label"))
     val base = withNorm(emb).localCheckpoint()
@@ -1219,7 +1193,6 @@ object Similarity {
     * predicate.
     */
   def simsearchFilteredRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     val model = corpusModel(spark, sfDir, base)
     val (cents, withCell) =
@@ -1233,7 +1206,7 @@ object Similarity {
         col("embedding").as("ec"), col("nm").as("nc"))
       .join(broadcast(queries),
         col("label") === col("q_label") && col("n_id") =!= col("q_id"))
-      .withColumn("cosine", round(dotExpr("eq", "ec") / (col("nq") * col("nc")), 6))
+      .withColumn("cosine", round(vecDot(col("eq"), col("ec")) / (col("nq") * col("nc")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= IVF_TOP_K)
       .select(col("q_id"), col("n_id"))
@@ -1244,7 +1217,7 @@ object Similarity {
       // the filter); the label predicate applies after cell membership
       val pw = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("cell"))
       val probed = queries.crossJoin(broadcast(cents))
-        .withColumn("qcos", round(dotExpr("eq", "carr") / (col("nq") * col("cnorm")), 6))
+        .withColumn("qcos", round(vecDot(col("eq"), col("carr")) / (col("nq") * col("cnorm")), 6))
         .withColumn("pr", row_number().over(pw))
         .filter(col("pr") <= np)
         .select(col("q_id"), col("q_label"), col("cell"), col("eq"), col("nq"))
@@ -1252,7 +1225,7 @@ object Similarity {
           col("cell"), col("embedding").as("ec"), col("nm").as("nc"))
         .join(broadcast(probed), Seq("cell"))
         .filter(col("n_id") =!= col("q_id") && col("label") === col("q_label"))
-        .withColumn("cosine", round(dotExpr("eq", "ec") / (col("nq") * col("nc")), 6))
+        .withColumn("cosine", round(vecDot(col("eq"), col("ec")) / (col("nq") * col("nc")), 6))
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= IVF_TOP_K)
         .select(col("q_id"), col("n_id"))
@@ -1353,7 +1326,6 @@ object Similarity {
     * all exact integer counts but the final rounded ratio.
     */
   def simsearchFilteredAdaptive(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     val model = corpusModel(spark, sfDir, base)
     val (cents, withCell) =
@@ -1369,7 +1341,7 @@ object Similarity {
         col("embedding").as("ec"), col("nm").as("nc"))
       .join(broadcast(queries),
         col("label") === col("q_label") && col("n_id") =!= col("q_id"))
-      .withColumn("cosine", round(dotExpr("eq", "ec") / (col("nq") * col("nc")), 6))
+      .withColumn("cosine", round(vecDot(col("eq"), col("ec")) / (col("nq") * col("nc")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= IVF_TOP_K)
       .select(col("q_id"), col("n_id"))
@@ -1378,7 +1350,7 @@ object Similarity {
     RECALL_NPROBES.map { np =>
       val pw = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("cell"))
       val probed = queries.crossJoin(broadcast(cents))
-        .withColumn("qcos", round(dotExpr("eq", "carr") / (col("nq") * col("cnorm")), 6))
+        .withColumn("qcos", round(vecDot(col("eq"), col("carr")) / (col("nq") * col("cnorm")), 6))
         .withColumn("pr", row_number().over(pw))
         .join(broadcast(labCounts), Seq("q_label"))
         .crossJoin(broadcast(totals))
@@ -1390,7 +1362,7 @@ object Similarity {
           col("cell"), col("embedding").as("ec"), col("nm").as("nc"))
         .join(broadcast(probed), Seq("cell"))
         .filter(col("n_id") =!= col("q_id") && col("label") === col("q_label"))
-        .withColumn("cosine", round(dotExpr("eq", "ec") / (col("nq") * col("nc")), 6))
+        .withColumn("cosine", round(vecDot(col("eq"), col("ec")) / (col("nq") * col("nc")), 6))
         .localCheckpoint() // read thrice: candidate count, top-k, hits
       val ivf = scored
         .withColumn("rnk", row_number().over(w))
@@ -1492,7 +1464,6 @@ object Similarity {
     * brute-force top-k, with the label-mismatch predicate in the join.
     */
   def simsearchHardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir))
     val queries = base.filter(col("vec_id") < N_QUERIES)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -1501,7 +1472,7 @@ object Similarity {
       col("embedding").as("ec"), col("nm").as("nc"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
     cands.join(broadcast(queries), col("label") =!= col("q_label"))
-      .withColumn("cosine", round(dotExpr("eq", "ec") / (col("nq") * col("nc")), 6))
+      .withColumn("cosine", round(vecDot(col("eq"), col("ec")) / (col("nq") * col("nc")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= IVF_TOP_K)
       .select(col("q_id"), col("n_id"), col("label"), col("cosine"), col("rnk"))
@@ -1542,7 +1513,6 @@ object Similarity {
     * set computes once and checkpoints.
     */
   def simsearchRecallDim(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     truncationRecall(Tables.embeddings(spark, sfDir), RECALL_DIMS,
       col("vec_id") < N_QUERIES, IVF_TOP_K)
   }
@@ -1626,10 +1596,6 @@ object Similarity {
     if (((x >>> 17) & 1L) == 1L) 1 else -1
   }
 
-  private def rpSignArrSql(j: Int, dim: Int): String =
-    (0 until dim).map(i => s"CAST(${rpSign(j, i)} AS FLOAT)")
-      .mkString("array(", ", ", ")")
-
   /** Rademacher random projection of the embedding column to `d`
     * components: p_j = Σᵢ ±xᵢ, each component one `vec_dot` against a
     * constant ±1 vector (codegen'd fused loop, exact: multiplying by
@@ -1641,9 +1607,9 @@ object Similarity {
     * the JL distortion rate.
     */
   def rpProjected(emb: DataFrame, d: Int, dim: Int = Dedup.EMB_DIM): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     emb.select(col("vec_id"), array((0 until d).map(j =>
-      expr(s"CAST(vec_dot(embedding, ${rpSignArrSql(j, dim)}) AS FLOAT)")): _*)
+      vecDot(col("embedding"), typedLit(Array.tabulate(dim)(i => rpSign(j, i).toFloat)))
+        .cast("float")): _*)
       .as("embedding"))
   }
 
@@ -1667,7 +1633,6 @@ object Similarity {
   }
 
   def simsearchRecallRp(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     rpRecall(Tables.embeddings(spark, sfDir), RECALL_DIMS,
       col("vec_id") < N_QUERIES, IVF_TOP_K)
   }
@@ -1745,7 +1710,6 @@ object Similarity {
     * exists in the plan.
     */
   def dedupSemantic(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     semanticDedupOn(base, KMEANS_K, KMEANS_ITERS, SEMDEDUP_TAU)
   }
@@ -1764,7 +1728,7 @@ object Similarity {
       col("embedding").as("eb"), col("nm").as("nb"))
     val drops = a.join(b, Seq("cell"))
       .filter(col("a_id") < col("b_id"))
-      .withColumn("cosine", round(dotExpr("ea", "eb") / (col("na") * col("nb")), 6))
+      .withColumn("cosine", round(vecDot(col("ea"), col("eb")) / (col("na") * col("nb")), 6))
       .filter(col("cosine") >= tau)
       .select(col("b_id").as("vec_id")).distinct()
       .withColumn("dropped", lit(true))
@@ -1845,7 +1809,6 @@ object Similarity {
     * no shuffle of the corpus beyond the final per-vector hash agg.
     */
   def semanticDecontam(emb: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     val base = withNorm(emb)
     val eval = base.filter(col("vec_id") % SEM_DECONTAM_MOD === 0)
       .select(col("vec_id").as("eval_id"), col("embedding").as("ee"),
@@ -1854,7 +1817,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding").as("ec"), col("nm").as("nc"))
     corpus.join(broadcast(eval))
       .withColumn("cosine",
-        round(dotExpr("ec", "ee") / (col("nc") * col("ne")), 6))
+        round(vecDot(col("ec"), col("ee")) / (col("nc") * col("ne")), 6))
       .groupBy(col("vec_id"))
       .agg(min(struct((-col("cosine")).as("ncos"), col("eval_id").as("e")))
         .as("best"))
@@ -1905,7 +1868,6 @@ object Similarity {
     * and the output size is data-dependent by design.
     */
   def rangeSearch(emb: DataFrame, isQuery: Column, minCos: Double): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     val base = withNorm(emb)
     val queries = base.filter(isQuery)
       .select(col("vec_id").as("q_id"), col("embedding").as("eq"),
@@ -1913,7 +1875,7 @@ object Similarity {
     val cands = base.select(col("vec_id").as("n_id"),
       col("embedding").as("ec"), col("nm").as("nc"))
     cands.join(broadcast(queries), col("n_id") =!= col("q_id"))
-      .withColumn("cosine", round(dotExpr("eq", "ec") / (col("nq") * col("nc")), 6))
+      .withColumn("cosine", round(vecDot(col("eq"), col("ec")) / (col("nq") * col("nc")), 6))
       .filter(col("cosine") >= minCos)
       .select(col("q_id"), col("n_id"), col("cosine"))
   }
@@ -2059,7 +2021,6 @@ object Similarity {
     */
   def ivfIndexStats(emb: DataFrame, k: Int = KMEANS_K,
       iters: Int = KMEANS_ITERS): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     val base = withNorm(emb).localCheckpoint()
     val asg = kmeansFit(base, k, iters)._2
     val counts = asg.groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
@@ -2103,7 +2064,7 @@ object Similarity {
   }
 
   private def clusterQuality(base: DataFrame, model: Seq[Cent]): DataFrame = {
-    val cos = round(dotExpr("embedding", "carr") / (col("nm") * col("cnorm")), 6)
+    val cos = round(vecDot(col("embedding"), col("carr")) / (col("nm") * col("cnorm")), 6)
     base.withColumn("cell", assignCol(model))
       .join(broadcast(centsDf(base, model)), Seq("cell"))
       .withColumn("cos", cos)
@@ -2114,7 +2075,6 @@ object Similarity {
   }
 
   def simsearchClusterQuality(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     clusterQuality(base, corpusModel(spark, sfDir, base))
   }
@@ -2170,7 +2130,6 @@ object Similarity {
     * oracle subtract bit-identical inputs.
     */
   def indexDrift(emb: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     val base = withNorm(emb).localCheckpoint()
     indexDriftWith(base, priorHalfModel(base))
   }
@@ -2203,7 +2162,7 @@ object Similarity {
     val scored = base.withColumn("cell", assignCol(model))
       .join(broadcast(centsDf(base, model)), Seq("cell"))
       .withColumn("cos",
-        round(dotExpr("embedding", "carr") / (col("nm") * col("cnorm")), 6))
+        round(vecDot(col("embedding"), col("carr")) / (col("nm") * col("cnorm")), 6))
     val stat = scored.groupBy(col("cell")).agg(
       count(when(!isNew, 1)).as("n_prior"),
       count(when(isNew, 1)).as("n_new"),
@@ -2234,7 +2193,6 @@ object Similarity {
   }
 
   def simsearchIndexDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     indexDriftWith(base, sharedPriorHalfModel(spark, sfDir, base))
   }
@@ -2243,14 +2201,10 @@ object Similarity {
     * numerically identical to assigning first and joining the centroid
     * back in, because assignment IS argmax of this same expression.
     */
-  private def maxCosCol(cents: Seq[Cent]): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
+  private def maxCosCol(cents: Seq[Cent]): Column =
     greatest(cents.map { case (_, carr, cnorm) =>
-      round(graft.functions.VectorFunctions
-        .vec_dot_cols(spark, col("embedding"), typedLit(carr)) /
-        (col("nm") * lit(cnorm)), 6)
+      round(vecDot(col("embedding"), typedLit(carr)) / (col("nm") * lit(cnorm)), 6)
     }: _*)
-  }
 
   /** (cell, cos) columns against the drift quantizer fitted on the
     * STANDING corpus with [[indexDrift]]'s fit rule (seeds = its first
@@ -2261,7 +2215,6 @@ object Similarity {
     * the batch report scores the new half.
     */
   def driftScorerCols(corpus: DataFrame): (Column, Column) = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val base = withNorm(corpus).localCheckpoint()
     val model = kmeansModel(base, KMEANS_K, KMEANS_ITERS,
       seedPred = col("vec_id") < 2L * KMEANS_K)
@@ -2389,7 +2342,6 @@ object Similarity {
   }
 
   def simsearchDiverseSample(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir)).localCheckpoint()
     diverseSampleOfCells(corpusCells(spark, sfDir, base))
   }
@@ -2486,7 +2438,6 @@ object Similarity {
     * the gate's comparison is |Q|·k rows per degree.
     */
   def simsearchGraphDegreeRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val denom = (N_QUERIES * IVF_TOP_K).toDouble
     // The four per-degree NN-descent builds are independent (distinct
@@ -2589,7 +2540,6 @@ object Similarity {
       iters: Int = NND_ITERS, dim: Int = Dedup.EMB_DIM,
       init: Option[DataFrame] = None,
       payIn: Option[DataFrame] = None): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     // NOT overlapped (measured): racing the cheap payload pin against
     // the wide LSH-kernel init stole kernel slots inside callers that
     // already overlap this whole build (graph_insert_stream 5.3→5.6 s)
@@ -2611,7 +2561,7 @@ object Similarity {
           col("embedding").as("es"), col("nm").as("ns")), Seq("src"))
         .join(pay.select(col("vec_id").as("dst"),
           col("embedding").as("ed"), col("nm").as("nd")), Seq("dst"))
-        .withColumn("cosine", round(dotExpr("es", "ed") / (col("ns") * col("nd")), 6))
+        .withColumn("cosine", round(vecDot(col("es"), col("ed")) / (col("ns") * col("nd")), 6))
       adj = scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
         .select(col("src"), col("dst")).localCheckpoint()
     }
@@ -2634,7 +2584,6 @@ object Similarity {
   private[graft] def sharedNndSeed(spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame) =
     SharedFits.memo(spark, s"nnd_seed_kc${GRAPH_DEGREES.max}:$sfDir") {
-      graft.functions.VectorFunctions.register(spark)
       val base = withNorm(Tables.embeddings(spark, sfDir))
         .select(col("vec_id"), col("embedding"), col("nm")).localCheckpoint()
       val bits = Dedup.hypBitsFor(base.count())
@@ -2828,7 +2777,7 @@ object Similarity {
         col("nm").as("nq"), col("t"), col("bucket"))
     val nb = withBuckets.filter(isNode).select(col("vec_id").as("node"),
       col("embedding").as("ed"), col("nm").as("nd"), col("t"), col("bucket"))
-    val cosine = round(dotExpr("eq", "ed") / (col("nq") * col("nd")), 6)
+    val cosine = round(vecDot(col("eq"), col("ed")) / (col("nq") * col("nd")), 6)
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("node"))
     pin(nb.join(broadcast(qb), Seq("t", "bucket"))
       .select(col("q_id"), col("node"), cosine.as("cosine"))
@@ -2897,7 +2846,7 @@ object Similarity {
     // corpus side: taken from the caller when the stream hoisted it to
     // build time (it cannot change mid-stream), re-derived otherwise
     val nb = nodeBuckets.getOrElse(seedNodeBuckets(base, bits, isNode))
-    val cosine = round(dotExpr("eq", "ed") / (col("nq") * col("nd")), 6)
+    val cosine = round(vecDot(col("eq"), col("ed")) / (col("nq") * col("nd")), 6)
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("node"))
     pin(nb.join(broadcast(qb), Seq("t", "bucket"))
       .select(col("q_id"), col("node"), cosine.as("cosine"))
@@ -2929,7 +2878,7 @@ object Similarity {
   private def beamLoop(edges: DataFrame, queries: DataFrame,
       seedFrame: DataFrame, beamW: Int, rounds: Int,
       pin: DataFrame => DataFrame): DataFrame = {
-    val cosine = round(dotExpr("eq", "ed") / (col("nq") * col("nd")), 6)
+    val cosine = round(vecDot(col("eq"), col("ed")) / (col("nq") * col("nd")), 6)
     var visited = seedFrame
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("node"))
     (1 to rounds).foreach { _ =>
@@ -2966,7 +2915,6 @@ object Similarity {
     * [[GRAPH_BEAM]].
     */
   def simsearchGraphTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val base = withNorm(Tables.embeddings(spark, sfDir))
     graphTopkFrom(beamTraverse(graphIndex(spark, sfDir), base, GRAPH_BEAM))
   }
@@ -3070,7 +3018,6 @@ object Similarity {
     * corpus size — the whole point of graph serving at high recall.
     */
   def simsearchGraphRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val base = withNorm(emb)
     val edges = graphIndex(spark, sfDir)
@@ -3152,7 +3099,6 @@ object Similarity {
     * or rebuild.
     */
   def simsearchGraphInsert(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val edges = graphIndex(spark, sfDir, half = Some(0))
     val visited = beamTraverse(edges, withNorm(emb), GRAPH_BEAM,
@@ -3202,7 +3148,6 @@ object Similarity {
     * rebuild signal.
     */
   private def deleteRepairDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val edges = graphIndex(spark, sfDir)
     val delDst = col("dst") % DELETE_MOD === 0
     val aff = edges.filter(delDst && col("src") % DELETE_MOD =!= 0)
@@ -3223,7 +3168,7 @@ object Similarity {
       col("embedding").as("ed"), col("nm").as("nd"))
     val w = Window.partitionBy(col("src")).orderBy(col("cosine").desc, col("dst"))
     cand.join(q, Seq("src")).join(n, Seq("dst"))
-      .withColumn("cosine", round(dotExpr("eq", "ed") / (col("nq") * col("nd")), 6))
+      .withColumn("cosine", round(vecDot(col("eq"), col("ed")) / (col("nq") * col("nd")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= GRAPH_DEGREE)
       .select(col("src"), col("dst"), col("cosine"), col("rnk"))
@@ -3326,7 +3271,6 @@ object Similarity {
     * reconstruction).
     */
   def simsearchGraphRepairHealth(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val edges = graphIndex(spark, sfDir)
     val delDst = col("dst") % DELETE_MOD === 0
     val survSrc = col("src") % DELETE_MOD =!= 0

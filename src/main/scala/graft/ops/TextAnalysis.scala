@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{ArrayFunctions, BloomFunctions, TextFunctions}
 import graft.pipeline.Tables
 
 /** Text-analysis operators over `documents`: n-gram-profile language ID,
@@ -698,13 +699,12 @@ object TextAnalysis {
   val MAX_DUP_3GRAM_RATIO = 0.2
 
   def repetitionStats(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
     val dupRatio = lit(1.0) -
       col("distinct_3grams").cast("double") / col("total_3grams").cast("double")
     docs
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), expr("ngram_stats(toks)").as("s"))
+      .select(col("doc_id"), TextFunctions.ngramStats(col("toks")).as("s"))
       .select(col("doc_id"), col("s.total_3grams").as("total_3grams"),
         col("s.distinct_3grams").as("distinct_3grams"),
         col("s.top_count").as("top_count"))
@@ -1157,10 +1157,9 @@ object TextAnalysis {
     * terms, round(6) pins the float sum's order sensitivity.
     */
   def lexicalEntropy(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
-        expr("tok_entropy(split(text, '\\\\s+'))").as("e"))
+        TextFunctions.tokEntropy(split(col("text"), "\\s+")).as("e"))
       .select(col("doc_id"),
         col("e.n_tokens").as("n_tokens"),
         col("e.n_types").as("n_types"),
@@ -1285,11 +1284,10 @@ object TextAnalysis {
     * injective, ~D²/2⁶⁵ collision odds).
     */
   def dupCoverage(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
     val ex = docs
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), explode(expr("shingle_hashes(toks)")).as("h"))
+      .select(col("doc_id"), explode(TextFunctions.shingleHashes(col("toks"))).as("h"))
       .localCheckpoint() // fans into the DF count and the join back
     val df = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
     ex.join(df, Seq("h"))
@@ -1639,11 +1637,10 @@ object TextAnalysis {
   val DECONTAM_MOD = 97L
 
   def decontam(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
     val shs = docs
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), expr("shingle_hashes(toks)").as("shs"))
+      .select(col("doc_id"), TextFunctions.shingleHashes(col("toks")).as("shs"))
     val isBench = col("doc_id") % DECONTAM_MOD === 0
     val bench = shs.filter(isBench)
       .select(explode(col("shs")).as("h")).distinct()
@@ -2095,25 +2092,22 @@ object TextAnalysis {
     * the benchmark size, never by the corpus).
     */
   def decontamBloom(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.TextFunctions.register(spark)
-    graft.functions.BloomFunctions.register(spark)
     val shs = docs
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), expr("shingle_hashes(toks)").as("shs"))
+      .select(col("doc_id"), TextFunctions.shingleHashes(col("toks")).as("shs"))
     val isBench = col("doc_id") % DECONTAM_MOD === 0
     // fans into the sizing count, the Bloom build, and the confirm join
     val bench = shs.filter(isBench)
       .select(explode(col("shs")).as("h")).distinct().localCheckpoint()
     val nBench = math.max(bench.count(), 1L)
-    val nBits = graft.functions.BloomFunctions.optimalNumBits(nBench, BLOOM_FPP)
+    val nBits = BloomFunctions.optimalNumBits(nBench, BLOOM_FPP)
     val bloomBytes = bench
-      .agg(call_function("bloom_agg", col("h"), lit(nBench), lit(nBits)).as("bf"))
+      .agg(BloomFunctions.bloomAgg(col("h"), nBench, nBits).as("bf"))
       .head.getAs[Array[Byte]]("bf")
     // empty benchmark -> no bloom -> nothing can be contaminated
     val probe = if (bloomBytes == null) lit(false)
-      else call_function("bloom_might_contain", lit(bloomBytes), col("h"))
+      else BloomFunctions.mightContain(lit(bloomBytes), col("h"))
     val counts = shs.filter(!isBench)
       .select(col("doc_id"), explode(col("shs")).as("h"))
       .filter(probe)
@@ -2446,10 +2440,9 @@ object TextAnalysis {
     * 3-grams and drop out, exactly as in every batch consumer.
     */
   private[graft] def caShingleSets(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), expr("shingle_hashes(toks)").as("shs"))
+      .select(col("doc_id"), TextFunctions.shingleHashes(col("toks")).as("shs"))
       .withColumn("n", size(col("shs")).cast("long"))
   }
 
@@ -2588,7 +2581,6 @@ object TextAnalysis {
   private[graft] def rejStreamFlags(arrivals: DataFrame, aSets: DataFrame,
       fpIdxAll: DataFrame, postingsAll: DataFrame,
       setsAll: DataFrame, batchBounded: Boolean = false): DataFrame = {
-    graft.functions.ArrayFunctions.register(arrivals.sparkSession)
     val aq = quality(arrivals)
       .select(col("doc_id"), col("lang"), col("source"),
         col("n_tokens"), col("quality_score"))
@@ -2607,7 +2599,7 @@ object TextAnalysis {
       .join(setsAll.select(col("doc_id").as("sd"), col("shs").as("shs2"),
         col("n").as("n2")), Seq("sd"))
       .filter(col("n1") * jt <= col("n2") && col("n2") * jt <= col("n1"))
-      .withColumn("c", expr("sorted_intersect_count(shs1, shs2)"))
+      .withColumn("c", ArrayFunctions.sortedIntersectCount(col("shs1"), col("shs2")))
       .filter(jacc >= jt)
       .select(col("doc_id"))
     // within-batch AllPairs over the ALREADY-built (and checkpointed)

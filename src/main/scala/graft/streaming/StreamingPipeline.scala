@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.TextFunctions
 import graft.pipeline.{Sink, Tables}
 
 /** The reference cron job is batch-incremental with a manual watermark —
@@ -242,7 +243,6 @@ object StreamingPipeline {
       lateness: String = "1 hour"): Dataset[BandMatch] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.TextFunctions.register(spark)
     val bands = (0 until graft.ops.Dedup.NUM_BANDS).map { b =>
       val parts = (0 until graft.ops.Dedup.ROWS_PER_BAND).map(r =>
         element_at(col("sig"), b * graft.ops.Dedup.ROWS_PER_BAND + r + 1))
@@ -252,7 +252,7 @@ object StreamingPipeline {
       .select(col("doc_id"), col(tsCol).as("ts"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), col("ts"),
-        expr(s"minhash_sig(toks, ${graft.ops.Dedup.NUM_HASHES})").as("sig"))
+        TextFunctions.minhashSig(col("toks"), graft.ops.Dedup.NUM_HASHES).as("sig"))
       .select(col("doc_id"), col("ts"), explode(array(bands: _*)).as("b"))
       .select(col("doc_id"), col("ts"),
         col("b.band_no").as("band_no"), col("b.bucket").as("bucket"))
@@ -370,7 +370,6 @@ object StreamingPipeline {
   def graphInsertReplay(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): DataFrame = Replay(spark, "graph_insert_replay") { r =>
     import graft.ops.Similarity
-    graft.functions.VectorFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     // two independent stream-build chains (guide §2.6): the standing
     // even-half NND fit, and the pinned base → bit geometry → standing

@@ -8,7 +8,7 @@ class CorpusPrepSpec extends SparkSpec {
   import spark.implicits._
 
   test("corpus prep writes a lang-partitioned, idempotent shard with consistent stats") {
-    val out = java.nio.file.Files.createTempDirectory("corpusprep").toString
+    val out = SparkSpec.tempDir("corpusprep").toString
     val (d1, t1) = CorpusPrep.run(spark, "/root/testdata/sf0.001", out)
     val (d2, t2) = CorpusPrep.run(spark, "/root/testdata/sf0.001", out)
     assert(d1 > 0L && (d1, t1) == (d2, t2), "rerun must overwrite identically")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 
 import graft.ops.{Dedup, FitStore, SharedFits, Similarity, TextAnalysis}
@@ -23,7 +21,7 @@ class FitStoreSpec extends SparkSpec {
       df.collect().map(_.toString).sorted.toSeq
     SharedFits.clear(spark)
     val refit = rows(q())
-    val dir = Files.createTempDirectory(s"fitstore_$name").toString
+    val dir = SparkSpec.tempDir(s"fitstore_$name").toString
     spark.conf.set("spark.graft.fitDir", dir)
     try {
       SharedFits.clear(spark)
@@ -87,7 +85,7 @@ class FitStoreSpec extends SparkSpec {
 
   test("fingerprint keys the artifact: same fp loads, changed fp refits") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("fitstore_fp").toString
+    val dir = SparkSpec.tempDir("fitstore_fp").toString
     spark.conf.set("spark.graft.fitDir", dir)
     try {
       var fits = 0
@@ -115,7 +113,7 @@ class FitStoreSpec extends SparkSpec {
   }
 
   test("doubles artifacts round-trip bit-exactly") {
-    val dir = Files.createTempDirectory("fitstore_d").toString
+    val dir = SparkSpec.tempDir("fitstore_d").toString
     spark.conf.set("spark.graft.fitDir", dir)
     try {
       val w = Array(0.1, -3.5e-12, math.Pi, 0.0, -0.0, 1e300)

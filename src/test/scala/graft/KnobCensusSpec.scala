@@ -9,8 +9,8 @@ import scala.tools.nsc.reporters.StoreReporter
 
 /** The program's environment surface, read from the main sources: every
   * env var a main or operator reads, no stdout writes from library code
-  * (Bench's stdout carries exactly one JSON line), and no library member
-  * that only tests reach.
+  * (Bench's stdout carries exactly one JSON line), no session function
+  * registry, and no library member that only tests reach.
   */
 class KnobCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -87,6 +87,28 @@ class KnobCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(rotten.isEmpty, rotten.mkString("; "))
   }
 
+  /** The ten `graft.functions` kernels, by the names SQL text would call them. */
+  private val kernels = Set("vec_dot", "simhash56", "minhash_sig", "shingle_hashes",
+    "ngram_stats", "tok_entropy", "winnow_fps", "sorted_intersect_count",
+    "bloom_agg", "bloom_might_contain")
+
+  test("kernels are Column builders: nothing registers a function or calls one by name") {
+    val all = sources(root)
+    val banned = for {
+      (p, src) <- all
+      b <- Seq("functionRegistry", "createOrReplaceTempFunction", "call_function(",
+        "SparkSession.active") if src.contains(b)
+    } yield s"$p: $b"
+    // the SQL text Spark parses at run time; the DuckDB oracle strings are
+    // never passed to these, so they may name the kernels freely
+    val byName = all.flatMap { case (p, src) =>
+      Census.sqlStrings(Census.parse(p, src))
+        .filter(sql => """\w+""".r.findAllIn(sql).exists(kernels))
+        .map(sql => s"$p: $sql")
+    }
+    assert(banned.isEmpty && byName.isEmpty, (banned ++ byName).mkString("\n"))
+  }
+
   test("library packages never write to stdout") {
     val writers = Seq("ops", "streaming", "functions").flatMap { d =>
       sources(root.resolve(s"graft/$d")).collect {
@@ -158,6 +180,16 @@ private object Census {
   }
 
   private val word = """\w+""".r
+
+  private val sqlEntries = Set("expr", "selectExpr", "sql")
+
+  /** The string literals (interpolated parts included) passed to
+    * `expr`, `selectExpr` or `sql`: SQL text Spark parses at run time.
+    */
+  def sqlStrings(t: Tree): Seq[String] = t.collect {
+    case Apply(Ident(n), args) if sqlEntries(n.decoded) => args
+    case Apply(Select(_, n), args) if sqlEntries(n.decoded) => args
+  }.flatten.flatMap(_.collect { case Literal(Constant(s: String)) => s })
 
   def uses(t: Tree): Set[String] = {
     val out = mutable.Set.empty[String]

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.commons.io.FileUtils
-
 import graft.pipeline.PipelineRunner
 
 /** Golden end-to-end: the full 5-step pipeline over sf0.001, run twice
@@ -14,7 +12,7 @@ import graft.pipeline.PipelineRunner
 class PipelineRunnerSpec extends SparkSpec {
 
   test("pipeline run is idempotent and advances the watermark") {
-    val sink = Files.createTempDirectory("graft-sink").toString
+    val sink = SparkSpec.tempDir("graft-sink").toString
     val c = PipelineRunner.Config("/root/testdata/sf0.001", sink)
 
     val r1 = PipelineRunner.run(spark, c)
@@ -49,11 +47,10 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(enrichedRows == SparkEntry.queries("tx_enrich")(spark, "/root/testdata/sf0.001").count())
     val aumRows = spark.read.parquet(s"$sink/AUMdata").count()
     assert(aumRows == SparkEntry.queries("route_aum")(spark, "/root/testdata/sf0.001").count())
-    Seq(sink, sink2).foreach(d => FileUtils.deleteQuietly(new java.io.File(d)))
   }
 
   test("a run killed inside the watermark swap resumes from its own watermark") {
-    val sink = Files.createTempDirectory("graft-sink-swap").toString
+    val sink = SparkSpec.tempDir("graft-sink-swap").toString
     val c = PipelineRunner.Config("/root/testdata/sf0.001", sink)
     val r1 = PipelineRunner.run(spark, c)
     // the swap's crash window: the live generation renamed away, the

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,4 +27,16 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The one dir this JVM's specs make their temp dirs under, deleted at
+    * JVM exit (tests fork, so the hook runs when the suite ends).
+    */
+  private lazy val root: Path = {
+    val dir = Files.createTempDirectory("graft-specs")
+    sys.addShutdownHook(FileUtils.deleteQuietly(dir.toFile))
+    dir
+  }
+
+  /** A fresh dir named after `prefix`, under the per-JVM root. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(root, prefix)
 }

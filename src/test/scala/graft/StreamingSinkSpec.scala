@@ -18,7 +18,7 @@ class StreamingSinkSpec extends SparkSpec {
 
   test("foreachBatch idempotent sink: overlapping micro-batches append each key once") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-stream-sink")
+    val dir = SparkSpec.tempDir("graft-stream-sink")
     val sink = s"$dir/out"
     val in = MemoryStream[TxRow]
     val q = in.toDF().writeStream
@@ -40,7 +40,7 @@ class StreamingSinkSpec extends SparkSpec {
   }
 
   test("mergeByKey generation swap: merge, last-write-wins, crash-window heal") {
-    val dir = Files.createTempDirectory("graft-merge-sink")
+    val dir = SparkSpec.tempDir("graft-merge-sink")
     val sink = s"$dir/daily"
     def batch(rows: (String, Long)*) = rows.toDF("day", "n")
     Sink.mergeByKey(batch(("d1", 1L), ("d2", 1L)), sink, Seq("day"))
@@ -63,7 +63,7 @@ class StreamingSinkSpec extends SparkSpec {
   }
 
   test("replace whose write job throws keeps the previous generation, leaves no debris") {
-    val dir = Files.createTempDirectory("graft-replace-sink")
+    val dir = SparkSpec.tempDir("graft-replace-sink")
     val sink = s"$dir/lastUpdated"
     Sink.replace(Seq(1L, 2L).toDF("v"), sink)
     val failing = spark.range(3).select(
@@ -76,7 +76,7 @@ class StreamingSinkSpec extends SparkSpec {
   }
 
   test("mergeByKeyPartitioned: merges touched partitions, untouched files byte-identical") {
-    val dir = Files.createTempDirectory("graft-merge-part")
+    val dir = SparkSpec.tempDir("graft-merge-part")
     val sink = s"$dir/daily"
     def batch(rows: (String, Long, Long)*) = rows.toDF("day", "chain", "n")
     Sink.mergeByKeyPartitioned(

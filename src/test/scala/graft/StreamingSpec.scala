@@ -172,7 +172,7 @@ class StreamingSpec extends SparkSpec {
     val standing = Seq((0L, "a b c d", "en", "s0")) // 0 % 97 == 0 → the benchmark
       .toDF("doc_id", "text", "lang", "source")
     val bench = TextAnalysis.benchShinglesOf(standing).localCheckpoint()
-    val dir = java.nio.file.Files.createTempDirectory("graft-scrub-sink")
+    val dir = SparkSpec.tempDir("graft-scrub-sink")
     val sink = s"$dir/out"
     val in = MemoryStream[(Long, String, String, String)]
     // the replay's per-batch body: join-form scrub, then the idempotent append
@@ -465,7 +465,7 @@ class StreamingSpec extends SparkSpec {
   test("update-mode MERGE sink: revised and new keys across micro-batches land on the batch rollup") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[TxRow]
-    val tmp = java.nio.file.Files.createTempDirectory("merge_sink")
+    val tmp = SparkSpec.tempDir("merge_sink")
     val out = s"$tmp/daily"
     val q = StreamingPipeline.dailyVolume(in.toDF())
       .select(org.apache.spark.sql.functions.col("day").cast("date").cast("string").as("day"),

@@ -940,15 +940,15 @@ class TextMultimodalSpec extends SparkSpec {
   }
 
   test("bloom_agg/bloom_might_contain: zero false negatives, fpp-bounded false positives") {
-    graft.functions.BloomFunctions.register(spark)
-    import org.apache.spark.sql.functions.{call_function, col, lit}
+    import graft.functions.BloomFunctions.{bloomAgg, mightContain, optimalNumBits}
+    import org.apache.spark.sql.functions.{col, lit}
     val inserted = (1L to 2000L).toDF("h")
-    val nBits = graft.functions.BloomFunctions.optimalNumBits(2000L, 0.01)
+    val nBits = optimalNumBits(2000L, 0.01)
     val bf = inserted
-      .agg(call_function("bloom_agg", col("h"), lit(2000L), lit(nBits)))
+      .agg(bloomAgg(col("h"), 2000L, nBits))
       .head.getAs[Array[Byte]](0)
     def hits(values: org.apache.spark.sql.DataFrame): Long = values
-      .filter(call_function("bloom_might_contain", lit(bf), col("h"))).count()
+      .filter(mightContain(lit(bf), col("h"))).count()
     // every inserted value must probe true — the invariant the
     // decontam-bloom oracle equivalence rests on
     assert(hits(inserted) == 2000L)

@@ -10,7 +10,7 @@ import java.nio.file.{Files, Paths}
 class VerifySpec extends SparkSpec {
 
   test("verify dump records a failing query in _errors.json instead of dropping it") {
-    val out = Files.createTempDirectory("graft-verify").toString
+    val out = SparkSpec.tempDir("graft-verify").toString
     val qs: Map[String, (SparkSession, String) => DataFrame] = Map(
       "ok" -> ((s, _) => s.range(3).toDF("x")),
       "boom" -> ((_, _) => throw new RuntimeException("deliberate failure")))
@@ -24,7 +24,7 @@ class VerifySpec extends SparkSpec {
   }
 
   test("verify dump writes an EMPTY _errors.json when all queries pass") {
-    val out = Files.createTempDirectory("graft-verify").toString
+    val out = SparkSpec.tempDir("graft-verify").toString
     val qs: Map[String, (SparkSession, String) => DataFrame] =
       Map("ok" -> ((s, _) => s.range(3).toDF("x")))
     assert(Verify.dump(spark, qs, "unused", out).isEmpty)
