@@ -48,7 +48,7 @@ object DataQuality {
     * to (rule, tbl, checked, violations) rows via `stack`.
     */
   private def rowRules(df: DataFrame, tbl: String, rules: Seq[Rule],
-                       uniqueKey: Option[(String, Column)] = None): DataFrame = {
+                       uniqueKey: Option[(String, Column)]): DataFrame = {
     val aggs =
       rules.map(r => sum(r.bad.cast("long")).as(r.name)) ++
         uniqueKey.map { case (n, k) =>
@@ -108,13 +108,13 @@ object DataQuality {
     val lineRules = rowRules(lineitem, "lineitem", Seq(
       Rule("range_l_quantity", !col("l_quantity").between(1, 50)),
       Rule("range_l_discount", !col("l_discount").between(0, 0.1)),
-      Rule("nonneg_l_extendedprice", !(col("l_extendedprice") >= 0))))
+      Rule("nonneg_l_extendedprice", !(col("l_extendedprice") >= 0))), None)
 
-    val eventRules = rowRules(events, "events", eventRowRules)
+    val eventRules = rowRules(events, "events", eventRowRules, None)
 
     val docRules = rowRules(documents, "documents", Seq(
       Rule("chars_consistency", col("n_chars") =!= length(col("text"))),
-      Rule("nonempty_text", !(length(col("text")) > 0))))
+      Rule("nonempty_text", !(length(col("text")) > 0))), None)
 
     val refs = Seq(
       refRule("ref_orders_customer", "orders", orders, "o_custkey", customer, "c_custkey"),
@@ -143,7 +143,7 @@ object DataQuality {
     */
   private[graft] def dqEventPartial(ev: DataFrame,
       customer: DataFrame): DataFrame =
-    rowRules(ev, "events", eventRowRules)
+    rowRules(ev, "events", eventRowRules, None)
       .unionByName(refRule("ref_events_customer", "events", ev, "user_id",
         customer.withColumnRenamed("c_custkey", "user_id"), "user_id"))
 

@@ -147,7 +147,7 @@ object Dedup {
     * context cleaner when the result is dropped — no harness clearCache
     * required.
     */
-  private def minhashBands(docs: DataFrame): DataFrame = {
+  private[graft] def minhashBands(docs: DataFrame): DataFrame = {
     val bandCols = (0 until NUM_BANDS).map { b =>
       val parts = (0 until ROWS_PER_BAND).map(r => col(s"mh${b * ROWS_PER_BAND + r}"))
       md5(concat_ws("|", parts: _*)).as(s"b$b")
@@ -379,7 +379,7 @@ object Dedup {
     * 10^5 docs on measured constants (SCALING.md).
     */
   private[graft] def mihGeometry(n: Long, baseBlocks: Int, maxH: Int,
-      rung1N: Long, rung2N: Long = Long.MaxValue): (Int, Int) =
+      rung1N: Long, rung2N: Long): (Int, Int) =
     if (n < rung1N) (baseBlocks, 0)
     else if (n < rung2N || baseBlocks <= 4) {
       val blocks = math.max(1, baseBlocks / 2)
@@ -588,22 +588,22 @@ object Dedup {
     payloadBytes / JACCARD_VERIFY_BYTES_PER_DOC
 
   def ngramJaccardPairs(docs: DataFrame): DataFrame =
-    ngramJaccardPairsFromSets(jaccardSets(docs))
+    ngramJaccardPairsFromSets(jaccardSets(docs), -1L)
 
   /** The dispatch seam over an already-built set table. `nDocsHint ≥ 0`
     * skips the size probe (one count job — cheap on the checkpointed set
     * table, but round-14 advice: a per-micro-batch caller should not pay
     * an extra Spark job per invocation just to re-learn that its batches
     * are small). Callers who know their frame is batch-bounded pass the
-    * bound; corpus entry points let the default self-count once.
+    * bound; corpus entry points pass -1 and self-count once.
     */
   private[graft] def ngramJaccardPairsFromSets(sets: DataFrame,
-      nDocsHint: Long = -1L): DataFrame = {
+      nDocsHint: Long): DataFrame = {
     val n = if (nDocsHint >= 0L) nDocsHint else sets.count()
     val pfx = jaccardPrefix(sets)
     if (n < jaccardGroupedN(Resources.payloadBudget(sets.sparkSession)))
       jaccardVerifyJoin(sets, pfx)
-    else jaccardVerifyGrouped(sets, pfx)
+    else jaccardVerifyGrouped(sets, pfx, JACCARD_GROUP_SPLIT)
   }
 
   /** The candidate+verify stage as the declarative prefix self-JOIN — the
@@ -746,8 +746,7 @@ object Dedup {
   val JACCARD_SPLIT_MAX_BLOCKS = 64
 
   private[graft] def jaccardVerifyGrouped(sets: DataFrame,
-      prefix: DataFrame,
-      split: Int = JACCARD_GROUP_SPLIT): DataFrame = {
+      prefix: DataFrame, split: Int): DataFrame = {
     val spark = sets.sparkSession
     import spark.implicits._
     val t = JACCARD_THRESHOLD
@@ -867,7 +866,7 @@ object Dedup {
     */
   def dedupJaccardGrouped(spark: SparkSession, sfDir: String): DataFrame = {
     val sets = jaccardSets(Tables.documents(spark, sfDir))
-    jaccardVerifyGrouped(sets, jaccardPrefix(sets))
+    jaccardVerifyGrouped(sets, jaccardPrefix(sets), JACCARD_GROUP_SPLIT)
   }
 
   val dedupNgramJaccardSql: String =
@@ -902,7 +901,7 @@ object Dedup {
       () => ngramJaccardPairs(exactReps(docs))
         .select(col("d1"), col("d2")).localCheckpoint(),
       () => minhashPairs(docs)
-        .select(col("d1"), col("d2")).localCheckpoint()))
+        .select(col("d1"), col("d2")).localCheckpoint()), Overlap.DEFAULT_CAP)
     val (truth, cand) = (r(0), r(1))
     val nCand = cand.agg(count(lit(1)).cast("long").as("n_candidates"))
     val nTruth = truth.agg(count(lit(1)).cast("long").as("n_truth"))
@@ -1056,7 +1055,7 @@ object Dedup {
     * DuckDB expression builders below (the constants are baked into both
     * generated strings, so no RNG needs to exist in either engine).
     */
-  private def hypSign(t: Int, i: Int, j: Int, stride: Int = HYP_BITS): Int = {
+  private def hypSign(t: Int, i: Int, j: Int, stride: Int): Int = {
     var x = ((t.toLong * stride + i) * EMB_DIM + j) * 6364136223846793005L +
       1442695040888963407L
     x ^= (x >>> 33); x *= -49064778989728563L; x ^= (x >>> 29)
@@ -1090,10 +1089,10 @@ object Dedup {
     * column (1-based array indexing): each projection is a left-associated
     * add/subtract chain seeded with 0.0.
     */
-  private[ops] def bucketExprSql(t: Int, dim: Int = EMB_DIM): String =
+  private[ops] def bucketExprSql(t: Int): String =
     (0 until HYP_BITS).map { i =>
-      val proj = (0 until dim).map { j =>
-        val op = if (hypSign(t, i, j) > 0) "+" else "-"
+      val proj = (0 until EMB_DIM).map { j =>
+        val op = if (hypSign(t, i, j, HYP_BITS) > 0) "+" else "-"
         s"$op CAST(embedding[${j + 1}] AS DOUBLE)"
       }.mkString("CAST(0 AS DOUBLE) ", " ", "")
       s"(CASE WHEN ($proj) > 0 THEN ${1 << i} ELSE 0 END)"
@@ -1809,7 +1808,7 @@ object Dedup {
   private def sharedClusters(spark: SparkSession, sfDir: String): DataFrame =
     SharedFits.memo(spark, s"dup_clusters:$sfDir") {
       FitStore.frame(spark, "dup_clusters",
-        FitStore.documentsFp(spark, sfDir)) {
+        FitStore.documentsFp(spark, sfDir, None)) {
         duplicateClusters(Tables.documents(spark, sfDir),
           sharedJaccardPairs(spark, sfDir))
       }.localCheckpoint()
@@ -1941,15 +1940,9 @@ object Dedup {
     * ∈ standing|joined|new) over the full corpus.
     */
   def incrementalClusters(newDocs: DataFrame, priorDocs: DataFrame,
-      priorClusters: DataFrame,
-      newSetsIn: Option[DataFrame] = None,
-      newBandsIn: Option[DataFrame] = None,
-      priorBandsIn: Option[DataFrame] = None): DataFrame = {
-    val newSets = newSetsIn.getOrElse(shingleSets(newDocs).localCheckpoint())
+      priorClusters: DataFrame, newSets: DataFrame, newBands: DataFrame,
+      priorBands: DataFrame): DataFrame = {
     val priorSets = shingleSets(priorDocs)
-    // one checkpointed sig build, two probes
-    val newBands = newBandsIn.getOrElse(minhashBands(newDocs))
-    val priorBands = priorBandsIn.getOrElse(minhashBands(priorDocs))
     val cands = newBands
       .select(col("band_no"), col("bucket"), col("doc_id").as("new_id"))
       .join(priorBands
@@ -2014,6 +2007,12 @@ object Dedup {
       }.localCheckpoint()
     }
 
+  /** The arrival side [[incrementalClusters]] probes with: the arrivals'
+    * pinned shingle sets and their band rows.
+    */
+  private[graft] def arrivalProbe(newDocs: DataFrame): (DataFrame, DataFrame) =
+    (shingleSets(newDocs).localCheckpoint(), minhashBands(newDocs))
+
   def dedupClustersIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val newDocs = docs.filter(col("doc_id") % 2 === 1)
@@ -2026,10 +2025,8 @@ object Dedup {
     val (prior, priorBands, (newSets, newBands)) = Overlap.all3(
       sharedPriorClusters(spark, sfDir),
       minhashBands(priorDocs),
-      (shingleSets(newDocs).localCheckpoint(), minhashBands(newDocs)))
-    incrementalClusters(newDocs, priorDocs, prior,
-      newSetsIn = Some(newSets), newBandsIn = Some(newBands),
-      priorBandsIn = Some(priorBands))
+      arrivalProbe(newDocs))
+    incrementalClusters(newDocs, priorDocs, prior, newSets, newBands, priorBands)
   }
 
   val dedupClustersIncrementalSql: String =
@@ -2257,7 +2254,7 @@ object Dedup {
     * once per vector, never inside the pair loop; the candidate join is a
     * plain codegen'd equi-join on (table, bucket).
     */
-  def embeddingNearDup(emb: DataFrame, dim: Int = EMB_DIM): DataFrame = {
+  def embeddingNearDup(emb: DataFrame, dim: Int): DataFrame = {
     // Vector payloads (embedding + norm) ride along in the bucket rows, so
     // the candidate equi-join needs no join-back to the vector table, and
     // duplicate candidates from multi-table hits are left in place — they
@@ -2295,7 +2292,7 @@ object Dedup {
   }
 
   def dedupEmbedding(spark: SparkSession, sfDir: String): DataFrame =
-    embeddingNearDup(Tables.embeddings(spark, sfDir))
+    embeddingNearDup(Tables.embeddings(spark, sfDir), EMB_DIM)
 
   /** Approximate k-NN GRAPH over the whole embedding corpus: each
     * vector's top-[[KNN_K]] neighbors by cosine among its hyperplane-LSH
@@ -2310,7 +2307,7 @@ object Dedup {
     */
   val KNN_K = 3
 
-  def knnGraph(emb: DataFrame, k: Int = KNN_K, dim: Int = EMB_DIM): DataFrame = {
+  def knnGraph(emb: DataFrame, k: Int, dim: Int): DataFrame = {
     val base = Similarity.withNorm(emb).localCheckpoint()
     // occupancy-pinned geometry: one count over the checkpointed base (a
     // driver scalar, same cost class as pageRank's node count) sizes the
@@ -2338,14 +2335,13 @@ object Dedup {
     * ~2× on the raw emission and ~16× less row traffic with the top-k
     * cut at the 300× rehearsal).
     */
-  private[graft] def knnGraphJoin(emb: DataFrame, k: Int = KNN_K,
-      dim: Int = EMB_DIM): DataFrame = {
+  private[graft] def knnGraphJoin(emb: DataFrame, k: Int): DataFrame = {
     val base = Similarity.withNorm(emb).localCheckpoint()
     val bits = hypBitsFor(base.count())
     val buckets = base.select(
       col("vec_id"), col("embedding"), col("nm"),
       explode(array((0 until HYP_TABLES).map(t =>
-        struct(lit(t).as("t"), bucketColBits(t, dim, bits).as("bucket"))): _*)).as("tb"))
+        struct(lit(t).as("t"), bucketColBits(t, EMB_DIM, bits).as("bucket"))): _*)).as("tb"))
       .select(col("vec_id"), col("embedding"), col("nm"),
         col("tb.t").as("t"), col("tb.bucket").as("bucket"))
     val a = buckets.select(col("t"), col("bucket"), col("vec_id"),
@@ -2375,7 +2371,7 @@ object Dedup {
     */
   def sharedKnnGraph(spark: SparkSession, sfDir: String): DataFrame =
     SharedFits.memo(spark, s"knn_edges_k$KNN_K:$sfDir") {
-      knnGraph(Tables.embeddings(spark, sfDir)).localCheckpoint()
+      knnGraph(Tables.embeddings(spark, sfDir), KNN_K, EMB_DIM).localCheckpoint()
     }
 
   /** The k-NN-graph oracle, parameterized by out-degree — [[KNN_K]] for
@@ -2542,7 +2538,7 @@ object Dedup {
     */
   def embeddingClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val pairs = embeddingNearDup(emb)
+    val pairs = embeddingNearDup(emb, EMB_DIM)
       .filter(col("cosine") >= EMB_CLUSTER_COSINE)
       .select(least(col("vec_id"), col("nn_id")).as("d1"),
         greatest(col("vec_id"), col("nn_id")).as("d2"))

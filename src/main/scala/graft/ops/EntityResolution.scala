@@ -512,15 +512,20 @@ object EntityResolution {
       () => sharedStandingAssignment(spark, sfDir),
       () => erPairsIncrementalOver(standing, arrivals)
         .select(col("a_id"), col("b_id")).localCheckpoint(),
-      () => records(arrivals).localCheckpoint()))
-    erGoldenFinish(standing, arrivals, r(0), r(1), raIn = Some(r(2)))
+      () => arrivalRecords(arrivals)), Overlap.DEFAULT_CAP)
+    erGoldenFinish(standing, r(0), r(1), r(2))
   }
 
   private[graft] def erGoldenIncrementalOver(standing: DataFrame,
       arrivals: DataFrame, assignSt: DataFrame): DataFrame =
-    erGoldenFinish(standing, arrivals, assignSt,
+    erGoldenFinish(standing, assignSt,
       erPairsIncrementalOver(standing, arrivals)
-        .select(col("a_id"), col("b_id")).localCheckpoint())
+        .select(col("a_id"), col("b_id")).localCheckpoint(),
+      arrivalRecords(arrivals))
+
+  /** The arrivals' pinned entity records — the `ra` [[erGoldenFinish]] takes. */
+  private[graft] def arrivalRecords(arrivals: DataFrame): DataFrame =
+    records(arrivals).localCheckpoint()
 
   /** The golden-record MERGE from an arrival-touching pair frame —
     * contracted-CC fixpoint + algebraic survivorship against the
@@ -530,11 +535,9 @@ object EntityResolution {
     * two modes disagree on, so it is the parameter (round 14,
     * `er_golden_stream`).
     */
-  private[graft] def erGoldenFinish(standing: DataFrame,
-      arrivals: DataFrame, assignSt: DataFrame,
-      newPairs: DataFrame, raIn: Option[DataFrame] = None): DataFrame = {
+  private[graft] def erGoldenFinish(standing: DataFrame, assignSt: DataFrame,
+      newPairs: DataFrame, ra: DataFrame): DataFrame = {
     val rs = records(standing)
-    val ra = raIn.getOrElse(records(arrivals).localCheckpoint())
     // contract standing endpoints to their entity label (left join: an
     // arrival endpoint has no standing assignment and keeps its own id).
     // Unhinted: assignSt is corpus-proportional; AQE broadcasts the
@@ -573,7 +576,7 @@ object EntityResolution {
     val mr = Overlap.all(Seq(
       () => rs.join(assignSt, Seq("doc_id"))
         .join(broadcast(remap), Seq("entity_id")).localCheckpoint(),
-      () => ra.join(broadcast(arrAssign), Seq("doc_id")).localCheckpoint()))
+      () => ra.join(broadcast(arrAssign), Seq("doc_id")).localCheckpoint()), Overlap.DEFAULT_CAP)
     val membersSt = mr(0)
     val arrMembers = mr(1)
     // srcMerged feeds maxCnt and the mode join (two consumers, tiny frame)

@@ -71,8 +71,7 @@ object FitStore {
     * validate against it. `half` keys the even/odd standing-vs-batch
     * split used by the incremental-dedup queries.
     */
-  def documentsFp(spark: SparkSession, sfDir: String,
-      half: Option[Int] = None): Fp =
+  def documentsFp(spark: SparkSession, sfDir: String, half: Option[Int]): Fp =
     SharedFits.memo(spark, s"fp:documents:${half.getOrElse(-1)}:$sfDir") {
       val docs = graft.pipeline.Tables.documents(spark, sfDir)
       val sliced = half.fold(docs)(p => docs.filter(col("doc_id") % 2 === p))
@@ -84,8 +83,7 @@ object FitStore {
     * component change misses. `half` keys the even/odd standing-vs-batch
     * split (the index-drift family fits on the even half only).
     */
-  def embeddingsFp(spark: SparkSession, sfDir: String,
-      half: Option[Int] = None): Fp =
+  def embeddingsFp(spark: SparkSession, sfDir: String, half: Option[Int]): Fp =
     SharedFits.memo(spark, s"fp:embeddings:${half.getOrElse(-1)}:$sfDir") {
       val emb = graft.pipeline.Tables.embeddings(spark, sfDir)
       val sliced = half.fold(emb)(p => emb.filter(col("vec_id") % 2 === p))

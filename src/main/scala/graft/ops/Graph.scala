@@ -46,7 +46,7 @@ object Graph {
     * `id` column; `edges` carries (src, dst). Returns (id, rank_ppb,
     * rank) with rank_ppb the exact fixed-point value.
     */
-  def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = PR_ITERS): DataFrame = {
+  def pageRank(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("k"))
     // the static build side and the node frame are independent pinned
     // builds — overlap them (guide §2.6):
@@ -58,14 +58,14 @@ object Graph {
         .select(col("src"), col("dst"), col("k"))
         .repartition(col("src"))
         .localCheckpoint(),
-      () => nodes.select(col("id")).repartition(col("id")).localCheckpoint()))
+      () => nodes.select(col("id")).repartition(col("id")).localCheckpoint()), Overlap.DEFAULT_CAP)
     val (e, n0) = (r(0), r(1))
     val n = n0.count()
     require(n > 0, "pageRank needs a non-empty node set")
     val r0 = PR_SCALE / n
     val base = (PR_SCALE - PR_DAMP_NUM * PR_SCALE / PR_DAMP_DEN) / n
     var ranks = n0.select(col("id"), lit(r0).as("r"))
-    (1 to iters).foreach { _ =>
+    (1 to PR_ITERS).foreach { _ =>
       val contrib = e
         .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id"),
@@ -123,7 +123,7 @@ object Graph {
 
   /** The seam the spec drives with explicit embeddings. */
   private[graft] def undirectedKnn(emb: DataFrame): DataFrame =
-    Dedup.knnGraph(emb).select(
+    Dedup.knnGraph(emb, Dedup.KNN_K, Dedup.EMB_DIM).select(
       least(col("vec_id"), col("nn_id")).as("u"),
       greatest(col("vec_id"), col("nn_id")).as("v")).distinct()
 
@@ -274,7 +274,7 @@ object Graph {
       undS: => DataFrame): DataFrame =
     SharedFits.memo(spark, s"tri_stats_even:$sfDir") {
       FitStore.frame(spark, "tri_stats_even",
-        FitStore.embeddingsFp(spark, sfDir)) {
+        FitStore.embeddingsFp(spark, sfDir, None)) {
         nodeStats(undS)
       }.localCheckpoint()
     }
@@ -623,7 +623,7 @@ object Graph {
       undS: => DataFrame): DataFrame =
     SharedFits.memo(spark, s"link_scores_even:$sfDir") {
       FitStore.frame(spark, "link_scores_even",
-        FitStore.embeddingsFp(spark, sfDir)) {
+        FitStore.embeddingsFp(spark, sfDir, None)) {
         linkScores(undS)
       }.localCheckpoint()
     }

@@ -903,7 +903,7 @@ object Multimodal {
     // lazy: FitStore.frame takes the fingerprint by-name so a session
     // with no store root never pays the fingerprint scan — an eager val
     // here was spending one agg job per cold call for nothing
-    lazy val fp = FitStore.documentsFp(spark, sfDir)
+    lazy val fp = FitStore.documentsFp(spark, sfDir, None)
     // the three standing builds are mutually independent; overlap their
     // checkpoint jobs so each one's straggler tail back-fills the cores
     // (guide §2.6 shape — distinct memo keys, benign-concurrent memo;
@@ -925,7 +925,7 @@ object Multimodal {
         FitStore.frame(spark, s"mm_band_idx_d$ARRIVAL_DECILE", fp) {
           signatureBands(sliceFrames(standing))
         }.localCheckpoint()
-      }))
+      }), Overlap.DEFAULT_CAP)
     catch { case e: Throwable => late(0).cancel(); throw e }
     (r(0), r(1), late(0))
   }

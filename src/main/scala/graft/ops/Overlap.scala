@@ -15,9 +15,9 @@ import org.apache.spark.sql.SparkSession
   * cores-sized pool (and anything else sharing it). Each call here gets
   * its own small EPHEMERAL daemon pool instead:
   *
-  *  - in-flight work is capped per sweep (`cap`, default 3) — enough to
-  *    back-fill a chain's driver-latency gaps and straggler tails, not
-  *    enough to fight for executor slots;
+  *  - in-flight work is capped per sweep (`cap`, usually [[DEFAULT_CAP]])
+  *    — enough to back-fill a chain's driver-latency gaps and straggler
+  *    tails, not enough to fight for executor slots;
   *  - a dedicated fixed pool cannot deadlock on independent thunks and
   *    cannot starve unrelated users of a shared pool; nested overlaps
   *    (a thunk that itself overlaps) get their own pool, so there is no
@@ -49,7 +49,7 @@ object Overlap {
     def cancel(): Unit = stop()
   }
 
-  def all[A](thunks: Seq[() => A], cap: Int = DEFAULT_CAP): Seq[A] =
+  def all[A](thunks: Seq[() => A], cap: Int): Seq[A] =
     if (thunks.lengthCompare(2) < 0) thunks.map(_())
     else {
       val finished = new LinkedBlockingQueue[Int]()
@@ -63,7 +63,7 @@ object Overlap {
   def all2[A, B](a: => A, b: => B): (A, B) = {
     val ra = new AtomicReference[A]
     val rb = new AtomicReference[B]
-    all(Seq(() => ra.set(a), () => rb.set(b)))
+    all(Seq(() => ra.set(a), () => rb.set(b)), DEFAULT_CAP)
     (ra.get, rb.get)
   }
 
@@ -72,7 +72,7 @@ object Overlap {
     val ra = new AtomicReference[A]
     val rb = new AtomicReference[B]
     val rc = new AtomicReference[C]
-    all(Seq(() => ra.set(a), () => rb.set(b), () => rc.set(c)))
+    all(Seq(() => ra.set(a), () => rb.set(b), () => rc.set(c)), DEFAULT_CAP)
     (ra.get, rb.get, rc.get)
   }
 
@@ -84,7 +84,7 @@ object Overlap {
     * last thunk (shutdown is pre-issued, threads are daemons). Whoever
     * holds a handle joins it or cancels it.
     */
-  def begin[A](thunks: Seq[() => A], cap: Int = DEFAULT_CAP): Seq[Handle[A]] =
+  def begin[A](thunks: Seq[() => A], cap: Int): Seq[Handle[A]] =
     launch(thunks, cap, _ => ())
 
   /** [[begin]] for a single thunk. */

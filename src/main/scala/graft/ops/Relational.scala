@@ -447,7 +447,7 @@ object Relational {
     */
   def saltedUserVolume(spark: SparkSession, sfDir: String): DataFrame =
     Skew.saltedSumCount(Tables.events(spark, sfDir),
-        Seq("user_id"), "value", "event_id")
+        Seq("user_id"), "value", "event_id", buckets = 16)
       .select(col("user_id"), col("n"), round(col("total"), 4).as("total"))
 
   val saltedUserVolumeSql: String =
@@ -1007,9 +1007,9 @@ object Relational {
     * TakeOrderedAndProject. The same weighting applied to documents is
     * how a pretraining mix up-weights fresh crawl.
     */
-  def decayValue(events: DataFrame, asOf: String = Tables.ASOF_DATE): DataFrame = {
+  def decayValue(events: DataFrame): DataFrame = {
     val maxAge = DECAY_W_MICROS.size - 1
-    val age = datediff(lit(asOf).cast("date"), to_date(col("ts")))
+    val age = datediff(lit(Tables.ASOF_DATE).cast("date"), to_date(col("ts")))
     val w = element_at(typedLit(DECAY_W_MICROS),
       least(greatest(age, lit(0)), lit(maxAge)).cast("int") + lit(1))
     // fixed-point micro-units per row, then EXACT integer sums — the

@@ -172,14 +172,14 @@ object Similarity {
   /** The fitted model: final centroids after `iters` Lloyd rounds from
     * the first-`k`-vectors seed. `base` must carry (vec_id, embedding,
     * nm) and should be checkpointed by the caller (it is scanned once
-    * per round). `seedPred` picks the seed rows (default: the first `k`
-    * vec_ids); pass a wider predicate when `base` is a slice whose ids
-    * are not dense from 0 — cell ids are always the seed vec_ids.
+    * per round). `seedPred` picks the seed rows (the first `k` vec_ids,
+    * or a wider predicate when `base` is a slice whose ids are not dense
+    * from 0) — cell ids are always the seed vec_ids.
     */
   private def kmeansModel(base: DataFrame, k: Int, iters: Int,
-      seedPred: Column = null): Seq[Cent] = {
+      seedPred: Column): Seq[Cent] = {
     val seeds: Seq[Cent] = base
-      .filter(Option(seedPred).getOrElse(col("vec_id") < k))
+      .filter(seedPred)
       .select(col("vec_id").cast("long"), col("embedding"), col("nm"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2)))
@@ -204,8 +204,8 @@ object Similarity {
       base: DataFrame): Seq[Cent] =
     SharedFits.memo(spark, s"kmeans_model:$sfDir") {
       FitStore.frame(spark, "kmeans_centroids",
-        FitStore.embeddingsFp(spark, sfDir)) {
-        centsDf(base, kmeansModel(base, KMEANS_K, KMEANS_ITERS))
+        FitStore.embeddingsFp(spark, sfDir, None)) {
+        centsDf(base, kmeansModel(base, KMEANS_K, KMEANS_ITERS, col("vec_id") < KMEANS_K))
       }.collect().toSeq
         .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2)))
         .sortBy(_._1)
@@ -224,15 +224,14 @@ object Similarity {
     * carry (vec_id, embedding, nm). Seeds are the first `k` vectors.
     * The assignment frame is a zero-shuffle projection of `base`.
     */
-  def kmeansFit(base: DataFrame, k: Int = KMEANS_K,
-      iters: Int = KMEANS_ITERS): (DataFrame, DataFrame) = {
-    val model = kmeansModel(base, k, iters)
+  def kmeansFit(base: DataFrame, k: Int, iters: Int): (DataFrame, DataFrame) = {
+    val model = kmeansModel(base, k, iters, col("vec_id") < k)
     (centsDf(base, model),
       base.select(col("vec_id"), assignCol(model).as("cell")))
   }
 
   /** (vec_id, cell) after [[KMEANS_ITERS]] Lloyd rounds + final assign. */
-  def kmeansCells(base: DataFrame): DataFrame = kmeansFit(base)._2
+  def kmeansCells(base: DataFrame): DataFrame = kmeansFit(base, KMEANS_K, KMEANS_ITERS)._2
 
   /** Fit the quantizer on a STATIC corpus and return the assignment
     * Column for ANY frame carrying (embedding, nm) — including a
@@ -241,10 +240,9 @@ object Similarity {
     * Streaming runs unchanged per micro-batch (the index-ingest path:
     * vectors arrive, the fitted coarse quantizer routes them to cells).
     */
-  def cellAssigner(corpusEmb: DataFrame, k: Int = KMEANS_K,
-      iters: Int = KMEANS_ITERS): Column = {
+  def cellAssigner(corpusEmb: DataFrame): Column = {
     val base = withNorm(corpusEmb).localCheckpoint()
-    assignCol(kmeansModel(base, k, iters))
+    assignCol(kmeansModel(base, KMEANS_K, KMEANS_ITERS, col("vec_id") < KMEANS_K))
   }
 
   /** [[cellAssigner]] against the SESSION-SHARED corpus quantizer
@@ -554,10 +552,10 @@ object Similarity {
   private def pqModel(spark: SparkSession, sfDir: String, s: Int): Seq[Cent] =
     SharedFits.memo(spark, s"pq_model:$s:$sfDir") {
       FitStore.frame(spark, s"pq_codebook_s$s",
-        FitStore.embeddingsFp(spark, sfDir)) {
+        FitStore.embeddingsFp(spark, sfDir, None)) {
         val base = withNorm(
           pqSubVectors(Tables.embeddings(spark, sfDir), s)).localCheckpoint()
-        centsDf(base, kmeansModel(base, PQ_K, PQ_ITERS))
+        centsDf(base, kmeansModel(base, PQ_K, PQ_ITERS, col("vec_id") < PQ_K))
       }.collect().toSeq
         .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2)))
         .sortBy(_._1)
@@ -1011,7 +1009,7 @@ object Similarity {
     * slice).
     */
   private def kmAsgBlock(name: String, cent: String, cn: String,
-      src: String = "u"): String =
+      src: String): String =
     s"""$name AS (
        |  SELECT vec_id, cell FROM (
        |    SELECT d.vec_id, d.cell,
@@ -1024,7 +1022,7 @@ object Similarity {
        |  WHERE rn = 1)""".stripMargin
 
   private def kmCentBlock(name: String, asg: String,
-      src: String = "u"): String =
+      src: String): String =
     s"""$name AS (
        |  SELECT a.cell, u.i, CAST(CAST(round(avg(u.x), 6) AS FLOAT) AS DOUBLE) AS x
        |  FROM $src u JOIN $asg a ON u.vec_id = a.vec_id GROUP BY 1, 2)""".stripMargin
@@ -1032,8 +1030,8 @@ object Similarity {
   private lazy val kmeansCtePrefix: String = {
     val iterBlocks = (0 until KMEANS_ITERS).flatMap { r =>
       Seq(kmCnBlock(s"cn$r", s"cent$r"),
-        kmAsgBlock(s"asg${r + 1}", s"cent$r", s"cn$r"),
-        kmCentBlock(s"cent${r + 1}", s"asg${r + 1}"))
+        kmAsgBlock(s"asg${r + 1}", s"cent$r", s"cn$r", "u"),
+        kmCentBlock(s"cent${r + 1}", s"asg${r + 1}", "u"))
     }
     val last = KMEANS_ITERS
     s"""WITH ${UNNEST_CTE},
@@ -1041,7 +1039,7 @@ object Similarity {
        |cent0 AS (SELECT vec_id AS cell, i, x FROM u WHERE vec_id < $KMEANS_K),
        |${iterBlocks.mkString(",\n")},
        |${kmCnBlock(s"cn$last", s"cent$last")},
-       |${kmAsgBlock("asgf", s"cent$last", s"cn$last")}""".stripMargin
+       |${kmAsgBlock("asgf", s"cent$last", s"cn$last", "u")}""".stripMargin
   }
 
   val simsearchIvfKmeansSql: String =
@@ -1606,9 +1604,9 @@ object Similarity {
     * random projection preserves pairwise geometry for ANY embedding at
     * the JL distortion rate.
     */
-  def rpProjected(emb: DataFrame, d: Int, dim: Int = Dedup.EMB_DIM): DataFrame = {
+  def rpProjected(emb: DataFrame, d: Int): DataFrame = {
     emb.select(col("vec_id"), array((0 until d).map(j =>
-      vecDot(col("embedding"), typedLit(Array.tabulate(dim)(i => rpSign(j, i).toFloat)))
+      vecDot(col("embedding"), typedLit(Array.tabulate(Dedup.EMB_DIM)(i => rpSign(j, i).toFloat)))
         .cast("float")): _*)
       .as("embedding"))
   }
@@ -1720,7 +1718,7 @@ object Similarity {
     */
   def semanticDedupOn(base: DataFrame, k: Int, iters: Int,
       tau: Double): DataFrame = {
-    val model = kmeansModel(base, k, iters)
+    val model = kmeansModel(base, k, iters, col("vec_id") < k)
     val withCell = base.withColumn("cell", assignCol(model))
     val a = withCell.select(col("cell"), col("vec_id").as("a_id"),
       col("embedding").as("ea"), col("nm").as("na"))
@@ -1924,10 +1922,11 @@ object Similarity {
     * ranking is deterministic.
     */
   def hybridRrf(docs: DataFrame, emb: DataFrame, nQueries: Int,
-      k: Int = RRF_TOP_K): DataFrame = {
+      k: Int): DataFrame = {
     val dense = bruteForceTopk(emb, col("vec_id") < nQueries, k)
       .select(col("q_id"), col("n_id").as("id"), col("rnk").as("dense_rnk"))
-    val sparse = TextAnalysis.bm25TopK(docs, nQueries, k)
+    val sparse = TextAnalysis.bm25TopK(docs, nQueries, k,
+        TextAnalysis.termFreqs(docs).localCheckpoint())
       .select(col("q_id"), col("doc_id").as("id"), col("rnk").as("bm25_rnk"))
     val fused = dense.join(sparse, Seq("q_id", "id"), "full_outer")
       .withColumn("rrf", round(
@@ -1942,7 +1941,7 @@ object Similarity {
 
   def simsearchRrf(spark: SparkSession, sfDir: String): DataFrame =
     hybridRrf(Tables.documents(spark, sfDir), Tables.embeddings(spark, sfDir),
-      TextAnalysis.BM25_N_QUERIES)
+      TextAnalysis.BM25_N_QUERIES, RRF_TOP_K)
 
   val simsearchRrfSql: String = {
     val denseTopk =
@@ -2019,8 +2018,7 @@ object Similarity {
     * One zero-shuffle assignment projection + one K-sized hash agg; the
     * cell-id range frame is K rows, broadcast.
     */
-  def ivfIndexStats(emb: DataFrame, k: Int = KMEANS_K,
-      iters: Int = KMEANS_ITERS): DataFrame = {
+  def ivfIndexStats(emb: DataFrame, k: Int, iters: Int): DataFrame = {
     val base = withNorm(emb).localCheckpoint()
     val asg = kmeansFit(base, k, iters)._2
     val counts = asg.groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
@@ -2034,7 +2032,7 @@ object Similarity {
   }
 
   def simsearchIndexStats(spark: SparkSession, sfDir: String): DataFrame =
-    ivfIndexStats(Tables.embeddings(spark, sfDir))
+    ivfIndexStats(Tables.embeddings(spark, sfDir), KMEANS_K, KMEANS_ITERS)
 
   val simsearchIndexStatsSql: String =
     s"""$kmeansCtePrefix,
@@ -2060,7 +2058,7 @@ object Similarity {
     */
   def clusterQuality(emb: DataFrame): DataFrame = {
     val base = withNorm(emb).localCheckpoint()
-    clusterQuality(base, kmeansModel(base, KMEANS_K, KMEANS_ITERS))
+    clusterQuality(base, kmeansModel(base, KMEANS_K, KMEANS_ITERS, col("vec_id") < KMEANS_K))
   }
 
   private def clusterQuality(base: DataFrame, model: Seq[Cent]): DataFrame = {
@@ -2459,7 +2457,7 @@ object Similarity {
       val stage1 = Overlap.all(Seq(
         () => sharedNndSeed(spark, sfDir)._2,
         () => bruteForceTopk(emb, col("vec_id") < N_QUERIES, IVF_TOP_K)
-          .select(col("q_id"), col("n_id")).localCheckpoint()))
+          .select(col("q_id"), col("n_id")).localCheckpoint()), Overlap.DEFAULT_CAP)
       val (base, cands) = sharedNndSeed(spark, sfDir) // memo hit
       // stage 2: the four NND loops — independent chains of small jobs
       // over the pinned seed, all in flight (the chains are driver-
@@ -2469,9 +2467,8 @@ object Similarity {
         if (k == GRAPH_DEGREE) graphIndex(spark, sfDir).select(col("src"), col("dst"))
         else SharedFits.memo(spark, s"graph_adj_d$k:$sfDir") {
           FitStore.frame(spark, s"knn_edges_nnd${NND_ITERS}_d$k",
-            FitStore.embeddingsFp(spark, sfDir)) {
-            nnDescentAdj(emb, k = k, init = Some(nndInitFor(cands, k)),
-              payIn = Some(base))
+            FitStore.embeddingsFp(spark, sfDir, None)) {
+            nnDescentAdj(nndInitFor(cands, k), base, k, NND_ITERS)
           }.localCheckpoint()
         }
       }, cap = GRAPH_DEGREES.size)
@@ -2512,7 +2509,7 @@ object Similarity {
          |    JOIN tn n2 ON d.n_id = n2.vec_id) r
          |  WHERE rnk <= $IVF_TOP_K)""".stripMargin
     val degreeBlocks = GRAPH_DEGREES.map { k =>
-      s"""knn_d$k AS MATERIALIZED (${nnDescentAdjSql(k = k)}),
+      s"""knn_d$k AS MATERIALIZED (${nnDescentAdjSql(k, "true")}),
          |row_d$k AS (
          |  SELECT CAST($k AS BIGINT) AS degree,
          |         CAST(count(*) AS BIGINT) AS n_hits,
@@ -2529,24 +2526,16 @@ object Similarity {
        |$union""".stripMargin
   }
 
-  /** NN-descent: LSH-bucket k-NN init ([[Dedup.knnGraph]] at the
-    * serving degree), then [[NND_ITERS]] rounds of
+  /** NN-descent: from the (src, dst) k-NN `init` over the pinned
+    * (vec_id, embedding, nm) payload `pay`, `iters` rounds of
     * undirected-neighbor-of-neighbor candidate generation, exact
     * rescoring, and top-k re-selection per node. Fully deterministic
     * (round-pinned cosines, dst tie-break), so the oracle replays the
     * construction round-for-round.
     */
-  private[graft] def nnDescentAdj(emb: DataFrame, k: Int = GRAPH_DEGREE,
-      iters: Int = NND_ITERS, dim: Int = Dedup.EMB_DIM,
-      init: Option[DataFrame] = None,
-      payIn: Option[DataFrame] = None): DataFrame = {
-    // NOT overlapped (measured): racing the cheap payload pin against
-    // the wide LSH-kernel init stole kernel slots inside callers that
-    // already overlap this whole build (graph_insert_stream 5.3→5.6 s)
-    val pay = payIn.getOrElse(withNorm(emb)
-      .select(col("vec_id"), col("embedding"), col("nm")).localCheckpoint())
-    var adj = init.getOrElse(Dedup.knnGraph(emb, k = k, dim = dim)
-      .select(col("vec_id").as("src"), col("nn_id").as("dst"))).localCheckpoint()
+  private[graft] def nnDescentAdj(init: DataFrame, pay: DataFrame, k: Int,
+      iters: Int): DataFrame = {
+    var adj = init.localCheckpoint()
     val w = Window.partitionBy(col("src")).orderBy(col("cosine").desc, col("dst"))
     (1 to iters).foreach { _ =>
       val und = adj
@@ -2566,6 +2555,19 @@ object Similarity {
         .select(col("src"), col("dst")).localCheckpoint()
     }
     adj
+  }
+
+  /** A self-contained NND seed of `emb`: its own LSH k-NN init at degree
+    * `k` ([[Dedup.knnGraph]]) and its pinned norm'd payload — the
+    * (init, pay) pair [[nnDescentAdj]] takes. The payload pins first.
+    */
+  private[graft] def nndSeedOf(emb: DataFrame, k: Int, dim: Int): (DataFrame, DataFrame) = {
+    // NOT overlapped (measured): racing the cheap payload pin against
+    // the wide LSH-kernel init stole kernel slots inside callers that
+    // already overlap this whole build (graph_insert_stream 5.3→5.6 s)
+    val pay = withNorm(emb)
+      .select(col("vec_id"), col("embedding"), col("nm")).localCheckpoint()
+    (Dedup.knnGraph(emb, k, dim).select(col("vec_id").as("src"), col("nn_id").as("dst")), pay)
   }
 
   /** The SESSION-SHARED NND seed state for the FULL corpus: the pinned
@@ -2608,13 +2610,12 @@ object Similarity {
     * already-gated LSH k-NN ranking, each round is und → hop → cand →
     * rescore → top-k. Returns (src, dst).
     */
-  def nnDescentAdjSql(k: Int = GRAPH_DEGREE, iters: Int = NND_ITERS,
-      whereSql: String = "true"): String = {
+  def nnDescentAdjSql(k: Int, whereSql: String): String = {
     // every multiply-referenced CTE is MATERIALIZED: DuckDB 1.0 inlines
     // CTEs at each reference site, and this chain references each round's
     // frames twice — inlining would re-evaluate the whole construction
     // exponentially in depth
-    val roundCtes = (1 to iters).map { r =>
+    val roundCtes = (1 to NND_ITERS).map { r =>
       s"""und$r AS MATERIALIZED (
          |  SELECT src, dst FROM adj${r - 1}
          |  UNION SELECT dst AS src, src AS dst FROM adj${r - 1}),
@@ -2670,7 +2671,7 @@ object Similarity {
        |                                    ORDER BY cosine DESC, dst) AS rn
        |    FROM icos ic) rk WHERE rn <= $k),
        |$roundCtes
-       |SELECT src, dst FROM adj$iters""".stripMargin
+       |SELECT src, dst FROM adj$NND_ITERS""".stripMargin
   }
 
   /** The serving GRAPH INDEX: the NN-descent-refined k-NN adjacency
@@ -2687,31 +2688,44 @@ object Similarity {
     * vectors stay columnar beside it, and the per-query state is the
     * frontier — beam-width rows, never corpus rows.
     */
-  private[graft] def graphIndex(spark: SparkSession, sfDir: String,
-      half: Option[Int] = None): DataFrame =
-    SharedFits.memo(spark, s"graph_index${half.fold("")(h => s"_h$h")}:$sfDir") {
-      val full = Tables.embeddings(spark, sfDir)
-      val emb = half.fold(full)(h => full.filter(col("vec_id") % 2 === h))
-      val adj = FitStore.frame(spark,
-          s"knn_edges_nnd${NND_ITERS}_d$GRAPH_DEGREE${half.fold("")(h => s"_h$h")}",
-          FitStore.embeddingsFp(spark, sfDir, half)) {
-        if (half.isEmpty) {
-          // full-corpus build: init from the session-shared widest-cut
-          // candidate frame (row-identical, one kernel pass shared with
-          // the degree sweep); the half graphs keep their own narrower
-          // kernel — a lone consumer each, nothing to share with
-          val (base, cands) = sharedNndSeed(spark, sfDir)
-          nnDescentAdj(emb, init = Some(nndInitFor(cands, GRAPH_DEGREE)),
-            payIn = Some(base))
-        } else nnDescentAdj(emb)
-      }
-      val payload = withNorm(emb).select(col("vec_id").as("dst"),
-        col("embedding").as("ed"), col("nm").as("nd"))
-      adj.join(payload, Seq("dst"))
-        .select(col("src"), col("dst"), col("ed"), col("nd"))
-        .repartition(col("src"))
-        .localCheckpoint()
+  private[graft] def graphIndex(spark: SparkSession, sfDir: String): DataFrame =
+    SharedFits.memo(spark, s"graph_index:$sfDir") {
+      val emb = Tables.embeddings(spark, sfDir)
+      withPayload(emb, FitStore.frame(spark, s"knn_edges_nnd${NND_ITERS}_d$GRAPH_DEGREE",
+          FitStore.embeddingsFp(spark, sfDir, None)) {
+        // full-corpus build: init from the session-shared widest-cut
+        // candidate frame (row-identical, one kernel pass shared with
+        // the degree sweep)
+        val (base, cands) = sharedNndSeed(spark, sfDir)
+        nnDescentAdj(nndInitFor(cands, GRAPH_DEGREE), base, GRAPH_DEGREE, NND_ITERS)
+      })
     }
+
+  /** [[graphIndex]] over the standing (even-id) half — the index the
+    * insert path serves arrivals against. It keeps its own narrower
+    * kernel init: a lone consumer, nothing to share with.
+    */
+  private[graft] def evenHalfGraphIndex(spark: SparkSession, sfDir: String): DataFrame =
+    SharedFits.memo(spark, s"graph_index_h0:$sfDir") {
+      val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") % 2 === 0)
+      withPayload(emb, FitStore.frame(spark, s"knn_edges_nnd${NND_ITERS}_d${GRAPH_DEGREE}_h0",
+          FitStore.embeddingsFp(spark, sfDir, Some(0))) {
+        val (init, pay) = nndSeedOf(emb, GRAPH_DEGREE, Dedup.EMB_DIM)
+        nnDescentAdj(init, pay, GRAPH_DEGREE, NND_ITERS)
+      })
+    }
+
+  /** The adjacency with each neighbor's payload riding on the edge,
+    * src-partitioned and pinned.
+    */
+  private def withPayload(emb: DataFrame, adj: DataFrame): DataFrame = {
+    val payload = withNorm(emb).select(col("vec_id").as("dst"),
+      col("embedding").as("ed"), col("nm").as("nd"))
+    adj.join(payload, Seq("dst"))
+      .select(col("src"), col("dst"), col("ed"), col("nd"))
+      .repartition(col("src"))
+      .localCheckpoint()
+  }
 
   /** Beam traversal: seed every query with its OWN LSH bucket mates —
     * the same [[Dedup.HYP_TABLES]] sign-projection tables the adjacency
@@ -2755,10 +2769,8 @@ object Similarity {
     * explode + seed join ONCE and fans the widths out from the pinned
     * result — only the per-round top-beamW cut depends on the width.
     */
-  private[graft] def beamSeeds(base: DataFrame,
-      pin: DataFrame => DataFrame = _.localCheckpoint(),
-      isQuery: Column = col("vec_id") < N_QUERIES,
-      isNode: Column = lit(true)): DataFrame = {
+  private[graft] def beamSeeds(base: DataFrame, pin: DataFrame => DataFrame,
+      isQuery: Column, isNode: Column): DataFrame = {
     // occupancy-pinned bucket geometry (Dedup.hypBitsFor): at fixed bits
     // the seed-scoring join fans |Q| × occupancy with occupancy ∝ N —
     // arrivals ∝ N made that quadratic in total, a hidden term inside the
@@ -2787,17 +2799,12 @@ object Similarity {
       .drop("rn"))
   }
 
+  /** Beam traversal of the serving queries ([[N_QUERIES]]) over every node. */
   private[graft] def beamTraverse(edges: DataFrame, base: DataFrame,
-      beamW: Int, rounds: Int = GRAPH_ROUNDS,
-      pin: DataFrame => DataFrame = _.localCheckpoint(),
-      isQuery: Column = col("vec_id") < N_QUERIES,
-      isNode: Column = lit(true),
-      seeds: Option[DataFrame] = None): DataFrame = {
-    val queries = base.filter(isQuery)
-      .select(col("vec_id").as("q_id"), col("embedding").as("eq"), col("nm").as("nq"))
-    beamLoop(edges, queries,
-      seeds.getOrElse(beamSeeds(base, pin, isQuery, isNode)),
-      beamW, rounds, pin)
+      beamW: Int, rounds: Int, pin: DataFrame => DataFrame): DataFrame = {
+    val isQuery = col("vec_id") < N_QUERIES
+    beamLoop(edges, base.filter(isQuery),
+      beamSeeds(base, pin, isQuery, lit(true)), beamW, rounds, pin)
   }
 
   /** [[beamTraverse]] with the query set given as an id FRAME (semi-join
@@ -2808,31 +2815,23 @@ object Similarity {
     * (traversal depends only on the query and the standing graph).
     */
   private[graft] def beamTraverseFor(edges: DataFrame, base: DataFrame,
-      queryIds: DataFrame, beamW: Int, rounds: Int = GRAPH_ROUNDS,
-      pin: DataFrame => DataFrame = _.localCheckpoint(),
-      isNode: Column = lit(true),
-      bitsHint: Option[Int] = None,
-      nodeBuckets: Option[DataFrame] = None): DataFrame = {
+      queryIds: DataFrame, beamW: Int, bits: Int,
+      nodeBuckets: DataFrame): DataFrame = {
     val ids = queryIds.select(col("vec_id"))
-    val queries = base.join(ids, Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("q_id"), col("embedding").as("eq"), col("nm").as("nq"))
-    beamLoop(edges, queries,
-      beamSeedsFor(base, ids, pin, isNode, bitsHint, nodeBuckets),
-      beamW, rounds, pin)
+    beamLoop(edges, base.join(ids, Seq("vec_id"), "left_semi"),
+      beamSeedsFor(base, ids, bits, nodeBuckets),
+      beamW, GRAPH_ROUNDS, _.localCheckpoint())
   }
 
   /** [[beamSeeds]]' frame-membership twin for [[beamTraverseFor]] —
-    * same occupancy-pinned geometry (see [[beamSeeds]]). `bitsHint` lets
-    * a PER-MICRO-BATCH caller pass the standing base's bit geometry
-    * computed once at stream build instead of paying a count job per
-    * batch (the base is the same frame every batch; the count cannot
-    * change mid-stream).
+    * same occupancy-pinned geometry (see [[beamSeeds]]). A
+    * PER-MICRO-BATCH caller passes the standing base's bit geometry and
+    * its [[seedNodeBuckets]] table, both computed once at stream build
+    * instead of per batch (the base is the same frame every batch; it
+    * cannot change mid-stream).
     */
   private def beamSeedsFor(base: DataFrame, queryIds: DataFrame,
-      pin: DataFrame => DataFrame, isNode: Column,
-      bitsHint: Option[Int] = None,
-      nodeBuckets: Option[DataFrame] = None): DataFrame = {
-    val bits = bitsHint.getOrElse(Dedup.hypBitsFor(base.count()))
+      bits: Int, nb: DataFrame): DataFrame = {
     // query side: SEMI-JOIN FIRST, then explode — the bucket columns are
     // per-row projections, so filtering before the generate is identical
     // and keeps the per-batch explode at |batch| rows, not corpus rows
@@ -2843,17 +2842,14 @@ object Similarity {
             Dedup.bucketColBits(t, Dedup.EMB_DIM, bits).as("bucket"))): _*)).as("tb"))
       .select(col("vec_id").as("q_id"), col("embedding").as("eq"),
         col("nm").as("nq"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-    // corpus side: taken from the caller when the stream hoisted it to
-    // build time (it cannot change mid-stream), re-derived otherwise
-    val nb = nodeBuckets.getOrElse(seedNodeBuckets(base, bits, isNode))
     val cosine = round(vecDot(col("eq"), col("ed")) / (col("nq") * col("nd")), 6)
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("node"))
-    pin(nb.join(broadcast(qb), Seq("t", "bucket"))
+    nb.join(broadcast(qb), Seq("t", "bucket"))
       .select(col("q_id"), col("node"), cosine.as("cosine"))
       .groupBy(col("q_id"), col("node")).agg(min(col("cosine")).as("cosine"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= GRAPH_SEED_CAP)
-      .drop("rn"))
+      .drop("rn").localCheckpoint()
   }
 
   /** The corpus-side LSH bucket table the per-batch seed join probes:
@@ -2865,7 +2861,7 @@ object Similarity {
     * changes.
     */
   private[graft] def seedNodeBuckets(base: DataFrame, bits: Int,
-      isNode: Column = lit(true)): DataFrame =
+      isNode: Column): DataFrame =
     base.filter(isNode)
       .select(col("vec_id"), col("embedding"), col("nm"),
         explode(array((0 until Dedup.HYP_TABLES).map(t =>
@@ -2874,10 +2870,14 @@ object Similarity {
       .select(col("vec_id").as("node"), col("embedding").as("ed"),
         col("nm").as("nd"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
 
-  /** The shared expansion loop of both traversal forms. */
-  private def beamLoop(edges: DataFrame, queries: DataFrame,
+  /** The shared expansion loop of every traversal form, over the query
+    * rows (vec_id, embedding, nm) of `queryBase`.
+    */
+  private def beamLoop(edges: DataFrame, queryBase: DataFrame,
       seedFrame: DataFrame, beamW: Int, rounds: Int,
       pin: DataFrame => DataFrame): DataFrame = {
+    val queries = queryBase
+      .select(col("vec_id").as("q_id"), col("embedding").as("eq"), col("nm").as("nq"))
     val cosine = round(vecDot(col("eq"), col("ed")) / (col("nq") * col("nd")), 6)
     var visited = seedFrame
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("node"))
@@ -2902,11 +2902,11 @@ object Similarity {
     * rides in the beam — expanding it IS how its true neighborhood gets
     * found — but it is not an answer).
     */
-  private[graft] def graphTopkFrom(visited: DataFrame, k: Int = IVF_TOP_K): DataFrame = {
+  private[graft] def graphTopkFrom(visited: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("node"))
     visited.filter(col("node") =!= col("q_id"))
       .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= IVF_TOP_K)
       .select(col("q_id"), col("node").as("n_id"), col("cosine"), col("rnk"))
   }
 
@@ -2916,7 +2916,8 @@ object Similarity {
     */
   def simsearchGraphTopk(spark: SparkSession, sfDir: String): DataFrame = {
     val base = withNorm(Tables.embeddings(spark, sfDir))
-    graphTopkFrom(beamTraverse(graphIndex(spark, sfDir), base, GRAPH_BEAM))
+    graphTopkFrom(beamTraverse(graphIndex(spark, sfDir), base, GRAPH_BEAM,
+      GRAPH_ROUNDS, _.localCheckpoint()))
   }
 
   /** The oracle's shared prelude: the k-NN edge list (the already-gated
@@ -2956,7 +2957,7 @@ object Similarity {
        |  JOIN gnode n ON y.vec_id = n.vec_id)""".stripMargin
 
   private val GRAPH_PREFIX_SQL: String =
-    graphPrefixSql(s"vec_id < $N_QUERIES", "true", nnDescentAdjSql())
+    graphPrefixSql(s"vec_id < $N_QUERIES", "true", nnDescentAdjSql(GRAPH_DEGREE, "true"))
 
   /** Unrolled traversal CTEs for one beam width: v0 seeds from the fixed
     * entries, then per round (beam → expand → fold). `tag` keeps CTE
@@ -2973,8 +2974,7 @@ object Similarity {
        |  FROM seeds s JOIN qcos c ON s.q_id = c.q_id AND s.node = c.node) sc
        |WHERE rn <= $GRAPH_SEED_CAP""".stripMargin
 
-  private def beamSql(tag: String, beamW: Int,
-      v0From: Option[String] = None): String = {
+  private def beamSql(tag: String, beamW: Int, v0From: Option[String]): String = {
     val rounds = (1 to GRAPH_ROUNDS).map { r =>
       s"""b${r}_$tag AS (
          |  SELECT q_id, node FROM (
@@ -3002,7 +3002,7 @@ object Similarity {
 
   val simsearchGraphTopkSql: String =
     s"""WITH $GRAPH_PREFIX_SQL,
-       |${beamSql("t", GRAPH_BEAM)}
+       |${beamSql("t", GRAPH_BEAM, None)}
        |SELECT q_id, node AS n_id, cosine, rnk FROM (
        |  SELECT v.*, row_number() OVER (PARTITION BY q_id
        |                                 ORDER BY cosine DESC, node) AS rnk
@@ -3024,7 +3024,8 @@ object Similarity {
     val truth = bruteForceTopk(emb, col("vec_id") < N_QUERIES, IVF_TOP_K)
       .select(col("q_id"), col("n_id")).localCheckpoint()
     val denom = (N_QUERIES * IVF_TOP_K).toDouble
-    val seeds = beamSeeds(base)
+    val isQuery = col("vec_id") < N_QUERIES
+    val seeds = beamSeeds(base, _.localCheckpoint(), isQuery, lit(true))
     // The per-width traversals are independent chains of blocking
     // checkpoint jobs over the SAME pinned seeds/edges; sequential
     // construction left the session idle during each chain's driver
@@ -3034,8 +3035,8 @@ object Similarity {
     // checkpointed inputs.
     // (bounded dedicated pool per the round-15 verdict, Overlap.scala)
     val visitedByW = GRAPH_BEAMS.zip(Overlap.all(GRAPH_BEAMS.map { bw =>
-      () => beamTraverse(edges, base, bw, seeds = Some(seeds))
-    }))
+      () => beamLoop(edges, base.filter(isQuery), seeds, bw, GRAPH_ROUNDS, _.localCheckpoint())
+    }, Overlap.DEFAULT_CAP))
     visitedByW.map { case (bw, visited) =>
       val cand = visited.agg(count(lit(1)).as("n_candidates"))
       val hits = graphTopkFrom(visited).select(col("q_id"), col("n_id"))
@@ -3100,18 +3101,21 @@ object Similarity {
     */
   def simsearchGraphInsert(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val edges = graphIndex(spark, sfDir, half = Some(0))
-    val visited = beamTraverse(edges, withNorm(emb), GRAPH_BEAM,
-      isQuery = col("vec_id") % 2 === 1, isNode = col("vec_id") % 2 === 0)
+    val edges = evenHalfGraphIndex(spark, sfDir)
+    val base = withNorm(emb)
+    val isQuery = col("vec_id") % 2 === 1
+    val pin: DataFrame => DataFrame = _.localCheckpoint()
+    val visited = beamLoop(edges, base.filter(isQuery),
+      beamSeeds(base, pin, isQuery, col("vec_id") % 2 === 0), GRAPH_BEAM, GRAPH_ROUNDS, pin)
     graphTopkFrom(visited)
       .select(col("q_id").as("new_id"), col("n_id"), col("cosine"), col("rnk"))
   }
 
   val simsearchGraphInsertSql: String = {
     val prefix = graphPrefixSql("vec_id % 2 = 1", "vec_id % 2 = 0",
-      nnDescentAdjSql(whereSql = "vec_id % 2 = 0"))
+      nnDescentAdjSql(GRAPH_DEGREE, "vec_id % 2 = 0"))
     s"""WITH $prefix,
-       |${beamSql("i", GRAPH_BEAM)}
+       |${beamSql("i", GRAPH_BEAM, None)}
        |SELECT q_id AS new_id, node AS n_id, cosine, rnk FROM (
        |  SELECT v.*, row_number() OVER (PARTITION BY q_id
        |                                 ORDER BY cosine DESC, node) AS rnk
@@ -3175,7 +3179,7 @@ object Similarity {
   }
 
   val simsearchGraphDeleteSql: String =
-    s"""WITH knn AS MATERIALIZED (${nnDescentAdjSql()}),
+    s"""WITH knn AS MATERIALIZED (${nnDescentAdjSql(GRAPH_DEGREE, "true")}),
        |gu AS MATERIALIZED (
        |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
        |         generate_subscripts(embedding, 1) AS i
@@ -3292,7 +3296,7 @@ object Similarity {
     */
   val simsearchGraphRepairHealthSql: String =
     s"""$kmeansCtePrefix,
-       |knn AS MATERIALIZED (${nnDescentAdjSql()}),
+       |knn AS MATERIALIZED (${nnDescentAdjSql(GRAPH_DEGREE, "true")}),
        |aff AS MATERIALIZED (
        |  SELECT DISTINCT src FROM knn
        |  WHERE dst % $DELETE_MOD = 0 AND src % $DELETE_MOD <> 0),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-handling utilities. AQE's skew-join splitting (default-on) covers
@@ -17,7 +17,7 @@ object Skew {
     * e.g. the row id).
     */
   def saltedSumCount(df: DataFrame, key: Seq[String], valueCol: String,
-      saltSource: String, buckets: Int = 16): DataFrame = {
+      saltSource: String, buckets: Int): DataFrame = {
     val salted = df.withColumn("_salt", pmod(xxhash64(col(saltSource)), lit(buckets)))
     salted.groupBy((key.map(col) :+ col("_salt")): _*)
       .agg(count(lit(1)).as("_n"), sum(col(valueCol)).as("_s"))
@@ -32,7 +32,7 @@ object Skew {
     * row-identical to the unsalted join.
     */
   def saltedJoin(large: DataFrame, small: DataFrame, key: Seq[String],
-      saltSource: String, factor: Int = 8): DataFrame = {
+      saltSource: String, factor: Int): DataFrame = {
     val spark = large.sparkSession
     val salts = spark.range(factor).select(col("id").cast("int").as("_salt"))
     val saltedLarge = large.withColumn("_salt",

@@ -459,7 +459,7 @@ object TextAnalysis {
   }
 
   def textQualityTrain(spark: SparkSession, sfDir: String): DataFrame =
-    FitStore.frame(spark, "quality_train", FitStore.documentsFp(spark, sfDir)) {
+    FitStore.frame(spark, "quality_train", FitStore.documentsFp(spark, sfDir, None)) {
       qualityTrain(Tables.documents(spark, sfDir))
     }
 
@@ -578,7 +578,7 @@ object TextAnalysis {
         .localCheckpoint(),
       () => Tables.bigrams(tgt)
         .groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("cb"))
-        .localCheckpoint()))
+        .localCheckpoint()), Overlap.DEFAULT_CAP)
     val (uni, bigrams) = (lm(0), lm(1))
     val nTot = uni.agg(sum(col("cu")).as("n_tot"))
     val docBg = Tables.bigrams(docs)
@@ -821,18 +821,19 @@ object TextAnalysis {
   private def bm25Postings(spark: SparkSession, sfDir: String): DataFrame =
     SharedFits.memo(spark, s"bm25_postings:$sfDir") {
       FitStore.frame(spark, "bm25_postings",
-        FitStore.documentsFp(spark, sfDir)) {
-        Tables.tokens(Tables.documents(spark, sfDir))
-          .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
+        FitStore.documentsFp(spark, sfDir, None)) {
+        termFreqs(Tables.documents(spark, sfDir))
       }.localCheckpoint()
     }
 
-  def bm25TopK(docs: DataFrame, nQueries: Int = BM25_N_QUERIES,
-      k: Int = BM25_TOP_K, postings: Option[DataFrame] = None): DataFrame = {
-    val tf = postings.getOrElse(
-      Tables.tokens(docs)
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint())
+  /** The (doc_id, tok, tf) postings of `docs` — what [[bm25TopK]] scores. */
+  def termFreqs(docs: DataFrame): DataFrame =
+    Tables.tokens(docs).groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
+
+  /** BM25 top-`k` of the first `nQueries` documents against `docs`, scored
+    * on its [[termFreqs]] postings `tf`.
+    */
+  def bm25TopK(docs: DataFrame, nQueries: Int, k: Int, tf: DataFrame): DataFrame = {
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val stats = broadcast(
@@ -861,8 +862,8 @@ object TextAnalysis {
   }
 
   def textBm25(spark: SparkSession, sfDir: String): DataFrame =
-    bm25TopK(Tables.documents(spark, sfDir),
-      postings = Some(bm25Postings(spark, sfDir)))
+    bm25TopK(Tables.documents(spark, sfDir), BM25_N_QUERIES, BM25_TOP_K,
+      bm25Postings(spark, sfDir))
 
   /** Incremental maintenance of the BM25 index: the STANDING postings
     * (even doc_ids — the already-indexed corpus, in production loaded
@@ -878,13 +879,10 @@ object TextAnalysis {
     */
   def textBm25Incremental(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    def postingsOf(d: DataFrame): DataFrame =
-      Tables.tokens(d).groupBy(col("doc_id"), col("tok"))
-        .agg(count(lit(1)).as("tf"))
-    val standing = postingsOf(docs.filter(col("doc_id") % 2 === 0))
-    val arriving = postingsOf(docs.filter(col("doc_id") % 2 === 1))
-    bm25TopK(docs,
-      postings = Some(standing.unionByName(arriving).localCheckpoint()))
+    val standing = termFreqs(docs.filter(col("doc_id") % 2 === 0))
+    val arriving = termFreqs(docs.filter(col("doc_id") % 2 === 1))
+    bm25TopK(docs, BM25_N_QUERIES, BM25_TOP_K,
+      standing.unionByName(arriving).localCheckpoint())
   }
 
   val textBm25Sql: String =
@@ -1226,7 +1224,7 @@ object TextAnalysis {
         .localCheckpoint(),
       () => Tables.tokens(docs).groupBy(col("tok"))
         .agg(count(lit(1)).cast("long").as("c"))
-        .localCheckpoint()))
+        .localCheckpoint()), Overlap.DEFAULT_CAP)
     val (pc0, uni) = (cnt(0), cnt(1))
     val pairCounts = pc0.filter(col("c_xy") >= COOC_MIN_COUNT)
     val nPair = pc0.agg(sum(col("c_xy")).cast("double").as("n_pair"))
@@ -2322,24 +2320,24 @@ object TextAnalysis {
     * outputs computed once and fanned out.
     */
   private[ops] def assemblyFlags(docs: DataFrame): DataFrame =
-    assemblyFlags(docs, Dedup.ngramJaccardPairs(docs))
+    assemblyFlagsFrom(docs, Dedup.ngramJaccardPairs(docs), contamIds(docs), keeperIds(docs))
 
-  private[ops] def assemblyFlags(docs: DataFrame, jaccardPairs: DataFrame): DataFrame =
-    assemblyFlagsFrom(docs, jaccardPairs)
+  /** The contaminated-id gate: (doc_id, is_contam). */
+  private def contamIds(docs: DataFrame): DataFrame =
+    decontam(docs).filter(col("contaminated"))
+      .select(col("doc_id"), lit(true).as("is_contam"))
 
-  /** [[assemblyFlags]] with the contaminated-id and exact-representative
-    * gates optionally PRE-PINNED by the caller — same frames, same join
-    * shape; [[sharedFlags]] builds the three independent gate chains in
-    * overlap instead of serially inside the one flags job.
+  /** The exact-representative gate: (doc_id, is_keeper). */
+  private def keeperIds(docs: DataFrame): DataFrame =
+    Dedup.exactGroups(docs)
+      .select(col("keep_id").as("doc_id"), lit(true).as("is_keeper"))
+
+  /** [[assemblyFlags]] over given gate frames — [[sharedFlags]] passes
+    * them PRE-PINNED, built in overlap instead of serially inside the one
+    * flags job; same frames, same join shape.
     */
   private[ops] def assemblyFlagsFrom(docs: DataFrame, jaccardPairs: DataFrame,
-      contamIdsIn: Option[DataFrame] = None,
-      keepIdsIn: Option[DataFrame] = None): DataFrame = {
-    val contamIds = contamIdsIn.getOrElse(
-      decontam(docs).filter(col("contaminated"))
-        .select(col("doc_id"), lit(true).as("is_contam")))
-    val keepIds = keepIdsIn.getOrElse(Dedup.exactGroups(docs)
-      .select(col("keep_id").as("doc_id"), lit(true).as("is_keeper")))
+      contamIds: DataFrame, keepIds: DataFrame): DataFrame = {
     val loserIds = jaccardPairs
       .select(col("d2").as("doc_id")).distinct()
       .withColumn("is_loser", lit(true))
@@ -2366,13 +2364,9 @@ object TextAnalysis {
       val docs = Tables.documents(spark, sfDir)
       val g = Overlap.all(Seq(
         () => Dedup.sharedJaccardPairs(spark, sfDir),
-        () => decontam(docs).filter(col("contaminated"))
-          .select(col("doc_id"), lit(true).as("is_contam")).localCheckpoint(),
-        () => Dedup.exactGroups(docs)
-          .select(col("keep_id").as("doc_id"), lit(true).as("is_keeper"))
-          .localCheckpoint()))
-      assemblyFlagsFrom(docs, g(0), contamIdsIn = Some(g(1)),
-        keepIdsIn = Some(g(2))).localCheckpoint()
+        () => contamIds(docs).localCheckpoint(),
+        () => keeperIds(docs).localCheckpoint()), Overlap.DEFAULT_CAP)
+      assemblyFlagsFrom(docs, g(0), g(1), g(2)).localCheckpoint()
     }
 
   private def rejectionsFrom(flags: DataFrame): DataFrame = {
@@ -2462,7 +2456,7 @@ object TextAnalysis {
     // the near-dup pair chain reuses the caller's checkpointed shingle-set
     // table (caShingleSets ≡ jaccardSets row-for-row) instead of
     // re-shingling the standing corpus a second time
-    val loserIds = Dedup.ngramJaccardPairsFromSets(sets)
+    val loserIds = Dedup.ngramJaccardPairsFromSets(sets, -1L)
       .select(col("d2").as("doc_id")).distinct().withColumn("l", lit(true))
     quality(standing)
       .select(col("doc_id"), col("lang"), col("source"),
@@ -2552,16 +2546,20 @@ object TextAnalysis {
   private[graft] def rejectionsIncremental(arrivals: DataFrame,
       benchH: DataFrame, fpIdx: DataFrame, postings: DataFrame,
       sets: DataFrame, docStats: DataFrame,
-      aSetsIn: Option[DataFrame] = None,
-      abenchIn: Option[DataFrame] = None): DataFrame = {
-    val isBenchA = col("doc_id") % lit(DECONTAM_MOD) === 0
-    val aSets = aSetsIn.getOrElse(caShingleSets(arrivals).localCheckpoint())
-    val abench = abenchIn.getOrElse(aSets.filter(isBenchA)
-      .select(explode(col("shs")).as("h")).distinct().localCheckpoint())
+      aSets: DataFrame, abench: DataFrame): DataFrame =
     rejStreamFinish(
       rejStreamFlags(arrivals, aSets, fpIdx, postings, sets),
       aSets.select(col("doc_id"), explode(col("shs")).as("h")),
       abench, benchH, postings, docStats)
+
+  /** The arrival side of the incremental audit, both pinned: the
+    * arrivals' shingle sets and the distinct shingle hashes of the bench
+    * docs among them.
+    */
+  private[graft] def arrivalSets(arrivals: DataFrame): (DataFrame, DataFrame) = {
+    val aSets = caShingleSets(arrivals).localCheckpoint()
+    (aSets, aSets.filter(col("doc_id") % lit(DECONTAM_MOD) === 0)
+      .select(explode(col("shs")).as("h")).distinct().localCheckpoint())
   }
 
   /** The batch-decomposition-INVARIANT half of the rejection audit:
@@ -2575,12 +2573,21 @@ object TextAnalysis {
     * statistics (the bench suite and corpus stats seal with the window)
     * and live in [[rejStreamFinish]]. One row per arrival:
     * (doc_id, lang, source, n_tokens, quality_score, is_dup, is_loser).
-    * The streaming replay calls this per micro-batch with the supplied
-    * indexes carrying standing ∪ earlier arrivals.
+    * This form self-counts the arrival slice (`batchBounded = false` in
+    * [[rejFlags]]), as the one-shot incremental audit needs.
     */
   private[graft] def rejStreamFlags(arrivals: DataFrame, aSets: DataFrame,
+      fpIdxAll: DataFrame, postingsAll: DataFrame, setsAll: DataFrame): DataFrame =
+    rejFlags(arrivals, aSets, fpIdxAll, postingsAll, setsAll, batchBounded = false)
+
+  /** [[rejStreamFlags]] with the within-batch size dispatch named by the
+    * caller (`batchBounded`, below). The streaming replay calls this per
+    * micro-batch with the supplied indexes carrying standing ∪ earlier
+    * arrivals.
+    */
+  private[graft] def rejFlags(arrivals: DataFrame, aSets: DataFrame,
       fpIdxAll: DataFrame, postingsAll: DataFrame,
-      setsAll: DataFrame, batchBounded: Boolean = false): DataFrame = {
+      setsAll: DataFrame, batchBounded: Boolean): DataFrame = {
     val aq = quality(arrivals)
       .select(col("doc_id"), col("lang"), col("source"),
         col("n_tokens"), col("quality_score"))
@@ -2703,17 +2710,10 @@ object TextAnalysis {
     // the arrival slice and is independent of all five standing builds —
     // overlap the two chains so the probe prep rides the standing fit's
     // idle capacity (guide §2.6; bounded pool, Overlap.scala)
-    val isBenchA = col("doc_id") % lit(DECONTAM_MOD) === 0
     val ((benchH, fpIdx, sets, postings, docStats), (aSets, abench)) = Overlap.all2(
-      sharedCaState(spark, sfDir),
-      {
-        val aSets = caShingleSets(arrivals).localCheckpoint()
-        val abench = aSets.filter(isBenchA)
-          .select(explode(col("shs")).as("h")).distinct().localCheckpoint()
-        (aSets, abench)
-      })
+      sharedCaState(spark, sfDir), arrivalSets(arrivals))
     rejectionsIncremental(arrivals, benchH, fpIdx, postings, sets, docStats,
-      aSetsIn = Some(aSets), abenchIn = Some(abench))
+      aSets, abench)
   }
 
   /** The five FitStore-persisted standing artifacts the incremental AND
@@ -2744,7 +2744,7 @@ object TextAnalysis {
     val standing = docs.filter(col("doc_id") < t)
     def kept(name: String)(f: => DataFrame): DataFrame =
       SharedFits.memo(spark, s"$name:$sfDir") {
-        FitStore.frame(spark, name, FitStore.documentsFp(spark, sfDir)) { f }
+        FitStore.frame(spark, name, FitStore.documentsFp(spark, sfDir, None)) { f }
           .localCheckpoint()
       }
     // one shingle pass feeds all four shingle-derived artifacts: sets is
@@ -2775,7 +2775,7 @@ object TextAnalysis {
       },
       () => kept("ca_postings_t80") {
         sets.select(col("doc_id"), explode(col("shs")).as("h"))
-      }))
+      }), Overlap.DEFAULT_CAP)
     catch { case e: Throwable => late.foreach(_.cancel()); throw e }
     (sets, r(0), r(1), late(0), late(1))
   }
@@ -2965,7 +2965,7 @@ object TextAnalysis {
     * projection. M rounds = M bounded jobs; nothing quadratic anywhere.
     * The oracle unrolls the same rounds as CTE blocks.
     */
-  def bpeTrain(docs: DataFrame, rounds: Int = BPE_TRAIN_ROUNDS): DataFrame = {
+  def bpeTrain(docs: DataFrame, rounds: Int): DataFrame = {
     val spark = docs.sparkSession
     // Symbols are DOUBLE-pipe separated with double-pipe sentinels at
     // both ends ("||l||o||w||"), and a merge of (a, b) replaces
@@ -3017,8 +3017,8 @@ object TextAnalysis {
   }
 
   def textBpeTrain(spark: SparkSession, sfDir: String): DataFrame =
-    FitStore.frame(spark, "bpe_merges", FitStore.documentsFp(spark, sfDir)) {
-      bpeTrain(Tables.documents(spark, sfDir))
+    FitStore.frame(spark, "bpe_merges", FitStore.documentsFp(spark, sfDir, None)) {
+      bpeTrain(Tables.documents(spark, sfDir), BPE_TRAIN_ROUNDS)
     }
 
   /** The same rounds unrolled: wf_r → pair counts p_r → best_r (1 row)
@@ -3762,7 +3762,7 @@ object TextAnalysis {
   private[graft] def sharedDsirModel(spark: SparkSession, sfDir: String): Array[Double] =
     SharedFits.memo(spark, s"dsir_model:$sfDir") {
       FitStore.doubles(spark, "dsir_model",
-        FitStore.documentsFp(spark, sfDir)) {
+        FitStore.documentsFp(spark, sfDir, None)) {
         dsirModel(Tables.documents(spark, sfDir))
       }
     }
@@ -3963,7 +3963,7 @@ object TextAnalysis {
       nQueries: Int): DataFrame =
     SharedFits.memo(spark, s"bm25_chunk_postings:$nQueries:$sfDir") {
       FitStore.frame(spark, s"bm25_chunk_postings_q$nQueries",
-        FitStore.documentsFp(spark, sfDir)) {
+        FitStore.documentsFp(spark, sfDir, None)) {
         chunkSpans(Tables.documents(spark, sfDir)
             .filter(col("doc_id") >= nQueries))
           .select(col("doc_id"), col("chunk_id"), col("chunk_tokens"),
@@ -3973,21 +3973,16 @@ object TextAnalysis {
       }.localCheckpoint()
     }
 
-  def chunkBm25TopK(docs: DataFrame, nQueries: Int = BM25_N_QUERIES,
-      k: Int = BM25_TOP_K, postings: Option[DataFrame] = None): DataFrame = {
-    // chunk-level postings; chunk_tokens rides along as the length key
-    val ctf = postings.getOrElse(
-      chunkSpans(docs.filter(col("doc_id") >= nQueries))
-        .select(col("doc_id"), col("chunk_id"), col("chunk_tokens"),
-          explode(split(col("chunk_text"), "\\s+")).as("tok"))
-        .groupBy(col("doc_id"), col("chunk_id"), col("chunk_tokens"), col("tok"))
-        .agg(count(lit(1)).as("tf"))
-        .localCheckpoint()) // feeds df, the corpus stats, and the probe join
+  /** Chunk BM25 top-[[BM25_TOP_K]] of the first [[BM25_N_QUERIES]]
+    * documents over the chunk postings `ctf` ([[chunkBm25Postings]];
+    * chunk_tokens rides along as the length key).
+    */
+  def chunkBm25TopK(docs: DataFrame, ctf: DataFrame): DataFrame = {
     val dfreq = ctf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val stats = broadcast(
       ctf.groupBy(col("doc_id"), col("chunk_id")).agg(first(col("chunk_tokens")).as("ct"))
         .agg(count(lit(1)).as("n_chunks"), avg(col("ct").cast("double")).as("avgcl")))
-    val qterms = Tables.tokens(docs.filter(col("doc_id") < nQueries))
+    val qterms = Tables.tokens(docs.filter(col("doc_id") < BM25_N_QUERIES))
       .select(col("doc_id").as("q_id"), col("tok")).distinct()
     val idf = log(
       (col("n_chunks").cast("double") - col("df") + lit(0.5)) /
@@ -4008,14 +4003,14 @@ object TextAnalysis {
       .filter(col("rn") === 1).drop("rn")
     val wQ = Window.partitionBy(col("q_id")).orderBy(col("bm25").desc, col("doc_id"))
     best.withColumn("rnk", row_number().over(wQ))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= BM25_TOP_K)
       .select(col("q_id"), col("doc_id"), col("chunk_id"), col("bm25"),
         col("rnk").cast("long").as("rnk"))
   }
 
   def chunkBm25(spark: SparkSession, sfDir: String): DataFrame =
     chunkBm25TopK(Tables.documents(spark, sfDir),
-      postings = Some(chunkBm25Postings(spark, sfDir, BM25_N_QUERIES)))
+      chunkBm25Postings(spark, sfDir, BM25_N_QUERIES))
 
   val chunkBm25Sql: String =
     s"""WITH d AS (
@@ -4093,7 +4088,7 @@ object TextAnalysis {
     * One source-sized aggregation; every derived frame is
     * sources-count rows, broadcast-sized at any corpus scale.
     */
-  def mixTemperature(docs: DataFrame, alpha: Double = MIX_TEMPERATURE): DataFrame = {
+  def mixTemperature(docs: DataFrame, alpha: Double): DataFrame = {
     // sources-count rows after ONE corpus scan; checkpointed because the
     // frame fans into the total, the normalizer, and the final select
     val perSrc = docs.groupBy(col("source"))
@@ -4118,7 +4113,7 @@ object TextAnalysis {
   }
 
   def textMixTemperature(spark: SparkSession, sfDir: String): DataFrame =
-    mixTemperature(Tables.documents(spark, sfDir))
+    mixTemperature(Tables.documents(spark, sfDir), MIX_TEMPERATURE)
 
   val textMixTemperatureSql: String = {
     // the oracle mirrors the engine's sqrt-vs-pow branch so a future

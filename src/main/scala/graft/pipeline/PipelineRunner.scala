@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
 object PipelineRunner {
 
   case class Config(sfDir: String, sinkDir: String,
-      bootstrapWm: String = Tables.WM, asOfDate: String = Tables.ASOF_DATE)
+      bootstrapWm: String, asOfDate: String)
 
   /** Rows appended per sink in one run. */
   case class RunReport(appended: Map[String, Long], watermark: String, newWatermark: String)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,12 +32,19 @@ object ReferencePipeline {
   def enrich(t: DataFrame, p: DataFrame): DataFrame =
     t.join(broadcast(p),
         t("chain") === p("chain") && to_date(t("createdAt")) === p("price_date"))
-      .select(t("_id"), t("createdAt"), t("stashId"), t("stake"), t("alreadyBonded"),
-        t("successful"), t("chain"), p("price").as("priceUSD"),
-        when(t("successful"),
-          when(t("stake") === t("alreadyBonded"), t("stake") * p("price"))
-            .otherwise(abs(t("stake") - t("alreadyBonded")) * p("price")))
-          .otherwise(lit(0.0)).as("txDollarValue"))
+      .select(enrichedCols(t(_), p("price")): _*)
+
+  /** The enriched-tx projection over a joined tx row (`tx` resolves a tx
+    * column) and its day's `price`: the seven tx columns, priceUSD, and
+    * txDollarValue (Q7: a failed tx is kept with value 0).
+    */
+  private[graft] def enrichedCols(tx: String => Column, price: Column): Seq[Column] =
+    Seq("_id", "createdAt", "stashId", "stake", "alreadyBonded", "successful", "chain")
+      .map(tx) ++ Seq(price.as("priceUSD"),
+      when(tx("successful"),
+        when(tx("stake") === tx("alreadyBonded"), tx("stake") * price)
+          .otherwise(abs(tx("stake") - tx("alreadyBonded")) * price))
+        .otherwise(lit(0.0)).as("txDollarValue"))
 
   def txEnrich(spark: SparkSession, sfDir: String): DataFrame =
     enrich(txSince(spark, sfDir, WM), dailyPrice(spark, sfDir))
@@ -68,14 +75,8 @@ object ReferencePipeline {
     val t = txSince(spark, sfDir, WM)
       .withColumn("price_date", to_date(col("createdAt")))
     val joined = graft.ops.Skew.saltedJoin(
-      t, dailyPrice(spark, sfDir), Seq("chain", "price_date"), "_id")
-    joined.select(col("_id"), col("createdAt"), col("stashId"), col("stake"),
-      col("alreadyBonded"), col("successful"), col("chain"),
-      col("price").as("priceUSD"),
-      when(col("successful"),
-        when(col("stake") === col("alreadyBonded"), col("stake") * col("price"))
-          .otherwise(abs(col("stake") - col("alreadyBonded")) * col("price")))
-        .otherwise(lit(0.0)).as("txDollarValue"))
+      t, dailyPrice(spark, sfDir), Seq("chain", "price_date"), "_id", factor = 8)
+    joined.select(enrichedCols(col, col("price")): _*)
   }
 
   /** The daily price dimension itself (the one aggregation the fixture

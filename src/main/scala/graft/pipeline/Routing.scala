@@ -66,7 +66,7 @@ object Routing {
     * earlier runs (updatescript.py:175 probes the sink, which spans runs);
     * rows of known stashes never get rn=1 treatment.
     */
-  def aumRows(batch: DataFrame, priorStashes: Option[DataFrame] = None): DataFrame = {
+  def aumRows(batch: DataFrame, priorStashes: Option[DataFrame]): DataFrame = {
     val w = Window.partitionBy(col("chain"), col("stashId"))
       .orderBy(col("createdAt"), col("_id"))
     val numbered = batch.withColumn("rn", row_number().over(w))
@@ -130,7 +130,7 @@ object Routing {
     * when stake ≠ alreadyBonded, with the signed delta.
     */
   def aum(spark: SparkSession, sfDir: String): DataFrame =
-    aumRows(batch(spark, sfDir))
+    aumRows(batch(spark, sfDir), None)
 
   val aumSql: String =
     s"""WITH $TX_CTE,

@@ -18,7 +18,7 @@ object RunPipeline {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val config = PipelineRunner.Config(args(0), args(1),
+    val config = PipelineRunner.Config(args(0), args(1), bootstrapWm = Tables.WM,
       asOfDate = if (args.length > 2) args(2) else Tables.ASOF_DATE)
     val report = PipelineRunner.run(spark, config)
     println(s"[pipeline] watermark ${report.watermark} -> ${report.newWatermark}")

@@ -57,38 +57,31 @@ object StreamingPipeline {
     * batch `ReferencePipeline.enrich` exactly, including the Q7 failed-tx
     * policy (kept, txDollarValue = 0).
     */
-  def enrichJoinStream(tx: DataFrame, price: DataFrame,
-      txLateness: String = "1 day", priceLateness: String = "2 days"): DataFrame = {
+  def enrichJoinStream(tx: DataFrame, price: DataFrame): DataFrame = {
     // the watermark rides a scratch copy of the time column: the derived
     // window carries its own event-time tag, and a stream may expose only
     // ONE event-time column to the join (createdAt itself must pass
     // through as plain data for the output projection)
     val t = tx
       .withColumn("t_event", col("createdAt"))
-      .withWatermark("t_event", txLateness)
+      .withWatermark("t_event", "1 day")
       .withColumn("t_day", window(col("t_event"), "1 day"))
       .drop("t_event")
     val p = price
       .select(col("chain").as("p_chain"), col("price_ts"), col("price"))
-      .withWatermark("price_ts", priceLateness)
+      .withWatermark("price_ts", "2 days")
       .withColumn("p_day", window(col("price_ts"), "1 day"))
       .drop("price_ts")
     t.join(p,
         t("chain") === col("p_chain") && col("t_day") === col("p_day"))
-      .select(t("_id"), t("createdAt"), t("stashId"), t("stake"),
-        t("alreadyBonded"), t("successful"), t("chain"),
-        col("price").as("priceUSD"),
-        when(t("successful"),
-          when(t("stake") === t("alreadyBonded"), t("stake") * col("price"))
-            .otherwise(abs(t("stake") - t("alreadyBonded")) * col("price")))
-          .otherwise(lit(0.0)).as("txDollarValue"))
+      .select(graft.pipeline.ReferencePipeline.enrichedCols(t(_), col("price")): _*)
   }
 
-  /** Per-(chain, day) volume with event-time windowing; `lateness` bounds
-    * how long a day stays open for stragglers.
+  /** Per-(chain, day) volume with event-time windowing; a day stays open
+    * one day for stragglers.
     */
-  def dailyVolume(tx: DataFrame, lateness: String = "1 day"): DataFrame =
-    tx.withWatermark("createdAt", lateness)
+  def dailyVolume(tx: DataFrame): DataFrame =
+    tx.withWatermark("createdAt", "1 day")
       .groupBy(window(col("createdAt"), "1 day").as("day"), col("chain"))
       .agg(count(lit(1)).as("n_tx"), sum(col("stake")).as("total_stake"))
       .select(col("day.start").as("day"), col("chain"), col("n_tx"), col("total_stake"))
@@ -240,7 +233,7 @@ object StreamingPipeline {
     * batch pipeline.
     */
   def nearDupStream(docs: DataFrame, tsCol: String,
-      lateness: String = "1 hour"): Dataset[BandMatch] = {
+      lateness: String): Dataset[BandMatch] = {
     val spark = docs.sparkSession
     import spark.implicits._
     val bands = (0 until graft.ops.Dedup.NUM_BANDS).map { b =>
@@ -375,7 +368,7 @@ object StreamingPipeline {
     // even-half NND fit, and the pinned base → bit geometry → standing
     // bucket table chain (the bucket explode hides under the NND loop)
     val (edges, (base, baseBits, standingBuckets)) = graft.ops.Overlap.all2(
-      Similarity.graphIndex(spark, sfDir, half = Some(0)),
+      Similarity.evenHalfGraphIndex(spark, sfDir),
       {
         val base = Similarity.withNorm(emb).localCheckpoint()
         // the seed-bucket bit geometry depends only on the pinned base —
@@ -390,10 +383,7 @@ object StreamingPipeline {
       })
     def links(ids: DataFrame): DataFrame =
       Similarity.graphTopkFrom(Similarity.beamTraverseFor(
-          edges, base, ids, Similarity.GRAPH_BEAM,
-          isNode = col("vec_id") % 2 === 0,
-          bitsHint = Some(baseBits),
-          nodeBuckets = Some(standingBuckets)))
+          edges, base, ids, Similarity.GRAPH_BEAM, baseBits, standingBuckets))
         .select(col("q_id").as("new_id"), col("n_id"), col("cosine"), col("rnk"))
     val stream = Tables.embeddingsStream(spark, sfDir)
       .filter(col("vec_id") % 2 === 1)
@@ -498,7 +488,8 @@ object StreamingPipeline {
         (standing, pairs.select(col("a_id"), col("b_id")).localCheckpoint())
       },
       EntityResolution.sharedStandingAssignment(spark, sfDir))
-    EntityResolution.erGoldenFinish(standing, arrivals, assignSt, drained)
+    EntityResolution.erGoldenFinish(standing, assignSt, drained,
+      EntityResolution.arrivalRecords(arrivals))
   }
 
   /** Accumulated-arrival index with LOG-STRUCTURED delta checkpointing
@@ -737,11 +728,11 @@ object StreamingPipeline {
     val stream = Tables.documentsStream(spark, sfDir)
       .filter(col("doc_id") >= t)
     val flags = r.eachBatch(stream, OutputMode.Append(),
-        TA.rejStreamFlags(docs.limit(0), TA.caShingleSets(docs.limit(0)),
+        TA.rejFlags(docs.limit(0), TA.caShingleSets(docs.limit(0)),
           fpIdx, postings, sets, batchBounded = true)) { (batch, batchId) =>
       val arr = batch.localCheckpoint()
       val aSets = TA.caShingleSets(arr).localCheckpoint()
-      TA.rejStreamFlags(arr, aSets,
+      TA.rejFlags(arr, aSets,
           fpIdx.unionByName(seenFp.view),
           postings.unionByName(seenPost.view),
           sets.unionByName(seenSets.view), batchBounded = true)
@@ -924,7 +915,7 @@ object StreamingPipeline {
     * closes a day.
     */
   def anomalyStream(events: DataFrame, history: DataFrame,
-      lateness: String = "1 day"): DataFrame = {
+      lateness: String): DataFrame = {
     // the per-type z profile is STATIC — pinned at stream build, so the
     // stream-static join never re-aggregates the history per trigger
     // (|types| rows; the standing history cannot change mid-stream)
@@ -962,7 +953,7 @@ object StreamingPipeline {
   def anomalyReplay(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): DataFrame = Replay(spark, "anomaly_replay") { r =>
     val stream = anomalyStream(Tables.eventsStream(spark, sfDir),
-      Tables.events(spark, sfDir))
+      Tables.events(spark, sfDir), "1 day")
     r.eachBatch(stream, OutputMode.Update(), stream) { (batch, _) =>
       Sink.mergeByKey(batch, r.out, Seq("event_type", "day"))
     }.select(col("event_type"), col("day"), col("n_events"),
@@ -991,9 +982,9 @@ object StreamingPipeline {
     * computed from the Instant (epochSecond·1e6 + nano/1000), exactly
     * `unix_micros`/DuckDB `epoch_us`, so the oracle compares integers.
     */
-  def sessionizeStream(events: Dataset[TypedEvent],
-      gapUs: Long = graft.ops.Relational.SESSION_GAP_US): Dataset[SessionAssign] = {
+  def sessionizeStream(events: Dataset[TypedEvent]): Dataset[SessionAssign] = {
     import events.sparkSession.implicits._
+    val gapUs = graft.ops.Relational.SESSION_GAP_US
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[(Long, Long), SessionAssign](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -1294,7 +1285,7 @@ object StreamingPipeline {
     * fixed-width packing of an unbounded id under a 51-bit µs clock can
     * reproduce the batch (ts DESC, event_id DESC) winner exactly. */
   case class StateChange(user_id: Long, d: java.sql.Date, state: String,
-      seq: Long = 0L, tie: Long = 0L)
+      seq: Long, tie: Long)
   /** `prevTo` remembers the observed day BEFORE the last extension so a
     * same-day revision (a later event changes an already-seen day's
     * state — the batch rule is last-event-wins) can retract exactly that

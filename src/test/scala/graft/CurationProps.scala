@@ -164,7 +164,8 @@ object CurationProps extends Properties("Curation") {
   property("bm25: per query the rank list is dense, ids unique, scores descending on rank") =
     forAll(genVocabCorpus) { rows =>
       val df = rows.toDF("doc_id", "text", "lang", "source")
-      val got = TextAnalysis.bm25TopK(df, nQueries = 2, k = 5)
+      val got = TextAnalysis.bm25TopK(df, nQueries = 2, k = 5,
+        TextAnalysis.termFreqs(df).localCheckpoint())
         .select("q_id", "doc_id", "bm25", "rnk")
         .as[(Long, Long, Double, Long)].collect()
       got.groupBy(_._1).forall { case (q, hits) =>

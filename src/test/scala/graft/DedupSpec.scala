@@ -133,8 +133,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("mihGeometry: pigeonhole-violating rungs are rejected; rung switch at the pin") {
-    assert(Dedup.mihGeometry(100L, 8, 7, 1000L) == ((8, 0)))
-    assert(Dedup.mihGeometry(1000L, 8, 7, 1000L) == ((4, 1)))
+    assert(Dedup.mihGeometry(100L, 8, 7, 1000L, Long.MaxValue) == ((8, 0)))
+    assert(Dedup.mihGeometry(1000L, 8, 7, 1000L, Long.MaxValue) == ((4, 1)))
     val sigs = graft.pipeline.Tables.documents(spark, "/root/testdata/sf0.001")
       .limit(1).select(col("doc_id"), col("doc_id").as("simhash"))
     intercept[IllegalArgumentException] {
@@ -458,9 +458,11 @@ class DedupSpec extends SparkSpec {
     def diff(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
       a.exceptAll(b).count() + b.exceptAll(a).count()
     val emb = graft.pipeline.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    assert(diff(Dedup.knnGraph(emb), Dedup.knnGraphJoin(emb)) == 0)
+    assert(diff(Dedup.knnGraph(emb, Dedup.KNN_K, Dedup.EMB_DIM),
+      Dedup.knnGraphJoin(emb, Dedup.KNN_K)) == 0)
     // and at the NN-descent serving degree (a different k cut)
-    assert(diff(Dedup.knnGraph(emb, k = 12), Dedup.knnGraphJoin(emb, k = 12)) == 0)
+    assert(diff(Dedup.knnGraph(emb, k = 12, dim = Dedup.EMB_DIM),
+      Dedup.knnGraphJoin(emb, k = 12)) == 0)
   }
 
   test("cluster entry points share one memoized assignment per (session, dir)") {
@@ -484,8 +486,10 @@ class DedupSpec extends SparkSpec {
     val d = docs(2L -> textX, 4L -> textX, 6L -> textY, // standing (even)
       3L -> textX, 5L -> textZ, 7L -> textW, 9L -> textW) // arriving (odd)
     val prior = d.filter("doc_id % 2 = 0")
-    val inc = Dedup.incrementalClusters(d.filter("doc_id % 2 = 1"), prior,
-      Dedup.duplicateClusters(prior))
+    val arriving = d.filter("doc_id % 2 = 1")
+    val (newSets, newBands) = Dedup.arrivalProbe(arriving)
+    val inc = Dedup.incrementalClusters(arriving, prior,
+      Dedup.duplicateClusters(prior), newSets, newBands, Dedup.minhashBands(prior))
     // identical copies make every qualifying pair a certain band candidate,
     // so the incremental assignment coincides with the batch fixpoint
     val got = inc.select("doc_id", "rep_id", "cluster_size")
@@ -517,7 +521,10 @@ class DedupSpec extends SparkSpec {
     val priorClusters = Dedup.duplicateClusters(prior)
     // premise: two distinct standing clusters
     assert(priorClusters.select("rep_id").distinct().count() == 2L)
-    val inc = Dedup.incrementalClusters(d.filter("doc_id % 2 = 1"), prior, priorClusters)
+    val arriving = d.filter("doc_id % 2 = 1")
+    val (newSets, newBands) = Dedup.arrivalProbe(arriving)
+    val inc = Dedup.incrementalClusters(arriving, prior, priorClusters,
+        newSets, newBands, Dedup.minhashBands(prior))
       .select("doc_id", "rep_id", "cluster_size", "origin")
       .as[(Long, Long, Long, String)].collect().toSet
     // the bridge joins the MIN matched rep (2); cluster B keeps rep 8 and

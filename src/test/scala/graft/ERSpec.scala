@@ -184,12 +184,13 @@ class ERSpec extends SparkSpec {
     val standing = docs.filter(col("doc_id") % 2 === 0)
     val arrivals = docs.filter(col("doc_id") % 2 === 1)
     val rejected = EntityResolution.frozenRejectedBlocks(standing)
-    val oneShot = EntityResolution.erGoldenFinish(standing, arrivals,
+    val oneShot = EntityResolution.erGoldenFinish(standing,
       EntityResolution.sharedStandingAssignment(spark, sf),
       EntityResolution.erStreamProbe(
           EntityResolution.keptFrozen(arrivals, rejected),
           EntityResolution.keptFrozen(standing, rejected))
-        .select(col("a_id"), col("b_id")))
+        .select(col("a_id"), col("b_id")),
+      EntityResolution.arrivalRecords(arrivals))
     val streamed = graft.streaming.StreamingPipeline.erGoldenReplay(spark, sf)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet

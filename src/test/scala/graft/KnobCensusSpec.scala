@@ -10,7 +10,8 @@ import scala.tools.nsc.reporters.StoreReporter
 /** The program's environment surface, read from the main sources: every
   * env var a main or operator reads, no stdout writes from library code
   * (Bench's stdout carries exactly one JSON line), no session function
-  * registry, and no library member that only tests reach.
+  * registry, no default arguments, and no library member that only tests
+  * reach.
   */
 class KnobCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -68,21 +69,19 @@ class KnobCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
       .map { case (p, src) => Census.parse(p, src) }
     // the entry points: SparkEntry and every object that defines `main`
     val roots = main.flatMap(Census.entryPoints).toSet
-    val defined = main.flatMap(Census.members).filterNot { case (q, _) => roots(q) }
-    val usedInMain = main.flatMap(Census.uses).toSet
+    val graph = Census.UseGraph(main.flatMap(Census.memberUses))
+    val fromEntries = graph.reach(roots)
+    val unreached = graph.defined -- graph.reach(roots ++ testOnly.keySet)
+    assert(unreached.isEmpty,
+      s"members no entry point reaches: ${unreached.toSeq.sorted.mkString(", ")}")
+    // the allowlist cannot rot: each entry still exists, is still not
+    // reached from an entry point, and has a test caller
     val usedInTest = test.flatMap(Census.uses).toSet
-    val unreached = defined.collect { case (q, n) if !usedInMain(n) => q }.toSet
-    val stray = (unreached -- testOnly.keySet).toSeq.sorted
-    assert(stray.isEmpty, s"members no entry point reaches: ${stray.mkString(", ")}")
-    // the allowlist cannot rot: each entry still exists, still lacks a main caller, has a test caller
-    val simple = defined.toMap
     val rotten = testOnly.keys.toSeq.sorted.flatMap { q =>
-      simple.get(q) match {
-        case None => Some(s"$q is not defined")
-        case Some(n) if usedInMain(n) => Some(s"$q is used in main")
-        case Some(n) if !usedInTest(n) => Some(s"$q has no caller in src/test")
-        case _ => None
-      }
+      if (!graph.defined(q)) Some(s"$q is not defined")
+      else if (fromEntries(q)) Some(s"$q is reached from an entry point")
+      else if (!usedInTest(q.split('.').last)) Some(s"$q has no caller in src/test")
+      else None
     }
     assert(rotten.isEmpty, rotten.mkString("; "))
   }
@@ -109,6 +108,12 @@ class KnobCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(banned.isEmpty && byName.isEmpty, (banned ++ byName).mkString("\n"))
   }
 
+  test("library defs declare no default arguments") {
+    val defaulted = sources(root).flatMap { case (p, src) => Census.defaulted(Census.parse(p, src)) }
+    if (defaulted.nonEmpty)
+      fail(s"${defaulted.size} defaulted parameters: ${defaulted.sorted.mkString(", ")}")
+  }
+
   test("library packages never write to stdout") {
     val writers = Seq("ops", "streaming", "functions").flatMap { d =>
       sources(root.resolve(s"graft/$d")).collect {
@@ -130,6 +135,9 @@ class KnobCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
   *    word (generated Java names its kernels). Bindings are not uses: a
   *    parameter, pattern variable or local definition shadows the name in
   *    its scope, and a named argument's name and an import name nothing.
+  *  - A member is REACHED from the entry points when the own code of a
+  *    reached member uses its name ([[UseGraph]]); a cluster of members
+  *    that only name each other stays unreached.
   */
 private object Census {
   private val settings = new Settings
@@ -149,15 +157,66 @@ private object Census {
     !d.mods.isOverride && !d.mods.isParamAccessor && d.name != nme.CONSTRUCTOR &&
       !d.name.decoded.contains("$")
 
-  /** (qualified name, name) of every member, nested ones under their owner. */
-  def members(t: Tree): Seq[(String, String)] = {
-    def in(prefix: String, t: Tree): Seq[(String, String)] = t match {
-      case PackageDef(_, stats) => stats.flatMap(in(prefix, _))
-      case d: ImplDef if counted(d) =>
-        val q = prefix + d.name.decoded
-        (q -> d.name.decoded) +: d.impl.body.flatMap(in(q + ".", _))
-      case d: ValOrDefDef if counted(d) => Seq((prefix + d.name.decoded) -> d.name.decoded)
-      case _ => Nil
+  private def isMember(t: Tree): Boolean = t match {
+    case d: ImplDef => counted(d)
+    case d: ValOrDefDef => counted(d)
+    case _ => false
+  }
+
+  /** Every member, nested ones under their owner, as (qualified name,
+    * name, the names its own code uses). A def's or val's own code is its
+    * whole tree. A template's own code is what its body holds besides its
+    * members: overrides, constructor fields and statements. So reaching an
+    * object reaches none of its members by itself.
+    */
+  def memberUses(t: Tree): Seq[(String, String, Set[String])] = {
+    def in(prefix: String, owners: Set[String], t: Tree): Seq[(String, String, Set[String])] =
+      t match {
+        case PackageDef(_, stats) => stats.flatMap(in(prefix, owners, _))
+        case d: ImplDef if counted(d) =>
+          val q = prefix + d.name.decoded
+          val own = owners + d.name.decoded
+          val (nested, code) = d.impl.body.partition(isMember)
+          val locals = binders(d).map(_.decoded).toSet
+          (q, d.name.decoded, (d.impl.parents ++ code).flatMap(usesIn(_, locals, own)).toSet) +:
+            nested.flatMap(in(q + ".", own, _))
+        case d: ValOrDefDef if counted(d) =>
+          Seq((prefix + d.name.decoded, d.name.decoded, usesIn(d, Set.empty, owners)))
+        case _ => Nil
+      }
+    in("", Set.empty, t)
+  }
+
+  /** Members joined by use edges: a member is reached when a reached
+    * member's own code names it (by simple name, so a use reaches every
+    * member of that name).
+    */
+  final case class UseGraph(nodes: Seq[(String, String, Set[String])]) {
+    val defined: Set[String] = nodes.map(_._1).toSet
+    private val byName = nodes.groupMap(_._2)(_._1)
+    private val usesOf = nodes.groupMapReduce(_._1)(_._3)(_ ++ _)
+
+    def reach(start: Set[String]): Set[String] = {
+      val seen = mutable.Set.empty[String] ++ start
+      val queue = mutable.Queue.empty[String] ++ start
+      while (queue.nonEmpty)
+        for (n <- usesOf.getOrElse(queue.dequeue(), Set.empty); q <- byName.getOrElse(n, Nil))
+          if (seen.add(q)) queue += q
+      seen.toSet
+    }
+  }
+
+  /** `Owner.def(param)` for every parameter of a def or class constructor
+    * that declares a default value.
+    */
+  def defaulted(t: Tree): Seq[String] = {
+    def in(prefix: String, t: Tree): Seq[String] = t match {
+      case d: ImplDef => d.impl.body.flatMap(in(prefix + d.name.decoded + ".", _))
+      case d: DefDef =>
+        val name = if (d.name == nme.CONSTRUCTOR) prefix.stripSuffix(".") else prefix + d.name.decoded
+        d.vparamss.flatten.collect { case p if p.mods.hasDefault => s"$name(${p.name.decoded})" } ++
+          in(name + ".", d.rhs)
+      case _ => t.children.flatMap(in(prefix, _))
     }
     in("", t)
   }
@@ -191,7 +250,9 @@ private object Census {
     case Apply(Select(_, n), args) if sqlEntries(n.decoded) => args
   }.flatten.flatMap(_.collect { case Literal(Constant(s: String)) => s })
 
-  def uses(t: Tree): Set[String] = {
+  def uses(t: Tree): Set[String] = usesIn(t, Set.empty, Set.empty)
+
+  private def usesIn(t: Tree, locals0: Set[String], owners0: Set[String]): Set[String] = {
     val out = mutable.Set.empty[String]
     // `locals`: names a binding shadows; `owners`: the defs and templates
     // being walked, whose own names inside them are no use
@@ -210,7 +271,7 @@ private object Census {
         }
         t.children.foreach(walk(_, scope, own))
     }
-    walk(t, Set.empty, Set.empty)
+    walk(t, locals0, owners0)
     out.toSet
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.pipeline.PipelineRunner
+import graft.pipeline.{PipelineRunner, Tables}
 
 /** Golden end-to-end: the full 5-step pipeline over sf0.001, run twice
   * (SURVEY.md §5.2 item 5). The second run must append nothing — both via
@@ -13,7 +13,8 @@ class PipelineRunnerSpec extends SparkSpec {
 
   test("pipeline run is idempotent and advances the watermark") {
     val sink = SparkSpec.tempDir("graft-sink").toString
-    val c = PipelineRunner.Config("/root/testdata/sf0.001", sink)
+    val c = PipelineRunner.Config("/root/testdata/sf0.001", sink,
+      Tables.WM, Tables.ASOF_DATE)
 
     val r1 = PipelineRunner.run(spark, c)
     assert(r1.appended("transactiondatas") > 0)
@@ -31,7 +32,8 @@ class PipelineRunnerSpec extends SparkSpec {
     // re-processes, and every append must be absorbed by the anti-joins
     val sink2 = s"$sink-replay"
     // copy sinks by re-running into a fresh dir, then force-replay
-    val c2 = PipelineRunner.Config("/root/testdata/sf0.001", sink2)
+    val c2 = PipelineRunner.Config("/root/testdata/sf0.001", sink2,
+      Tables.WM, Tables.ASOF_DATE)
     PipelineRunner.run(spark, c2)
     // force the watermark back
     import spark.implicits._
@@ -51,7 +53,8 @@ class PipelineRunnerSpec extends SparkSpec {
 
   test("a run killed inside the watermark swap resumes from its own watermark") {
     val sink = SparkSpec.tempDir("graft-sink-swap").toString
-    val c = PipelineRunner.Config("/root/testdata/sf0.001", sink)
+    val c = PipelineRunner.Config("/root/testdata/sf0.001", sink,
+      Tables.WM, Tables.ASOF_DATE)
     val r1 = PipelineRunner.run(spark, c)
     // the swap's crash window: the live generation renamed away, the
     // staged one not yet in

@@ -131,7 +131,7 @@ class ReplaySpec extends SparkSpec {
     val e = intercept[IllegalStateException] {
       Overlap.all(Seq(
         () => { slowJob(); () },
-        () => throw new IllegalStateException("fast")))
+        () => throw new IllegalStateException("fast")), Overlap.DEFAULT_CAP)
     }
     val secs = (System.nanoTime - t0) / 1e9
     assert(e.getMessage == "fast")

@@ -48,7 +48,7 @@ object RoutingProps extends Properties("Routing") {
         Routing.nominationsRows(b.filter(col("chain") === 0)).select("_id")
           .union(Routing.amountStakedRows(b.filter(col("chain") === 0)).select("_id"))
           .union(Routing.kusamaNominationsRows(b.filter(col("chain") === 1)).select("_id"))
-          .union(Routing.aumRows(b).select("_id"))
+          .union(Routing.aumRows(b, None).select("_id"))
           .distinct().as[Long].collect().toSet
       val successful = b.select("_id").as[Long].collect().toSet
       routed == successful
@@ -57,7 +57,7 @@ object RoutingProps extends Properties("Routing") {
   property("AUM: exactly one first-seen row per (chain, stash) with volume = its stake") =
     forAll(genBatch) { rows =>
       val b = toBatchDF(rows).filter(col("successful"))
-      val aum = Routing.aumRows(b)
+      val aum = Routing.aumRows(b, None)
         .select("chain", "stashId", "_id", "volume", "stake", "alreadyBonded")
         .as[(Long, Long, Long, Double, Double, Double)].collect()
       val byKey = aum.groupBy(r => (r._1, r._2))
@@ -69,8 +69,8 @@ object RoutingProps extends Properties("Routing") {
   property("anti-join re-run appends nothing") =
     forAll(genBatch) { rows =>
       val b = toBatchDF(rows)
-      val sinkIds = Routing.aumRows(b.filter(col("successful"))).select("_id")
-      val rerun = Routing.aumRows(b.filter(col("successful")))
+      val sinkIds = Routing.aumRows(b.filter(col("successful")), None).select("_id")
+      val rerun = Routing.aumRows(b.filter(col("successful")), None)
         .join(sinkIds, Seq("_id"), "left_anti")
       rerun.count() == 0L
     }

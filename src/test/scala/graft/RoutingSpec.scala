@@ -57,7 +57,7 @@ class RoutingSpec extends SparkSpec {
       // stash 11: first row is a delta row -> insert(stake=7 as first-seen)
       (4L, "2024-01-11 00:03:00", 11L, 7.0, 3.0, true, 0L),
       (5L, "2024-01-11 00:04:00", 11L, 9.0, 8.0, true, 0L))
-    assert(volumes(Routing.aumRows(b)) ==
+    assert(volumes(Routing.aumRows(b, None)) ==
       Map(1L -> 5.0, 3L -> -4.0, 4L -> 7.0, 5L -> 1.0))
   }
 
@@ -65,7 +65,7 @@ class RoutingSpec extends SparkSpec {
     val b = batch(
       (9L, "2024-01-11 05:00:00", 10L, 3.0, 1.0, true, 0L), // later in time
       (8L, "2024-01-11 01:00:00", 10L, 5.0, 2.0, true, 0L)) // earlier -> first seen
-    assert(volumes(Routing.aumRows(b)) == Map(8L -> 5.0, 9L -> 2.0))
+    assert(volumes(Routing.aumRows(b, None)) == Map(8L -> 5.0, 9L -> 2.0))
   }
 
   test("AUM with prior-run state: known stash never gets first-seen volume") {
@@ -81,6 +81,6 @@ class RoutingSpec extends SparkSpec {
     val b = batch(
       (1L, "2024-01-11 00:00:00", 10L, 5.0, 2.0, true, 0L),
       (2L, "2024-01-11 00:01:00", 10L, 7.0, 3.0, true, 1L)) // same stash, other chain
-    assert(volumes(Routing.aumRows(b)) == Map(1L -> 5.0, 2L -> 7.0))
+    assert(volumes(Routing.aumRows(b, None)) == Map(1L -> 5.0, 2L -> 7.0))
   }
 }

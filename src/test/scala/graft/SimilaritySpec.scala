@@ -234,17 +234,18 @@ class SimilaritySpec extends SparkSpec {
     Similarity.GRAPH_DEGREES.foreach { k =>
       val shared = Similarity.nndInitFor(cands, k)
         .as[(Long, Long)].collect().toSet
-      val direct = graft.ops.Dedup.knnGraph(emb, k = k)
+      val direct = graft.ops.Dedup.knnGraph(emb, k = k, dim = graft.ops.Dedup.EMB_DIM)
         .select(col("vec_id"), col("nn_id")).as[(Long, Long)].collect().toSet
       assert(shared == direct, s"init at degree $k must match knnGraph($k)")
     }
     // and the full construction threaded through the shared seed is the
     // same adjacency the self-contained build produces
     val k = Similarity.GRAPH_DEGREES(1)
-    val viaShared = Similarity.nnDescentAdj(emb, k = k,
-        init = Some(Similarity.nndInitFor(cands, k)), payIn = Some(base))
+    val viaShared = Similarity.nnDescentAdj(Similarity.nndInitFor(cands, k), base,
+        k = k, iters = Similarity.NND_ITERS)
       .as[(Long, Long)].collect().toSet
-    val selfContained = Similarity.nnDescentAdj(emb, k = k)
+    val (init, pay) = Similarity.nndSeedOf(emb, k, graft.ops.Dedup.EMB_DIM)
+    val selfContained = Similarity.nnDescentAdj(init, pay, k = k, iters = Similarity.NND_ITERS)
       .as[(Long, Long)].collect().toSet
     assert(viaShared == selfContained, "shared-seed NND must be row-identical")
   }
@@ -372,18 +373,18 @@ class SimilaritySpec extends SparkSpec {
     // the LSH init proposed.
     val emb = (0 until 6).map(i => (i.toLong, Array(1.0f, 0.01f * i), 0)) ++
       (6 until 12).map(i => (i.toLong, Array(0.01f * (i - 6), 1.0f), 0))
-    val adj = Similarity.nnDescentAdj(
-        emb.toDF("vec_id", "embedding", "label"), k = 2, iters = 2, dim = 2)
-      .as[(Long, Long)].collect()
+    def build() = {
+      val (init, pay) = Similarity.nndSeedOf(emb.toDF("vec_id", "embedding", "label"), k = 2, dim = 2)
+      Similarity.nnDescentAdj(init, pay, k = 2, iters = 2).as[(Long, Long)].collect()
+    }
+    val adj = build()
     assert(adj.nonEmpty)
     adj.foreach { case (src, dst) =>
       assert((src < 6) == (dst < 6),
         s"edge $src -> $dst crosses the planted clusters")
     }
     // refinement is deterministic: a rebuild is bit-identical
-    val again = Similarity.nnDescentAdj(
-        emb.toDF("vec_id", "embedding", "label"), k = 2, iters = 2, dim = 2)
-      .as[(Long, Long)].collect()
+    val again = build()
     assert(adj.sorted.toSeq == again.sorted.toSeq)
   }
 

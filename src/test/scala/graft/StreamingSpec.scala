@@ -126,7 +126,7 @@ class StreamingSpec extends SparkSpec {
       "stream filter group key value row column line part query"
     val in = MemoryStream[(Long, Timestamp, String)]
     val q = StreamingPipeline.nearDupStream(
-        in.toDF().toDF("doc_id", "ts", "text"), "ts")
+        in.toDF().toDF("doc_id", "ts", "text"), "ts", "1 hour")
       .writeStream.format("memory").queryName("neardupstream")
       .outputMode("append").start()
     in.addData((1L, ts("2024-01-11 01:00:00"), base))
@@ -263,7 +263,7 @@ class StreamingSpec extends SparkSpec {
     import java.sql.{Date, Timestamp}
     val in = MemoryStream[(Long, Date, String)]
     val q = StreamingPipeline.scd2Stream(
-        in.toDS().map(r => StreamingPipeline.StateChange(r._1, r._2, r._3)))
+        in.toDS().map(r => StreamingPipeline.StateChange(r._1, r._2, r._3, 0L, 0L)))
       .writeStream.format("memory").queryName("scd2stream")
       .outputMode("append").start()
     def d(day: Int) = Date.valueOf(f"2024-01-$day%02d")
@@ -303,7 +303,7 @@ class StreamingSpec extends SparkSpec {
     import java.sql.Date
     val in = MemoryStream[(Long, Date, String, Long)]
     val q = StreamingPipeline.scd2Stream(
-        in.toDS().map(r => StreamingPipeline.StateChange(r._1, r._2, r._3, r._4)))
+        in.toDS().map(r => StreamingPipeline.StateChange(r._1, r._2, r._3, r._4, 0L)))
       .writeStream.format("memory").queryName("scd2rev")
       .outputMode("append").start()
     def d(day: Int) = Date.valueOf(f"2024-01-$day%02d")
@@ -331,7 +331,7 @@ class StreamingSpec extends SparkSpec {
     import java.sql.Date
     val in = MemoryStream[(Long, Date, String, Long)]
     val q = StreamingPipeline.scd2Stream(
-        in.toDS().map(r => StreamingPipeline.StateChange(r._1, r._2, r._3, r._4)))
+        in.toDS().map(r => StreamingPipeline.StateChange(r._1, r._2, r._3, r._4, 0L)))
       .writeStream.format("memory").queryName("scd2oneb")
       .outputMode("append").start()
     def d(day: Int) = Date.valueOf(f"2024-01-$day%02d")
@@ -359,7 +359,7 @@ class StreamingSpec extends SparkSpec {
     import java.sql.Date
     val in = MemoryStream[(Long, Date, String, Long)]
     val q = StreamingPipeline.scd2Stream(
-        in.toDS().map(r => StreamingPipeline.StateChange(r._1, r._2, r._3, r._4)))
+        in.toDS().map(r => StreamingPipeline.StateChange(r._1, r._2, r._3, r._4, 0L)))
       .writeStream.format("memory").queryName("scd2xrev")
       .outputMode("append").start()
     def d(day: Int) = Date.valueOf(f"2024-01-$day%02d")

@@ -374,13 +374,15 @@ class TextMultimodalSpec extends SparkSpec {
     val standing = d.filter($"doc_id" < t)
     val arrivals = d.filter($"doc_id" >= t)
     val stSets = TA.caShingleSets(standing)
+    val (aSets, abench) = TA.arrivalSets(arrivals)
     val inc = TA.rejectionsIncremental(arrivals,
         benchH = TA.caShingleSets(standing.filter($"doc_id" % 97L === 0L))
           .select(explode($"shs").as("h")).distinct(),
         fpIdx = standing.select(Dedup.exactFp($"text").as("fp")).distinct(),
         postings = stSets.select($"doc_id", explode($"shs").as("h")),
         sets = stSets,
-        docStats = TA.caDocStats(standing, stSets.localCheckpoint()))
+        docStats = TA.caDocStats(standing, stSets.localCheckpoint()),
+        aSets = aSets, abench = abench)
       .select("doc_id", "reason").as[(Long, String)].collect().toMap
     val batch = TA.corpusRejections(d)
       .select("doc_id", "reason").as[(Long, String)].collect()
@@ -474,8 +476,10 @@ class TextMultimodalSpec extends SparkSpec {
     val streamed = TA.rejStreamFinish(flagFrames.reduce(_ unionByName _),
         seenPost, seenBench.distinct(), benchH, postings, docStats)
       .select("doc_id", "reason").as[(Long, String)].collect().toMap
-    val oneShot = TA.rejectionsIncremental(d.filter($"doc_id" >= t),
-        benchH, fpIdx, postings, stSets, docStats)
+    val arrivals = d.filter($"doc_id" >= t)
+    val (aSets, abench) = TA.arrivalSets(arrivals)
+    val oneShot = TA.rejectionsIncremental(arrivals,
+        benchH, fpIdx, postings, stSets, docStats, aSets, abench)
       .select("doc_id", "reason").as[(Long, String)].collect().toMap
     assert(streamed == oneShot,
       s"streamed flags + drain must equal the one-shot audit: $streamed vs $oneShot")
@@ -1250,7 +1254,8 @@ class TextMultimodalSpec extends SparkSpec {
   test("mix temperature: flattens shares toward uniform, factors cross 1 by size") {
     val big = (0L until 18L).map(i => (i, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10", "en", "srcbig"))
     val small = (18L until 20L).map(i => (i, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10", "en", "srcsmall"))
-    val got = TextAnalysis.mixTemperature((big ++ small).toDF("doc_id", "text", "lang", "source"))
+    val got = TextAnalysis.mixTemperature((big ++ small).toDF("doc_id", "text", "lang", "source"),
+        TextAnalysis.MIX_TEMPERATURE)
       .select("source", "raw_share", "temp_share", "sample_factor")
       .as[(String, Double, Double, Double)].collect().map(r => r._1 -> r).toMap
     val (_, rawB, tempB, facB) = got("srcbig")
@@ -1295,7 +1300,8 @@ class TextMultimodalSpec extends SparkSpec {
       (1L, "alpha beta gamma delta", "en", "s"),  // shares 3 terms
       (2L, "alpha epsilon zeta eta", "en", "s"),  // shares 1 term
       (3L, "theta iota kappa lambda", "en", "s")) // shares none
-    val got = TextAnalysis.bm25TopK(d, nQueries = 1, k = 5)
+    val got = TextAnalysis.bm25TopK(d, nQueries = 1, k = 5,
+        TextAnalysis.termFreqs(d).localCheckpoint())
       .select("doc_id", "n_terms", "bm25", "rnk")
       .as[(Long, Long, Double, Long)].collect().sortBy(_._4)
     assert(got.map(_._1).toSeq == Seq(1L, 2L)) // doc 3 absent: no shared terms
@@ -1309,7 +1315,8 @@ class TextMultimodalSpec extends SparkSpec {
       (0L, "alpha", "en", "s"),
       (1L, "alpha beta", "en", "s"),
       (2L, s"alpha $filler", "en", "s"))
-    val got = TextAnalysis.bm25TopK(d, nQueries = 1, k = 5)
+    val got = TextAnalysis.bm25TopK(d, nQueries = 1, k = 5,
+        TextAnalysis.termFreqs(d).localCheckpoint())
       .select("doc_id", "bm25").as[(Long, Double)].collect().toMap
     assert(got(1L) > got(2L)) // tf=1 for 'alpha' in both; |d| differs
   }
