@@ -3959,13 +3959,12 @@ object TextAnalysis {
     * [[bm25Postings]] (artifact name carries the query-split rule the
     * builder bakes in).
     */
-  private def chunkBm25Postings(spark: SparkSession, sfDir: String,
-      nQueries: Int): DataFrame =
-    SharedFits.memo(spark, s"bm25_chunk_postings:$nQueries:$sfDir") {
-      FitStore.frame(spark, s"bm25_chunk_postings_q$nQueries",
+  private def chunkBm25Postings(spark: SparkSession, sfDir: String): DataFrame =
+    SharedFits.memo(spark, s"bm25_chunk_postings:$BM25_N_QUERIES:$sfDir") {
+      FitStore.frame(spark, s"bm25_chunk_postings_q$BM25_N_QUERIES",
         FitStore.documentsFp(spark, sfDir, None)) {
         chunkSpans(Tables.documents(spark, sfDir)
-            .filter(col("doc_id") >= nQueries))
+            .filter(col("doc_id") >= BM25_N_QUERIES))
           .select(col("doc_id"), col("chunk_id"), col("chunk_tokens"),
             explode(split(col("chunk_text"), "\\s+")).as("tok"))
           .groupBy(col("doc_id"), col("chunk_id"), col("chunk_tokens"), col("tok"))
@@ -4010,7 +4009,7 @@ object TextAnalysis {
 
   def chunkBm25(spark: SparkSession, sfDir: String): DataFrame =
     chunkBm25TopK(Tables.documents(spark, sfDir),
-      chunkBm25Postings(spark, sfDir, BM25_N_QUERIES))
+      chunkBm25Postings(spark, sfDir))
 
   val chunkBm25Sql: String =
     s"""WITH d AS (

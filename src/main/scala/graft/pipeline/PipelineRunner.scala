@@ -1,29 +1,32 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Overlap
+
 /** The whole cron job (updatescript.py:221-241) as one batch run over
-  * parquet sinks: read the watermark, run the five steps in driver order,
-  * advance the watermark last-ish (Q4: the reference advances it between
-  * steps 3 and 5 but hands the *captured* watermark to step 5; we capture
-  * once at start, so the observable behavior is identical and a crash
-  * between steps can only cause re-processing, which the anti-joins absorb).
+  * parquet sinks, one parquet dir per reference collection under
+  * `sinkDir` (FIXTURES.md §A.2). A run
   *
-  * Sink layout under `sinkDir`: one parquet dir per reference collection
-  * (FIXTURES.md §A.2). Every write goes through [[Sink]]. Append sinks
-  * are written idempotently ([[Sink.appendNew]]: incoming LEFT ANTI JOIN
-  * sink-on-key, then append), so re-running any window is a no-op, exactly
-  * the reference's insert-if-absent contract (updatescript.py:62,87,166,...).
-  * Singletons (stats, lastUpdated) are replaced whole by a generation swap
-  * ([[Sink.replace]]; Q3: the stats docs are rolling, no history), so a
-  * run killed mid-write leaves the previous watermark readable instead of
-  * restarting from `bootstrapWm`.
+  *  1. reads the watermark;
+  *  2. pins the window (`createdAt > wm`) once: enrichment, routing and
+  *     the new watermark all derive from that one scan;
+  *  3. runs the independent write chains in one [[Overlap.all]], longest
+  *     first: price backfill then enrichment (which reads the price
+  *     sink), the `stats` replace, and the four routed appends (`AUMdata`
+  *     reads its prior stashes inside its own chain);
+  *  4. after every chain has succeeded, replaces `lastUpdated` with the
+  *     window's `max(createdAt)`, the run's last write.
   *
-  * Scale posture: the anti-join keys the sink scan on the join column only
-  * (column pruning); at 100 TB the sinks would be date-partitioned so the
-  * incremental window prunes to the recent partitions. No driver-side data
-  * movement except the watermark scalar.
+  * Crash contract: the first failing chain cancels the others and the
+  * watermark stays, so the next run re-processes the same window. Append
+  * sinks absorb that ([[Sink.appendNew]]: incoming LEFT ANTI JOIN
+  * sink-on-key, the reference's insert-if-absent, updatescript.py:62,87,
+  * 166); singletons are replaced whole by a generation swap
+  * ([[Sink.replace]]; Q3: the stats docs are rolling, no history).
+  * Routing sees the watermark captured at start, as the reference's
+  * step 5 does (Q4).
   */
 object PipelineRunner {
 
@@ -42,58 +45,47 @@ object PipelineRunner {
 
   def run(spark: SparkSession, c: Config): RunReport = {
     val wm = currentWatermark(spark, c)
-
-    // step 1 — price backfill (updatescript.py:27-54): generated day series,
-    // anti-join days already in the sink, fill from the source dim, append.
-    val price = Tables.dailyPrice(spark, c.sfDir)
-    val days = spark.range(2).select(col("id").as("chain")).crossJoin(
-      spark.sql(s"SELECT explode(sequence(to_date('$wm'), to_date('${c.asOfDate}'), interval 1 day)) AS price_date"))
-    val gapPrices = days.join(price, Seq("chain", "price_date"))
-    val priceAppended = Sink.appendNew(gapPrices, sinkPath(c, "priceInUSD"),
-      Seq("chain", "price_date"), None, None)
-
-    // step 2 — tx enrichment (updatescript.py:57-108), dedup by _id;
-    // sink date-partitioned, anti-join pruned to the replayable window.
-    val priceSink = spark.read.parquet(sinkPath(c, "priceInUSD"))
-      .select(col("chain"), col("price_date"), col("price"))
-    val enriched = ReferencePipeline.enrich(Tables.txSince(spark, c.sfDir, wm), priceSink)
+    val batch = Tables.txSince(spark, c.sfDir, wm).localCheckpoint()
     val wmDate = to_date(lit(wm).cast("timestamp"))
-    val txAppended = Sink.appendNew(enriched, sinkPath(c, "transactiondatas"), Seq("_id"),
-      partitionDate = Some(to_date(col("createdAt"))),
-      prune = Some(col("p_date") >= wmDate))
-
-    // step 3 — rolling stats singletons (Q3: replaced, no history).
-    Sink.replace(ReferencePipeline.statsRollup(spark, c.sfDir).coalesce(1), sinkPath(c, "stats"))
-
-    // step 4 — advance the watermark (updatescript.py:149-152). Data-derived:
-    // max processed event time, so reprocessing windows stay contiguous.
-    val batch = Tables.txSince(spark, c.sfDir, wm)
-    val newWm = batch.agg(max(col("createdAt")).cast("string")).head().getString(0)
-    val effectiveWm = Option(newWm).getOrElse(wm)
-    import spark.implicits._
-    Sink.replace(Seq(effectiveWm).toDF("lastUpdated")
-      .select(col("lastUpdated").cast("timestamp")).coalesce(1), sinkPath(c, "lastUpdated"))
-
-    // step 5 — routing (updatescript.py:154-218); runs on the watermark
-    // captured at start (Q4), against current AUM sink state for first-seen.
-    val successful = batch.filter(col("successful"))
-    val priorStashes = Sink.read(spark, sinkPath(c, "AUMdata")).map(_.select("chain", "stashId").distinct())
-    val routed = Map(
-      "nominationsupdateddata" ->
-        Routing.nominationsRows(successful.filter(col("chain") === 0)),
-      "amountstakeddata" ->
-        Routing.amountStakedRows(successful.filter(col("chain") === 0)),
-      "kusamanominationsupdateddata" ->
-        Routing.kusamaNominationsRows(successful.filter(col("chain") === 1)),
-      "AUMdata" -> Routing.aumRows(successful, priorStashes))
-    val routedCounts = routed.map { case (name, df) =>
-      name -> Sink.appendNew(df, sinkPath(c, name), Seq("_id"),
+    // date-partitioned sink, anti-join pruned to the replayable window
+    def appendDated(df: DataFrame, name: String): Map[String, Long] =
+      Map(name -> Sink.appendNew(df, sinkPath(c, name), Seq("_id"),
         partitionDate = Some(to_date(col("createdAt"))),
-        prune = Some(col("p_date") >= wmDate))
+        prune = Some(col("p_date") >= wmDate)))
+    // price backfill (updatescript.py:27-54): day series anti-joined with the
+    // sink, filled from the source dim; then enrichment (:57-108) against it
+    val priceThenEnrich = () => {
+      val days = spark.range(2).select(col("id").as("chain")).crossJoin(
+        spark.sql(s"SELECT explode(sequence(to_date('$wm'), to_date('${c.asOfDate}'), interval 1 day)) AS price_date"))
+      val gapPrices = days.join(Tables.dailyPrice(spark, c.sfDir), Seq("chain", "price_date"))
+      val priceAppended = Sink.appendNew(gapPrices, sinkPath(c, "priceInUSD"),
+        Seq("chain", "price_date"), None, None)
+      val priceSink = spark.read.parquet(sinkPath(c, "priceInUSD"))
+        .select(col("chain"), col("price_date"), col("price"))
+      Map("priceInUSD" -> priceAppended) ++
+        appendDated(ReferencePipeline.enrich(batch, priceSink), "transactiondatas")
     }
-
-    RunReport(
-      routedCounts ++ Map("priceInUSD" -> priceAppended, "transactiondatas" -> txAppended),
-      wm, effectiveWm)
+    val stats = () => { // rolling singletons (Q3: replaced, no history)
+      Sink.replace(ReferencePipeline.statsRollup(spark, c.sfDir).coalesce(1), sinkPath(c, "stats"))
+      Map.empty[String, Long]
+    }
+    // routing (updatescript.py:154-218)
+    val successful = batch.filter(col("successful"))
+    val (dot, ksm) = (successful.filter(col("chain") === 0), successful.filter(col("chain") === 1))
+    val routed = Seq(
+      () => appendDated(Routing.aumRows(successful, Sink.read(spark, sinkPath(c, "AUMdata"))
+        .map(_.select("chain", "stashId").distinct())), "AUMdata"),
+      () => appendDated(Routing.nominationsRows(dot), "nominationsupdateddata"),
+      () => appendDated(Routing.amountStakedRows(dot), "amountstakeddata"),
+      () => appendDated(Routing.kusamaNominationsRows(ksm), "kusamanominationsupdateddata"))
+    val appended =
+      Overlap.all(priceThenEnrich +: stats +: routed, Overlap.DEFAULT_CAP).reduce(_ ++ _)
+    // the watermark last (updatescript.py:149-152): max processed event time
+    val newWm = Option(batch.agg(max(col("createdAt")).cast("string")).head().getString(0))
+      .getOrElse(wm)
+    import spark.implicits._
+    Sink.replace(Seq(newWm).toDF("lastUpdated")
+      .select(col("lastUpdated").cast("timestamp")).coalesce(1), sinkPath(c, "lastUpdated"))
+    RunReport(appended, wm, newWm)
   }
 }

@@ -34,13 +34,19 @@ object Sink {
     * one is [[replace]]'s crash window (live renamed away, staging not
     * yet in): `.old` is restored first, so a reader never restarts from
     * nothing while a complete prior generation sits beside it.
+    * A live dir with no data (only `_*`/`.*` children: a first append
+    * that died before its commit) is no sink, so the next append writes
+    * the whole batch. Not in [[exists]], which guards the heal: a rename
+    * onto a live dir would nest `.old` inside it.
     */
   def read(spark: SparkSession, dir: String): Option[DataFrame] = {
     val found = exists(spark, dir) || {
       val old = dir + ".old"
       exists(spark, old) && fsOf(spark, dir).rename(new Path(old), new Path(dir)) // heal
     }
-    if (found) Some(spark.read.parquet(dir)) else None
+    val hasData = found && fsOf(spark, dir).listStatus(new Path(dir))
+      .exists { f => val n = f.getPath.getName; !n.startsWith("_") && !n.startsWith(".") }
+    if (hasData) Some(spark.read.parquet(dir)) else None
   }
 
   /** Idempotent append: anti-join on `key` against current sink content,

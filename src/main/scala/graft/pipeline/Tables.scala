@@ -66,10 +66,12 @@ object Tables {
     * natively (PARQUET_TYPE_ILLEGAL). Read it as a nanos long and floor-divide
     * to microseconds — exactly DuckDB's ns→us truncation, so both engines see
     * identical timestamps. Integer `div`, not `/`: a double round-trip would
-    * lose precision at 1.7e18 ns.
+    * lose precision at 1.7e18 ns. The conf is session-global, so it is
+    * written only while unset: concurrent readers never write it.
     */
   private def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    if (spark.conf.get(nanosAsLong, "false") != "true") spark.conf.set(nanosAsLong, "true")
     read(spark, sfDir, "events")
   }
 

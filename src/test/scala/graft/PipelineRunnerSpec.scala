@@ -2,7 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.pipeline.{PipelineRunner, Tables}
+import java.util.concurrent.TimeUnit
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
+import graft.pipeline.{PipelineRunner, Sink, Tables}
 
 /** Golden end-to-end: the full 5-step pipeline over sf0.001, run twice
   * (SURVEY.md §5.2 item 5). The second run must append nothing — both via
@@ -49,6 +54,39 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(enrichedRows == SparkEntry.queries("tx_enrich")(spark, "/root/testdata/sf0.001").count())
     val aumRows = spark.read.parquet(s"$sink/AUMdata").count()
     assert(aumRows == SparkEntry.queries("route_aum")(spark, "/root/testdata/sf0.001").count())
+  }
+
+  test("a run that fails while routing keeps its watermark, and the rerun matches a clean run") {
+    val sf = "/root/testdata/sf0.001"
+    val clean = SparkSpec.tempDir("graft-sink-clean").toString
+    PipelineRunner.run(spark, PipelineRunner.Config(sf, clean, Tables.WM, Tables.ASOF_DATE))
+
+    val sink = SparkSpec.tempDir("graft-sink-fail").toString
+    val c = PipelineRunner.Config(sf, sink, Tables.WM, Tables.ASOF_DATE)
+    // a plain file where the AUM sink dir belongs: routing to it throws
+    val blocker = Paths.get(s"$sink/AUMdata")
+    Files.write(blocker, "not parquet".getBytes)
+    intercept[Exception](PipelineRunner.run(spark, c))
+    val deadline = System.nanoTime + TimeUnit.SECONDS.toNanos(15)
+    def active = spark.sparkContext.statusTracker.getActiveJobIds()
+    while (active.nonEmpty && System.nanoTime < deadline) Thread.sleep(50)
+    assert(active.isEmpty, "every job of the failed run has ended")
+    assert(PipelineRunner.currentWatermark(spark, c) == Tables.WM,
+      "the watermark moves only after every sink holds the window")
+
+    Files.delete(blocker)
+    PipelineRunner.run(spark, c)
+    def sameRows(a: DataFrame, b: DataFrame): Boolean = {
+      val bAligned = b.select(a.columns.map(col).toSeq: _*)
+      a.exceptAll(bAligned).isEmpty && bAligned.exceptAll(a).isEmpty
+    }
+    for (name <- Seq("priceInUSD", "transactiondatas", "stats", "lastUpdated", "AUMdata",
+        "nominationsupdateddata", "amountstakeddata", "kusamanominationsupdateddata")) {
+      (Sink.read(spark, s"$clean/$name"), Sink.read(spark, s"$sink/$name")) match {
+        case (Some(want), Some(got)) => assert(sameRows(want, got), name)
+        case (want, got) => assert(want.isEmpty && got.isEmpty, name)
+      }
+    }
   }
 
   test("a run killed inside the watermark swap resumes from its own watermark") {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -37,6 +37,15 @@ class StreamingSinkSpec extends SparkSpec {
     q.processAllAvailable(); q.stop()
     val got = spark.read.parquet(sink).select("_id").as[Long].collect().sorted
     assert(got.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("a sink dir holding only a cancelled first append's debris reads as no sink") {
+    val sink = s"${SparkSpec.tempDir("graft-debris-sink")}/out"
+    Files.createDirectories(Paths.get(sink, "_temporary", "0"))
+    val rows = Seq((1L, "a"), (2L, "b"), (3L, "c"))
+    assert(Sink.appendNew(rows.toDF("_id", "v"), sink, Seq("_id"), None, None) == 3)
+    assert(Sink.read(spark, sink).get.select("_id", "v").as[(Long, String)]
+      .collect().sorted.toSeq == rows)
   }
 
   test("mergeByKey generation swap: merge, last-write-wins, crash-window heal") {
