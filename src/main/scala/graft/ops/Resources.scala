@@ -99,9 +99,11 @@ object Resources {
       .orElse(Option(System.getProperty("java.io.tmpdir")))
       .getOrElse("/tmp")
       .split(",").map(_.trim).filter(_.nonEmpty).distinct
-    val usable = dirs.map(d => new java.io.File(d).getUsableSpace).sum
-    if (usable > 0L) usable else SCRATCH_BUDGET_BOX
+    scratchDefault(dirs.map(d => new java.io.File(d).getUsableSpace).sum)
   }
+
+  /** The scratch default for `usable` bytes across the spill dirs. */
+  def scratchDefault(usable: Long): Long = if (usable > 0L) usable else SCRATCH_BUDGET_BOX
 
   def payloadBudget(spark: SparkSession): Long =
     confBytes(spark, "spark.graft.payloadBudgetBytes", derivedPayloadDefault)

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.Overlap
 
@@ -11,13 +12,14 @@ import graft.ops.Overlap
   *
   *  1. reads the watermark;
   *  2. pins the window (`createdAt > wm`) once: enrichment, routing and
-  *     the new watermark all derive from that one scan;
+  *     the new watermark all derive from that one scan, the watermark as
+  *     `max(createdAt)` observed while the pin materializes;
   *  3. runs the independent write chains in one [[Overlap.all]], longest
   *     first: price backfill then enrichment (which reads the price
   *     sink), the `stats` replace, and the four routed appends (`AUMdata`
   *     reads its prior stashes inside its own chain);
   *  4. after every chain has succeeded, replaces `lastUpdated` with the
-  *     window's `max(createdAt)`, the run's last write.
+  *     observed `max(createdAt)`, the run's last write.
   *
   * Crash contract: the first failing chain cancels the others and the
   * watermark stays, so the next run re-processes the same window. Append
@@ -39,13 +41,15 @@ object PipelineRunner {
   private def sinkPath(c: Config, name: String) = s"${c.sinkDir}/$name"
 
   def currentWatermark(spark: SparkSession, c: Config): String =
-    Sink.read(spark, sinkPath(c, "lastUpdated"))
+    Sink.read(spark, sinkPath(c, "lastUpdated"), Some(StructType.fromDDL("lastUpdated TIMESTAMP")))
       .map(_.select(col("lastUpdated").cast("string")).head().getString(0))
       .getOrElse(c.bootstrapWm)
 
   def run(spark: SparkSession, c: Config): RunReport = {
     val wm = currentWatermark(spark, c)
-    val batch = Tables.txSince(spark, c.sfDir, wm).localCheckpoint()
+    val seen = Observation()
+    val batch = Tables.txSince(spark, c.sfDir, wm)
+      .observe(seen, max(col("createdAt")).cast("string").as("wm")).localCheckpoint()
     val wmDate = to_date(lit(wm).cast("timestamp"))
     // date-partitioned sink, anti-join pruned to the replayable window
     def appendDated(df: DataFrame, name: String): Map[String, Long] =
@@ -60,8 +64,8 @@ object PipelineRunner {
       val gapPrices = days.join(Tables.dailyPrice(spark, c.sfDir), Seq("chain", "price_date"))
       val priceAppended = Sink.appendNew(gapPrices, sinkPath(c, "priceInUSD"),
         Seq("chain", "price_date"), None, None)
-      val priceSink = spark.read.parquet(sinkPath(c, "priceInUSD"))
-        .select(col("chain"), col("price_date"), col("price"))
+      val priceSink = spark.read.schema(StructType(Seq("chain", "price_date", "price")
+        .map(gapPrices.schema(_)))).parquet(sinkPath(c, "priceInUSD"))
       Map("priceInUSD" -> priceAppended) ++
         appendDated(ReferencePipeline.enrich(batch, priceSink), "transactiondatas")
     }
@@ -73,16 +77,17 @@ object PipelineRunner {
     val successful = batch.filter(col("successful"))
     val (dot, ksm) = (successful.filter(col("chain") === 0), successful.filter(col("chain") === 1))
     val routed = Seq(
-      () => appendDated(Routing.aumRows(successful, Sink.read(spark, sinkPath(c, "AUMdata"))
+      () => appendDated(Routing.aumRows(successful, Sink.read(spark, sinkPath(c, "AUMdata"),
+          Some(StructType(Seq("chain", "stashId").map(successful.schema(_)))))
         .map(_.select("chain", "stashId").distinct())), "AUMdata"),
       () => appendDated(Routing.nominationsRows(dot), "nominationsupdateddata"),
       () => appendDated(Routing.amountStakedRows(dot), "amountstakeddata"),
       () => appendDated(Routing.kusamaNominationsRows(ksm), "kusamanominationsupdateddata"))
     val appended =
       Overlap.all(priceThenEnrich +: stats +: routed, Overlap.DEFAULT_CAP).reduce(_ ++ _)
-    // the watermark last (updatescript.py:149-152): max processed event time
-    val newWm = Option(batch.agg(max(col("createdAt")).cast("string")).head().getString(0))
-      .getOrElse(wm)
+    // the watermark last (updatescript.py:149-152): max processed event time,
+    // observed by the eager pin above, so `get` (unbounded wait) returns at once
+    val newWm = Option(seen.get("wm")).fold(wm)(_.toString)
     import spark.implicits._
     Sink.replace(Seq(newWm).toDF("lastUpdated")
       .select(col("lastUpdated").cast("timestamp")).coalesce(1), sinkPath(c, "lastUpdated"))

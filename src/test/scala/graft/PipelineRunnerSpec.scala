@@ -27,6 +27,9 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(r1.appended("priceInUSD") > 0)
     assert(r1.watermark == "2024-01-10 00:00:00")
     assert(r1.newWatermark > r1.watermark)
+    for (name <- Seq("priceInUSD", "transactiondatas", "AUMdata", "nominationsupdateddata",
+        "amountstakeddata", "kusamanominationsupdateddata"))
+      assert(r1.appended(name) == Sink.read(spark, s"$sink/$name", None).fold(0L)(_.count()), name)
 
     // second run: watermark advanced past all data -> empty batch
     val r2 = PipelineRunner.run(spark, c)
@@ -82,7 +85,7 @@ class PipelineRunnerSpec extends SparkSpec {
     }
     for (name <- Seq("priceInUSD", "transactiondatas", "stats", "lastUpdated", "AUMdata",
         "nominationsupdateddata", "amountstakeddata", "kusamanominationsupdateddata")) {
-      (Sink.read(spark, s"$clean/$name"), Sink.read(spark, s"$sink/$name")) match {
+      (Sink.read(spark, s"$clean/$name", None), Sink.read(spark, s"$sink/$name", None)) match {
         case (Some(want), Some(got)) => assert(sameRows(want, got), name)
         case (want, got) => assert(want.isEmpty && got.isEmpty, name)
       }

@@ -2,10 +2,16 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.{Semaphore, TimeUnit}
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{lit, raise_error, when}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.{lit, raise_error, to_date, when}
 
 import graft.pipeline.Sink
 import graft.streaming.StreamingPipeline
@@ -44,8 +50,60 @@ class StreamingSinkSpec extends SparkSpec {
     Files.createDirectories(Paths.get(sink, "_temporary", "0"))
     val rows = Seq((1L, "a"), (2L, "b"), (3L, "c"))
     assert(Sink.appendNew(rows.toDF("_id", "v"), sink, Seq("_id"), None, None) == 3)
-    assert(Sink.read(spark, sink).get.select("_id", "v").as[(Long, String)]
+    assert(Sink.read(spark, sink, None).get.select("_id", "v").as[(Long, String)]
       .collect().sorted.toSeq == rows)
+  }
+
+  test("an append into a dated sink runs no inference, listing or count job, and returns what the sink gained") {
+    val sink = s"${SparkSpec.tempDir("graft-append-jobs")}/out"
+    def rows(ids: Long*) = ids.map(i => (i, ts(s"2024-01-1${1 + i % 3} 01:00:00"))).toDF("_id", "createdAt")
+    def append(df: DataFrame) = Sink.appendNew(df, sink, Seq("_id"),
+      Some(to_date($"createdAt")), Some($"p_date" >= lit("2024-01-11").cast("date")))
+    append(rows(1L, 2L, 3L, 4L))
+    val before = spark.read.parquet(sink).count()
+    // the listener bus delivers in order: once it sees the fence job, it
+    // has seen every event the append posted
+    val fence = "StreamingSinkSpec fence"
+    val fenced = new Semaphore(0)
+    val outside = ArrayBuffer[String]() // jobs outside any SQL execution
+    val counts = ArrayBuffer[String]() // `count` executions
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val site = j.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?")
+        if (site == fence) fenced.release()
+        else if (j.properties.getProperty(SQLExecution.EXECUTION_ID_KEY) == null) outside += site
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.description.startsWith("count at") =>
+          counts += x.description
+        case _ =>
+      }
+    }
+    def drain(): Unit = {
+      spark.sparkContext.setCallSite(fence)
+      try spark.sparkContext.parallelize(Seq(0), 1).count() finally spark.sparkContext.clearCallSite()
+      assert(fenced.tryAcquire(2, TimeUnit.MINUTES), "the listener never saw the fence job")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val n = try {
+      drain(); outside.clear(); counts.clear()
+      val n = append(rows(3L, 4L, 5L, 6L, 7L))
+      drain()
+      n
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(outside.isEmpty, s"jobs outside a SQL execution (inference, listing): $outside")
+    assert(counts.isEmpty, s"count executions: $counts")
+    assert(n == spark.read.parquet(sink).count() - before, "the return value is what the sink gained")
+    assert(n == 3L)
+  }
+
+  test("an append into a sink whose files lack a key column fails, naming the column") {
+    val sink = s"${SparkSpec.tempDir("graft-drift-sink")}/out"
+    Seq((1L, "a"), (2L, "b")).toDF("other", "v").write.parquet(sink)
+    val e = intercept[Exception](Sink.appendNew(Seq((1L, "a"), (3L, "c")).toDF("event_key", "v"),
+      sink, Seq("event_key"), None, None))
+    assert(e.getMessage.contains("event_key"), e.getMessage)
+    assert(spark.read.parquet(sink).count() == 2L, "nothing was appended")
   }
 
   test("mergeByKey generation swap: merge, last-write-wins, crash-window heal") {

@@ -1622,17 +1622,10 @@ class TextMultimodalSpec extends SparkSpec {
     val heap = Runtime.getRuntime.maxMemory
     assume(heap > 0 && heap < Long.MaxValue, "JVM reports no max heap")
     assert(Resources.derivedPayloadDefault == heap + Resources.CACHE_HEADROOM_BYTES)
-    // the dirs the derivation reads: spark.local.dir, else java.io.tmpdir
-    val dirs = spark.conf.getOption("spark.local.dir")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-      .split(",").map(_.trim).filter(_.nonEmpty).distinct
-    def usable: Long = dirs.map(d => new java.io.File(d).getUsableSpace).sum
-    // free space can move while the derivation reads it; bracket the read
-    val before = usable
-    val derived = Resources.derivedScratchDefault(spark)
-    val after = usable
-    assert(derived >= math.min(before, after) && derived <= math.max(before, after),
-      s"derived scratch $derived outside the dirs' usable space [$before, $after]")
+    // the scratch default is the dirs' usable space, the box figure when they report none
+    assert(Resources.scratchDefault(0L) == Resources.SCRATCH_BUDGET_BOX)
+    assert(Resources.scratchDefault(1L) == 1L)
+    assert(Resources.scratchDefault(5_000_000_000_000L) == 5_000_000_000_000L)
     // a deployment's configured budgets replace the derived defaults
     assert(Resources.payloadBudget(spark) == Resources.derivedPayloadDefault)
     try {
